@@ -4,14 +4,17 @@ One function, `load(spark, sf_dir, name)`, is the single scan entry point
 for every query in the engine — so scan-side concerns (the nanos timestamp
 conversion, schema assertions, column pruning hygiene) live in exactly one
 place. Loading is lazy; Catalyst still sees the parquet scan and pushes
-filters/projection into it.
+filters/projection into it, and a load of an already-seen file starts no
+Spark job (its physical schema is reused, see `_physical_schema`).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from .session import configure
@@ -38,7 +41,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; registered: {TABLE_NAMES}")
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _physical_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -46,6 +52,58 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# Physical (on-disk) schema per (applicationId, path, fingerprint). Spark's
+# parquet schema inference is a Spark job (a footer-merge stage) on every
+# `spark.read.parquet`; reading with the schema it inferred before starts
+# none. The fingerprint makes a file rewritten in place be inferred again;
+# the applicationId keeps a dead session's entries from being served. The
+# memo is the inferred schema, NOT the registry's: on disk the testdata
+# timestamps are timestamp_ntz where TESTDATA_SCHEMAS says timestamp, and
+# `load` normalizes events.ts from whatever is physically there.
+_SCHEMAS: dict[tuple[str, str, tuple[int, int, int]], StructType] = {}
+
+
+def _fingerprint(path: str) -> tuple[int, int, int] | None:
+    """(files, bytes, newest mtime_ns) of a local parquet file or
+    directory, or None when `path` is not a readable local path (a URI,
+    or a missing table — Spark then infers and raises its own error)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (1, st.st_size, st.st_mtime_ns)
+        n = size = newest = 0
+        for root, _, files in os.walk(path):
+            for f in files:
+                fst = os.stat(os.path.join(root, f))
+                n, size = n + 1, size + fst.st_size
+                newest = max(newest, fst.st_mtime_ns)
+        return (n, size, newest)
+    except OSError:
+        return None
+
+
+def _physical_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark infers for `path`, inferred once per session and
+    file fingerprint; None when the path cannot be fingerprinted.
+
+    Unlocked like the training memos: two threads missing together both
+    infer (the same schema), never crash — the eviction sweep iterates a
+    key snapshot and tolerates a concurrent pop."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return None
+    app = spark.sparkContext.applicationId
+    key = (app, path, fp)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        for k in list(_SCHEMAS):  # other sessions, older fingerprints
+            if k[0] != app or k[1] == path:
+                _SCHEMAS.pop(k, None)
+        _SCHEMAS[key] = schema
+    return schema
 
 
 # Keyed by (applicationId, sf_dir, name): a DataFrame handle is bound to
@@ -105,15 +163,14 @@ def uncache_all() -> None:
 
 
 def shuffle_width(spark: SparkSession) -> int:
-    """The session's configured shuffle width, safely parsed (ADVICE
-    r12): the raw conf read was duplicated at three sites and would
-    raise ValueError if a deployment ever sets the conf to a
-    non-numeric value (e.g. 'auto' under some managed runtimes). One
-    helper, one fallback (the engine's local default of 32)."""
+    """The session's configured shuffle width, safely parsed: a
+    deployment may set the conf to a non-numeric value (e.g. 'auto'
+    under some managed runtimes), and then the width falls back to the
+    context's default parallelism (the core count of a local master)."""
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
-        return 32
+        return spark.sparkContext.defaultParallelism
 
 
 def widen_scan(df: DataFrame, key: str) -> DataFrame:

@@ -3,21 +3,24 @@
 Several deterministic driver-side training results are memoized per
 (applicationId, ...) — k-means centroids and PQ codebooks
 (`operators/similarity.py`), BPE merge lists (`operators/textprep.py`),
-converged dedup-cluster frames (`operators/graph.py`), and the cached
-scan handles (`datasets.py`). The applicationId key guarantees a NEW
-session never sees a dead session's JVM-bound objects, but by itself it
-only ORPHANS the old entries (ADVICE r5): a long-lived process cycling
-SparkSessions would accumulate DataFrames pinned to stopped
-SparkContexts. Every memo therefore calls :func:`evict_stale` on a
-cache miss, dropping all entries whose applicationId differs from the
-live one — the dict holds at most one session's worth of state.
+converged dedup-cluster frames (`operators/graph.py`), the cached scan
+handles and the physical table schemas (`datasets.py`). The
+applicationId key guarantees a NEW session never sees a dead session's
+JVM-bound objects, but by itself it only ORPHANS the old entries
+(ADVICE r5): a long-lived process cycling SparkSessions would
+accumulate DataFrames pinned to stopped SparkContexts. Every memo
+therefore drops, on a cache miss, all entries whose applicationId
+differs from the live one (:func:`evict_stale`) — the dict holds at
+most one session's worth of state.
 
-Known caveat (documented, deliberate): WITHIN one session the memos
-serve the result computed from the parquet under ``sf_dir`` at first
-call — if the files are rewritten in place mid-session, the memo is
-stale until the session (or applicationId) changes. The engine's query
-surface treats sf_dir datasets as immutable snapshots; mutating sinks
-write elsewhere.
+Known caveat (documented, deliberate): WITHIN one session the training
+and cluster memos serve the result computed from the parquet under
+``sf_dir`` at first call — if the files are rewritten in place
+mid-session, those memos are stale until the session (or applicationId)
+changes. The engine's query surface treats sf_dir datasets as immutable
+snapshots; mutating sinks write elsewhere. The schema memo behind
+``datasets.load`` does not share the caveat: its key carries each
+file's size and mtime, so a rewritten file is inferred again.
 """
 
 from __future__ import annotations

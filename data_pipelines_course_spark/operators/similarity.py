@@ -73,7 +73,7 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
     """The empty result every ANN serving path degrades to when the
     probe vector is absent (zero-row corpus — an incremental pipeline's
     first run) or direction-less (zero norm). Shared so all four paths
-    keep an identical schema (matches knn_brute_force's guard)."""
+    keep an identical schema (knn_brute_force's empty answer)."""
     return spark.createDataFrame(
         [], "vec_id bigint, label int, cos_sim double")
 
@@ -106,7 +106,8 @@ def _duck_cos(a: str, b: str) -> str:
 
 # --------------------------------------------------------------------------
 # Brute-force top-k cosine to a fixed query vector. The probe embedding is
-# fetched driver-side (single-row lookup) and inlined as a literal array —
+# a broadcast one-row side of a cross join (the oracle's `FROM embeddings
+# e, q`) — computed inside the plan, so construction starts no Spark job;
 # on a cluster this is a broadcast of 64 floats, the scan stays one pass.
 # --------------------------------------------------------------------------
 
@@ -125,16 +126,12 @@ def _duck_cos(a: str, b: str) -> str:
 )
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    qrow = (emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-            .select("embedding").head())
-    if qrow is None:  # probe vector absent: no neighbors, like the oracle
-        return spark.createDataFrame(
-            [], "vec_id bigint, label int, cos_sim double")
-    qvec = qrow[0]
-    q = F.array(*[F.lit(float(v)).cast("float") for v in qvec])
+    # An absent probe leaves q empty: no neighbors, like the oracle.
+    q = (emb.filter(F.col("vec_id") == QUERY_VEC_ID)
+         .select(F.col("embedding").alias("qv")))
     scored = (emb.filter(F.col("vec_id") != QUERY_VEC_ID)
               .filter(norm("embedding") > 0)  # zero vectors: no direction
-              .withColumn("qv", q)
+              .crossJoin(F.broadcast(q))
               .select("vec_id", "label",
                       (fround(cosine("embedding", "qv"), 6) + F.lit(0.0)).alias("cos_sim")))
     return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(TOP_K)
@@ -254,6 +251,24 @@ def lsh_bucket_cols(n_tables: int = N_TABLES,
     return cols
 
 
+def lsh_buckets(n_tables: int = N_TABLES,
+                planes_per_table: int = PLANES_PER_TABLE) -> Column:
+    """The `buckets` index column: `lsh_bucket_cols` as one array, its
+    (n_tables, planes_per_table) recorded in the column metadata so a
+    prebuilt index states the parameters it was built with."""
+    return F.array(*lsh_bucket_cols(n_tables, planes_per_table)).alias(
+        "buckets", metadata={"n_tables": n_tables,
+                             "planes_per_table": planes_per_table})
+
+
+def _lsh_params(emb_b: DataFrame) -> tuple[int, int]:
+    """(n_tables, planes_per_table) of a bucket index; an index without
+    the metadata is taken to use the registered parameters."""
+    meta = emb_b.schema["buckets"].metadata
+    return (meta.get("n_tables", N_TABLES),
+            meta.get("planes_per_table", PLANES_PER_TABLE))
+
+
 # Session-scoped LSH bucket-index memo (r13, VERDICT r12 #3): both
 # ann_lsh_topk and ann_batch_topk serve from the SAME (vec_id, label,
 # embedding, buckets) table built with the registered LSH parameters,
@@ -275,7 +290,7 @@ def _bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hit
     evict_stale(_BUCKET_MEMO, key[0])
     idx = stage(widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
-                .withColumn("buckets", F.array(*lsh_bucket_cols())))
+                .withColumn("buckets", lsh_buckets()))
     _BUCKET_MEMO[key] = idx
     return idx
 
@@ -391,19 +406,22 @@ def lsh_batch_topk(emb: DataFrame, probes: DataFrame,
     narrower than both the scored rows and the index rows — and at
     scale it stands where the join-back's own vec_id shuffle would be;
     the per-probe window exchange still carries scored rows only."""
-    if emb_b is not None and not (n_tables is None
-                                  and planes_per_table is None):
-        # ADVICE r12: a prebuilt index carries its own LSH parameters —
-        # silently computing-and-ignoring an override here would serve
-        # buckets built with the index's original params.
-        raise ValueError(
-            "emb_b is prebuilt; n_tables/planes_per_table overrides "
-            "would be ignored — pass one or the other")
-    L = N_TABLES if n_tables is None else n_tables
-    p = PLANES_PER_TABLE if planes_per_table is None else planes_per_table
     if emb_b is None:
-        emb_b = emb.withColumn("buckets",
-                               F.array(*lsh_bucket_cols(L, p)))
+        emb_b = emb.withColumn("buckets", lsh_buckets(
+            N_TABLES if n_tables is None else n_tables,
+            PLANES_PER_TABLE if planes_per_table is None
+            else planes_per_table))
+    else:
+        # A prebuilt index carries its own LSH parameters: an override
+        # that differs from them would be silently ignored, so it raises;
+        # one that equals them is harmless.
+        built = _lsh_params(emb_b)
+        asked = (built[0] if n_tables is None else n_tables,
+                 built[1] if planes_per_table is None else planes_per_table)
+        if asked != built:
+            raise ValueError(
+                f"emb_b was built with (n_tables, planes_per_table)="
+                f"{built}; the override {asked} would be ignored")
     probe_b = (emb_b.join(F.broadcast(probes),
                           emb_b.vec_id == probes.probe_id)
                .select("probe_id",

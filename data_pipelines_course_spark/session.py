@@ -16,6 +16,7 @@ uses runtime-settable SQL confs.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -75,23 +76,33 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _local_cores(master: str) -> int | None:
+    """The core count N of a local master (`local[N]`, `local[N,F]`,
+    `local[*]`, `local`), or None for any other master."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\s*\d+)?\])?", master.strip())
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return len(os.sched_getaffinity(0)) if n == "*" else int(n)
+
+
 def get_spark(app_name: str = "data-pipelines-course-spark",
               master: str | None = None) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    local[N] for tests; on a real cluster the master/resource settings come
-    from spark-submit and only the SQL confs below matter.
+    local[N] for tests, N defaulting to the usable core count; on a real
+    cluster the master/resource settings come from spark-submit and only
+    the SQL confs below matter.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0))))
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Sized for local[32] test runs; a production deployment overrides
-        # via spark-submit. AQE coalesces down when partitions run small.
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Keep partition sizing explicit: ~128 MB split targets so a 100 TB
@@ -103,6 +114,13 @@ def get_spark(app_name: str = "data-pipelines-course-spark",
         # parsed JSON lines and the \r-rewritten bars corrupt tail capture.
         .config("spark.ui.showConsoleProgress", "false")
     )
+    # Shuffle width: one task per local core — wider stages over small
+    # inputs only add per-task fixed cost, and AQE coalesces further when
+    # partitions run small. A cluster master keeps the deployment's value;
+    # SPARK_SHUFFLE_PARTITIONS overrides either.
+    width = os.environ.get("SPARK_SHUFFLE_PARTITIONS") or _local_cores(master)
+    if width is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(width))
     for key, value in _runtime_conf().items():
         builder = builder.config(key, value)
     return configure(builder.getOrCreate())

@@ -179,7 +179,8 @@ def main() -> int:
     # Vanilla session, as the driver builds it: master + shuffle partitions
     # only. Everything else the engine needs must be self-applied by the
     # queries (session.configure at each entry point).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     # SPARK_GRAFT_SIM_SHUFFLE != 32 doubles as a broad partition-count-
     # invariance sweep: every hash must be identical at any parallelism.
     # SPARK_GRAFT_SIM_ANSI=false sweeps the other value of Spark 4's

@@ -18,6 +18,45 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
+_MARKER_DESELECTED = "_marker_deselected_slow"
+
+
+def pytest_deselected(items):
+    config = items[0].config if items else None
+    if config is not None and "slow" in (config.option.markexpr or ""):
+        slow = [i for i in items if i.get_closest_marker("slow")]
+        config.stash.setdefault(_MARKER_DESELECTED, []).extend(slow)
+
+
+def pytest_collection_finish(session):
+    """Fail loudly when the marker filter (pytest.ini's `-m "not slow"`)
+    deselects every test under a path or node id named on the command
+    line — otherwise `pytest tests/test_x.py::test_slow` exits green
+    having run nothing."""
+    import os
+
+    config = session.config
+    dropped = config.stash.get(_MARKER_DESELECTED, [])
+    if not dropped:
+        return
+
+    def under(nodeid: str, prefix: str) -> bool:
+        return (prefix == "." or nodeid == prefix
+                or nodeid.startswith((prefix + "::", prefix + "/",
+                                      prefix + "[")))
+
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        prefix = os.path.relpath(os.path.abspath(path), config.rootpath)
+        prefix = prefix.replace(os.sep, "/") + sep + rest
+        named = [i for i in dropped if under(i.nodeid, prefix)]
+        if named and not any(under(i.nodeid, prefix) for i in session.items):
+            raise pytest.UsageError(
+                f"{arg}: the {len(named)} test(s) it names are marked slow "
+                f"and deselected by -m {config.option.markexpr!r}; "
+                f"rerun with -m \"slow or not slow\"")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="engine-tests", master="local[8]")
@@ -237,6 +276,22 @@ def assert_frames_match(spark_df, duck_rel, name: str = "query") -> None:
                 f"{name}: value mismatch in column {c!r} at sorted row {i}: "
                 f"spark={a[i]!r} duckdb={b[i]!r} "
                 f"(total {int(bad.sum())} mismatched rows)")
+
+
+def count_jobs(spark, build):
+    """(build(), number of Spark jobs it started), counted through a job
+    group after the listener bus has recorded every job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def hamming(a: int, b: int) -> int:

@@ -73,3 +73,74 @@ def test_memo_eviction_drops_stale_session_entries(spark):
         assert ("application_0000_dead", sf_dir, "region") not in D._CACHED
         assert (app, sf_dir, "nation") in D._CACHED
     D.uncache_table(spark, sf_dir, "nation")
+
+
+def test_second_load_of_unchanged_file_starts_no_job(spark):
+    """The physical schema is inferred once per session and file
+    fingerprint: a later load of the same file reads with it, so it
+    starts no Spark job (inference is a footer-merge job per read)."""
+    from tests.conftest import SF_DIR, count_jobs
+
+    load(spark, SF_DIR, "orders")
+    df, jobs = count_jobs(spark, lambda: load(spark, SF_DIR, "orders"))
+    assert jobs == 0
+    assert [f.name for f in df.schema] == [
+        f.name for f in spark.read.parquet(f"{SF_DIR}/orders.parquet").schema]
+
+
+def test_load_after_rewrite_returns_new_schema(spark, tmp_path):
+    """A table rewritten in place changes its fingerprint, so the next
+    load infers again instead of serving the old schema."""
+    src = str(tmp_path / "sfREWRITE")
+    path = f"{src}/region.parquet"
+    spark.createDataFrame([(0, "AFRICA", "x")],
+                          "r_regionkey long, r_name string, r_comment string"
+                          ).write.parquet(path)
+    assert load(spark, src, "region").dtypes == [
+        ("r_regionkey", "bigint"), ("r_name", "string"),
+        ("r_comment", "string")]
+    spark.createDataFrame([(0, "AFRICA", "x", 1.5)],
+                          "r_regionkey int, r_name string, r_comment string,"
+                          " r_extra double").write.mode("overwrite").parquet(path)
+    df = load(spark, src, "region")
+    assert df.dtypes == [("r_regionkey", "int"), ("r_name", "string"),
+                         ("r_comment", "string"), ("r_extra", "double")]
+    assert df.collect()[0]["r_extra"] == 1.5
+
+
+def test_get_spark_shuffle_width_follows_local_master():
+    """get_spark sizes the shuffle width to local[N]'s N unless
+    SPARK_SHUFFLE_PARTITIONS is set; shuffle_width reads it back. Run in
+    a fresh interpreter: the suite's own session would be reused."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from data_pipelines_course_spark.session import get_spark\n"
+        "from data_pipelines_course_spark.datasets import shuffle_width\n"
+        "for env in (None, '5'):\n"
+        "    if env:\n"
+        "        os.environ['SPARK_SHUFFLE_PARTITIONS'] = env\n"
+        "    s = get_spark(master='local[3]')\n"
+        "    print('WIDTH', s.conf.get('spark.sql.shuffle.partitions'),"
+        " shuffle_width(s))\n"
+        "    s.stop()\n")
+    env = {k: v for k, v in os.environ.items()
+           if k != "SPARK_SHUFFLE_PARTITIONS"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=300)
+    widths = [ln for ln in out.stdout.splitlines() if ln.startswith("WIDTH")]
+    assert widths == ["WIDTH 3 3", "WIDTH 5 5"], out.stderr[-2000:]
+
+
+def test_local_cores_parses_local_masters():
+    from data_pipelines_course_spark.session import _local_cores
+
+    assert _local_cores("local[3]") == 3
+    assert _local_cores("local[2, 4]") == 2
+    assert _local_cores("local") == 1
+    assert _local_cores("local[*]") == len(os.sched_getaffinity(0))
+    assert _local_cores("spark://host:7077") is None
+    assert _local_cores("local-cluster[2,1,1024]") is None

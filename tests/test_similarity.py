@@ -4,6 +4,8 @@ brute-force ranking — the check the rows-only driver gate can't do."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_pipelines_course_spark.queries import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -176,3 +178,80 @@ def test_py_cos_zero_norm_sorts_below_every_real_centroid():
     cents = [[0.0, 0.0], [-0.6, -0.8]]
     ranked = sorted(range(2), key=lambda c: -_py_cos([1.0, 0.0], cents[c]))
     assert ranked[0] == 1
+
+
+# ---------------------------------------------------------------------------
+# knn_brute_force: the probe is computed inside the plan
+# ---------------------------------------------------------------------------
+
+def test_knn_brute_force_builds_without_jobs_and_matches_oracle(spark, duck):
+    from data_pipelines_course_spark.queries import all_oracles
+
+    from .conftest import assert_frames_match, count_jobs
+
+    knn = all_queries()["knn_brute_force"]
+    knn(spark, SF_DIR)  # first load of the file infers its schema
+    df, jobs = count_jobs(spark, lambda: knn(spark, SF_DIR))
+    assert jobs == 0
+    assert_frames_match(df, duck.sql(all_oracles()["knn_brute_force"]),
+                        "knn_brute_force")
+
+
+def test_knn_brute_force_absent_probe_returns_no_rows(spark, tmp_path):
+    from pyspark.sql import functions as F
+    from data_pipelines_course_spark import datasets
+    from data_pipelines_course_spark.operators.similarity import QUERY_VEC_ID
+
+    src = str(tmp_path / "sfNOPROBE")
+    (datasets.load(spark, SF_DIR, "embeddings")
+     .filter(F.col("vec_id") != QUERY_VEC_ID)
+     .write.parquet(f"{src}/embeddings.parquet"))
+    df = all_queries()["knn_brute_force"](spark, src)
+    assert df.dtypes == [("vec_id", "bigint"), ("label", "int"),
+                         ("cos_sim", "double")]
+    assert df.collect() == []
+
+
+# ---------------------------------------------------------------------------
+# lsh_batch_topk over a prebuilt index: overrides must match its parameters
+# ---------------------------------------------------------------------------
+
+def _probe0(spark):
+    from pyspark.sql import functions as F
+    from data_pipelines_course_spark.operators import similarity as sim
+
+    return (sim._bucket_index(spark, SF_DIR)
+            .filter(F.col("vec_id") == sim.QUERY_VEC_ID)
+            .select(F.col("vec_id").alias("probe_id"),
+                    F.col("embedding").alias("pv")))
+
+
+def test_lsh_batch_topk_accepts_overrides_equal_to_prebuilt_index(spark):
+    from data_pipelines_course_spark.operators import similarity as sim
+
+    idx = sim._bucket_index(spark, SF_DIR)
+    emb = idx.drop("buckets")
+    probes = _probe0(spark)
+    want = sorted(sim.lsh_batch_topk(emb, probes, emb_b=idx).collect())
+    got = sorted(sim.lsh_batch_topk(
+        emb, probes, n_tables=sim.N_TABLES,
+        planes_per_table=sim.PLANES_PER_TABLE, emb_b=idx).collect())
+    assert got == want and len(got) == sim.TOP_K
+
+
+def test_lsh_batch_topk_rejects_overrides_differing_from_prebuilt_index(spark):
+    from data_pipelines_course_spark.operators import similarity as sim
+
+    idx = sim._bucket_index(spark, SF_DIR)
+    emb, probes = idx.drop("buckets"), _probe0(spark)
+    with pytest.raises(ValueError, match="would be ignored"):
+        sim.lsh_batch_topk(emb, probes, n_tables=8, emb_b=idx)
+    with pytest.raises(ValueError, match="would be ignored"):
+        sim.lsh_batch_topk(emb, probes, planes_per_table=6, emb_b=idx)
+    # An index built with other parameters states them in its metadata.
+    other = emb.withColumn("buckets", sim.lsh_buckets(8, 6))
+    assert sim._lsh_params(other) == (8, 6)
+    sim.lsh_batch_topk(emb, probes, n_tables=8, planes_per_table=6,
+                       emb_b=other)
+    with pytest.raises(ValueError, match="would be ignored"):
+        sim.lsh_batch_topk(emb, probes, emb_b=other, n_tables=16)
