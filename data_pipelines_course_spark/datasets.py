@@ -5,20 +5,22 @@ for every query in the engine — so scan-side concerns (the nanos timestamp
 conversion, schema assertions, column pruning hygiene) live in exactly one
 place. Loading is lazy; Catalyst still sees the parquet scan and pushes
 filters/projection into it, and a load of an already-seen file starts no
-Spark job (its physical schema is reused, see `_physical_schema`).
+Spark job (its physical schema is reused through `session_cache`).
 """
 
 from __future__ import annotations
 
 import os
 import stat
+import threading
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
 
 from .schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from .session import configure
-from .memo import evict_stale
+
+T = TypeVar("T")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -42,9 +44,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; registered: {TABLE_NAMES}")
     configure(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _physical_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
+    # The physical schema, not the registry's: on disk the testdata
+    # timestamps are timestamp_ntz where TESTDATA_SCHEMAS says timestamp.
+    # Inference is a Spark job per read; reading with a known schema
+    # starts none.
+    schema = session_cache(spark, sf_dir, (name,), ("schema", name),
+                           lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -54,15 +60,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Physical (on-disk) schema per (applicationId, path, fingerprint). Spark's
-# parquet schema inference is a Spark job (a footer-merge stage) on every
-# `spark.read.parquet`; reading with the schema it inferred before starts
-# none. The fingerprint makes a file rewritten in place be inferred again;
-# the applicationId keeps a dead session's entries from being served. The
-# memo is the inferred schema, NOT the registry's: on disk the testdata
-# timestamps are timestamp_ntz where TESTDATA_SCHEMAS says timestamp, and
-# `load` normalizes events.ts from whatever is physically there.
-_SCHEMAS: dict[tuple[str, str, tuple[int, int, int]], StructType] = {}
+# Every session-scoped reuse in the engine (table schemas, trained
+# quantizers and merge lists, converged cluster frames, staged indexes):
+# (applicationId, sf_dir, key) -> (fingerprint of the tables the value
+# was built from, value). The applicationId keeps a dead session's
+# JVM-bound handles from being served; the fingerprint makes a table
+# rewritten in place a miss.
+_SESSION_CACHE: dict[tuple, tuple] = {}
+_SESSION_LOCK = threading.Lock()
 
 
 def _fingerprint(path: str) -> tuple[int, int, int] | None:
@@ -84,40 +89,33 @@ def _fingerprint(path: str) -> tuple[int, int, int] | None:
         return None
 
 
-def _physical_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The schema Spark infers for `path`, inferred once per session and
-    file fingerprint; None when the path cannot be fingerprinted.
+def session_cache(spark: SparkSession, sf_dir: str, tables: tuple[str, ...],
+                  key: tuple, build: Callable[[], T]) -> T:
+    """`build()`'s value, built once per session, sf_dir and `key` for as
+    long as the named `tables` under `sf_dir` keep their fingerprint.
 
-    Unlocked like the training memos: two threads missing together both
-    infer (the same schema), never crash — the eviction sweep iterates a
-    key snapshot and tolerates a concurrent pop."""
-    fp = _fingerprint(path)
-    if fp is None:
-        return None
+    A changed fingerprint is a miss that rebuilds and overwrites; every
+    miss also drops the entries of other sessions. When a table cannot be
+    fingerprinted, `build()` runs and nothing is stored. The lock guards
+    only the dict: builds nest (every build calls `load`, whose schema
+    goes through here), so `build()` runs outside it, and when two
+    callers miss together the first stored value is the one both get."""
+    fp = tuple(_fingerprint(f"{sf_dir}/{t}.parquet") for t in tables)
+    if None in fp:
+        return build()
     app = spark.sparkContext.applicationId
-    key = (app, path, fp)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        for k in list(_SCHEMAS):  # other sessions, older fingerprints
-            if k[0] != app or k[1] == path:
-                _SCHEMAS.pop(k, None)
-        _SCHEMAS[key] = schema
-    return schema
-
-
-# Keyed by (applicationId, sf_dir, name): a DataFrame handle is bound to
-# the SparkSession that built it, so after a session stop/restart the old
-# entries must not be returned (their JVM plans are dead). Guarded by a
-# lock — cache_table may be called from pipeline stages running in
-# threads.
-_CACHED: dict[tuple[str, str, str], DataFrame] = {}
-_CACHE_LOCK = __import__("threading").Lock()
-
-
-def _cache_key(spark: SparkSession, sf_dir: str,
-               name: str) -> tuple[str, str, str]:
-    return (spark.sparkContext.applicationId, sf_dir, name)
+    k = (app, sf_dir, key)
+    with _SESSION_LOCK:
+        entry = _SESSION_CACHE.get(k)
+    if entry is None or entry[0] != fp:
+        value = build()
+        with _SESSION_LOCK:
+            entry = _SESSION_CACHE.get(k)
+            if entry is None or entry[0] != fp:
+                for other in [o for o in _SESSION_CACHE if o[0] != app]:
+                    del _SESSION_CACHE[other]
+                entry = _SESSION_CACHE[k] = (fp, value)
+    return entry[1]
 
 
 def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -125,10 +123,11 @@ def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     row — the reference's `de_merkel.persist()` before two downstream jobs,
     Introduction to PySpark.ipynb:240).
 
-    Spark's CacheManager matches by analyzed-plan equality, so EVERY
-    subsequent `load()` of the same table — even from code that never saw
-    this call — reads the InMemoryRelation instead of re-scanning parquet.
-    Idempotent; `uncache_table`/`uncache_all` release the memory.
+    Spark's CacheManager is the registry: it matches by analyzed-plan
+    equality, so EVERY subsequent `load()` of the same table — even from
+    code that never saw this call — reads the InMemoryRelation instead of
+    re-scanning parquet, and `uncache_table` releases it through a fresh
+    handle. Idempotent.
 
     Scale note: caching is a working-set decision, not a default — a
     100 TB fact table must NOT be cached (it evicts everything else);
@@ -136,30 +135,11 @@ def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     MEMORY_AND_DISK (the `cache()` default) degrades gracefully when a
     partition doesn't fit.
     """
-    key = _cache_key(spark, sf_dir, name)
-    with _CACHE_LOCK:
-        if key not in _CACHED:
-            evict_stale(_CACHED, key[0])
-            _CACHED[key] = load(spark, sf_dir, name).cache()
-        return _CACHED[key]
+    return load(spark, sf_dir, name).cache()
 
 
 def uncache_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    with _CACHE_LOCK:
-        df = _CACHED.pop(_cache_key(spark, sf_dir, name), None)
-    if df is not None:
-        df.unpersist()
-
-
-def uncache_all() -> None:
-    with _CACHE_LOCK:
-        dfs = list(_CACHED.values())
-        _CACHED.clear()
-    for df in dfs:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # handle may belong to an already-stopped session
+    load(spark, sf_dir, name).unpersist()
 
 
 def shuffle_width(spark: SparkSession) -> int:

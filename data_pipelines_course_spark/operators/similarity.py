@@ -24,11 +24,10 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..datasets import load, shuffle_width, widen_scan
+from ..datasets import load, session_cache, shuffle_width, widen_scan
 from ..staging import stage
 from ..functions.scalar import fround
 from ..queries import query
-from ..memo import evict_stale
 
 QUERY_VEC_ID = 0  # fixed probe vector for the deterministic top-k queries
 TOP_K = 10
@@ -269,30 +268,16 @@ def _lsh_params(emb_b: DataFrame) -> tuple[int, int]:
             meta.get("planes_per_table", PLANES_PER_TABLE))
 
 
-# Session-scoped LSH bucket-index memo (r13, VERDICT r12 #3): both
-# ann_lsh_topk and ann_batch_topk serve from the SAME (vec_id, label,
-# embedding, buckets) table built with the registered LSH parameters,
-# but each constructed its own staged copy — two identical checkpoint
-# builds per session in the bench's cold pass (and one more per extra
-# construction). One memoized build per (session, sf_dir) is the
-# write-time index layout the docstrings promise; the _INDEX_MEMO /
-# _CLUSTER_MEMO pattern, stale sessions swept via evict_stale.
-_BUCKET_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staged registered-parameter LSH bucket index, one build per
-    session. Referee knob sweeps (non-registered n_tables/planes) keep
-    building theirs inline via lsh_batch_topk."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BUCKET_MEMO.get(key)
-    if hit is not None:
-        return hit
-    evict_stale(_BUCKET_MEMO, key[0])
-    idx = stage(widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
-                .withColumn("buckets", lsh_buckets()))
-    _BUCKET_MEMO[key] = idx
-    return idx
+    session: ann_lsh_topk and ann_batch_topk serve from the same
+    (vec_id, label, embedding, buckets) table, the write-time index
+    layout their docstrings promise. Referee knob sweeps (non-registered
+    n_tables/planes) keep building theirs inline via lsh_batch_topk."""
+    return session_cache(
+        spark, sf_dir, ("embeddings",), ("lsh_buckets",),
+        lambda: stage(widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
+                      .withColumn("buckets", lsh_buckets())))
 
 
 @query("ann_lsh_topk")  # rows-only: hyperplane hashing not SQL-oracle-able
@@ -702,17 +687,6 @@ def _best_cell(cents: list[list[float]]) -> Column:
     return F.element_at(F.sort_array(scores, asc=False), 1)
 
 
-# Session-scoped training memos (deterministic, KB-sized driver
-# objects; stale-session entries swept on miss via memo.evict_stale —
-# see memo.py). Unlocked BY CHOICE: a first-construction race between
-# threads double-computes the same deterministic result and the last
-# write wins — tolerated because every value is pure-function-of-inputs
-# (result equality under a real race is pinned by
-# tests/test_concurrency.py); a lock would serialize all first calls
-# behind a multi-second training job.
-_TRAIN_MEMO: dict[tuple, tuple] = {}
-
-
 def kmeans_train(
     spark: SparkSession,
     sf_dir: str,
@@ -726,18 +700,17 @@ def kmeans_train(
     measured at each assignment step — monotone non-decreasing by Lloyd's
     argument, asserted in tests/test_similarity.py.
 
-    Memoized per (application, sf_dir, k, max_iter): training is
-    deterministic and its result is a KB-sized driver object, so the
-    two registered consumers (embedding_kmeans, semdedup_candidates —
-    and any interactive reuse) share ONE training run per session
-    instead of re-running the Lloyd loop each call (same pattern as
-    datasets.py's scan cache; appId key evicts naturally on session
-    restart)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, k, max_iter)
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
+    Training is deterministic and its result is a KB-sized driver
+    object, so its consumers (embedding_kmeans, semdedup_candidates,
+    the IVF routers and any interactive reuse) share ONE training run
+    per session through `session_cache`."""
+    return session_cache(
+        spark, sf_dir, ("embeddings",), ("kmeans", k, max_iter),
+        lambda: _lloyd_kmeans(spark, sf_dir, k, max_iter))
+
+
+def _lloyd_kmeans(spark: SparkSession, sf_dir: str, k: int, max_iter: int
+                  ) -> tuple[list[list[float]], list[float]]:
     # widen_scan (r12): each Lloyd iteration evaluates K HOF dots per row
     # over this persisted frame; on the one-row-group local file all
     # iterations ran in a single task. No-op at 100 TB (see widen_scan).
@@ -747,7 +720,6 @@ def kmeans_train(
     try:
         first = base.head()
         if first is None:  # no trainable vectors (zero-row / all-zero)
-            _TRAIN_MEMO[memo_key] = ([], [])
             return [], []
         dim = len(first["nv"])
         init = {int(r["vec_id"]): [float(x) for x in r["nv"]]
@@ -778,7 +750,6 @@ def kmeans_train(
             cents = new_cents
             if shift < KMEANS_TOL:
                 break
-        _TRAIN_MEMO[memo_key] = (cents, history)
         return cents, history
     finally:
         base.unpersist()
@@ -797,7 +768,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     router at 0.558-0.592 recall@10 vs 0.482 for the untrained one at
     IDENTICAL 25% corpus touch (ANN_RECALL_r08.json) — training the
     router is free recall at serving time. Training cost is paid once
-    per session (kmeans_train memo; same policy as embedding_kmeans /
+    per session (kmeans_train's cache; same policy as embedding_kmeans /
     semdedup_candidates — and like those, this query is excluded from
     bench EXTRA because construction-time training would be
     mis-attributed to the serving plan).
@@ -972,28 +943,23 @@ def _pq_sample(spark: SparkSession, sf_dir: str):
     PQ_TRAIN_N of the unit-normalized corpus as an ndarray sorted by
     vec_id — plus the unit probe vector, which rides along from the
     same collect (QUERY_VEC_ID < PQ_TRAIN_N), saving a second Spark job
-    at construction. Memoized and shared by raw (`_pq_codebooks`) and
+    at construction. Cached and shared by raw (`_pq_codebooks`) and
     residual (`_pq_residual_codebooks`) training. (None, None) when the
     probe is absent (zero-row corpus) or direction-less (zero norm,
     dropped by _normalized): nothing to train toward, no neighbors."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq_sample")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    import numpy as np
+    def build():
+        import numpy as np
 
-    emb = _normalized(load(spark, sf_dir, "embeddings"))
-    rows = (emb.filter(F.col("vec_id") < PQ_TRAIN_N)
-            .select("vec_id", "nv").collect())
-    by_id = {int(r["vec_id"]): [float(v) for v in r["nv"]] for r in rows}
-    if QUERY_VEC_ID not in by_id:
-        _TRAIN_MEMO[memo_key] = (None, None)
-        return None, None
-    x = np.array([by_id[i] for i in sorted(by_id)])
-    qv = by_id[QUERY_VEC_ID]
-    _TRAIN_MEMO[memo_key] = (x, qv)
-    return x, qv
+        emb = _normalized(load(spark, sf_dir, "embeddings"))
+        rows = (emb.filter(F.col("vec_id") < PQ_TRAIN_N)
+                .select("vec_id", "nv").collect())
+        by_id = {int(r["vec_id"]): [float(v) for v in r["nv"]] for r in rows}
+        if QUERY_VEC_ID not in by_id:
+            return None, None
+        return (np.array([by_id[i] for i in sorted(by_id)]),
+                by_id[QUERY_VEC_ID])
+    return session_cache(spark, sf_dir, ("embeddings",), ("pq_sample",),
+                         build)
 
 
 def _lloyd_books(x) -> list[list[list[float]]]:
@@ -1024,20 +990,12 @@ def _lloyd_books(x) -> list[list[list[float]]]:
 def _pq_codebooks(spark: SparkSession, sf_dir: str
                   ) -> tuple[list[list[list[float]]], list[float]]:
     """(codebooks, query_vector): raw-vector per-subspace codebooks
-    (see _pq_sample / _lloyd_books). Memoized per (application, sf_dir)
-    like kmeans_train."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    x, qv = _pq_sample(spark, sf_dir)
-    if x is None:
-        _TRAIN_MEMO[memo_key] = (None, None)
-        return None, None
-    books = _lloyd_books(x)
-    _TRAIN_MEMO[memo_key] = (books, qv)
-    return books, qv
+    (see _pq_sample / _lloyd_books), cached per session like
+    kmeans_train."""
+    def build():
+        x, qv = _pq_sample(spark, sf_dir)
+        return (None, None) if x is None else (_lloyd_books(x), qv)
+    return session_cache(spark, sf_dir, ("embeddings",), ("pq",), build)
 
 
 def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
@@ -1056,28 +1014,22 @@ def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
     centroid (kmeans_train — the same quantizer that routes at serving
     time; dot on unit vectors, ties to the higher index, matching
     _best_cell's sort_array rule), subtract, Lloyd the residuals
-    per-subspace. Memoized like the raw books; returns (None, None,
+    per-subspace. Cached like the raw books; returns (None, None,
     None) when the corpus is untrainable or the probe absent."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq_res")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    import numpy as np
+    def build():
+        import numpy as np
 
-    cents, _ = kmeans_train(spark, sf_dir)
-    x, qv = _pq_sample(spark, sf_dir)
-    if not cents or x is None:
-        _TRAIN_MEMO[memo_key] = (None, None, None)
-        return None, None, None
-    C = np.array(cents)
-    d = x @ C.T
-    # argmax with ties to the HIGHER index (_best_cell's rule: struct
-    # sort descends on (score, cell), so equal scores pick the larger c)
-    assign = (d.shape[1] - 1) - np.argmax(d[:, ::-1], axis=1)
-    books = _lloyd_books(x - C[assign])
-    _TRAIN_MEMO[memo_key] = (books, qv, cents)
-    return books, qv, cents
+        cents, _ = kmeans_train(spark, sf_dir)
+        x, qv = _pq_sample(spark, sf_dir)
+        if not cents or x is None:
+            return None, None, None
+        C = np.array(cents)
+        d = x @ C.T
+        # argmax with ties to the HIGHER index (_best_cell's rule: struct
+        # sort descends on (score, cell), so equal scores pick the larger c)
+        assign = (d.shape[1] - 1) - np.argmax(d[:, ::-1], axis=1)
+        return _lloyd_books(x - C[assign]), qv, cents
+    return session_cache(spark, sf_dir, ("embeddings",), ("pq_res",), build)
 
 
 def _sql_arr(vs: list[float]) -> str:
@@ -1128,14 +1080,13 @@ def _residual_sql(cents: list[list[float]]) -> str:
     return f"CASE _cell {branches} END"
 
 
-# Session-scoped serving-index memo (checkpoint-backed DataFrame handle,
-# the graph._CLUSTER_MEMO pattern; stale sessions swept via evict_stale).
-# r12 optimization: the PQ/IVF serving queries recomputed their
-# probe-INDEPENDENT index columns — unit-norm `nv`, trained-cell `_cell`,
-# PQ `codes` — on every execution, serially in the one-row-group scan
-# task; worse, the lazy `nv` alias collapses into each consumer lambda so
-# the norm aggregate re-evaluated per element per centroid/codeword
-# (the dedup.py `_SHINGLES_OF_W` hazard, here at 64 els × 16 cells × 8
+# The serving index is staged and cached per session because, built
+# inline, the PQ/IVF serving queries recomputed their probe-INDEPENDENT
+# index columns — unit-norm `nv`, trained-cell `_cell`, PQ `codes` — on
+# every execution, serially in the one-row-group scan task; worse, the
+# lazy `nv` alias collapses into each consumer lambda so the norm
+# aggregate re-evaluated per element per centroid/codeword (the
+# dedup.py `_SHINGLES_OF_W` hazard, here at 64 els × 16 cells × 8
 # subspaces). At 100 TB these columns are WRITE-TIME table layout (the
 # pq_topk/ivf_pq_topk docstrings' stated design: cells are the partition
 # column, codes a stored column); locally the staged digest is that
@@ -1144,7 +1095,6 @@ def _residual_sql(cents: list[list[float]]) -> str:
 # OPTIMIZATION_r12.md; ivf_kmeans_topk 12.76 s -> same table. Values
 # identical (staging is pure materialization; `SPARK_GRAFT_STAGING=none`
 # re-derives from raw lineage).
-_INDEX_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _serving_index(spark: SparkSession, sf_dir: str,
@@ -1152,30 +1102,25 @@ def _serving_index(spark: SparkSession, sf_dir: str,
     """The staged (vec_id, label, embedding, nv[, _cell][, codes])
     serving-index table — probe-independent columns only, so every probe
     query over the same trained state shares one build. ``books`` /
-    ``cents`` are the memoized deterministic training outputs (or
+    ``cents`` are the cached deterministic training outputs (or
     None/[] when a consumer does not need that column)."""
-    # Digest the trained VALUES, not only their shapes (ADVICE r12): an
-    # interactive caller retraining with different hyperparameters (same
-    # k) in one session must not be served a stale _cell/codes column.
-    # repr() of Python floats round-trips exactly, so equal training
-    # outputs key identically and any value drift forces a fresh build.
+    def build():
+        idx = _normalized(widen_scan(load(spark, sf_dir, "embeddings"),
+                                     "vec_id"))
+        if cents:
+            idx = idx.withColumn("_cell", _best_cell(cents)["c"].cast("int"))
+        if books is not None:
+            dsub = len(books[0][0])  # sub-vector width
+            idx = idx.withColumn("codes", F.expr(_pq_encode_sql(books, dsub)))
+        return stage(idx)
+    # Keyed by the trained VALUES, not only their shapes: a caller
+    # retraining with different hyperparameters (same k) in one session
+    # must not be served a stale _cell/codes column. repr() of Python
+    # floats round-trips exactly, so equal training outputs key
+    # identically and any value drift forces a fresh build.
     digest = hashlib.md5(repr((books, cents)).encode()).hexdigest()
-    memo_key = (spark.sparkContext.applicationId, sf_dir,
-                books is not None, len(cents) if cents else 0, digest)
-    hit = _INDEX_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_INDEX_MEMO, memo_key[0])
-    idx = widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
-    idx = _normalized(idx)
-    if cents:
-        idx = idx.withColumn("_cell", _best_cell(cents)["c"].cast("int"))
-    if books is not None:
-        dsub = len(books[0][0])  # sub-vector width
-        idx = idx.withColumn("codes", F.expr(_pq_encode_sql(books, dsub)))
-    idx = stage(idx)
-    _INDEX_MEMO[memo_key] = idx
-    return idx
+    return session_cache(spark, sf_dir, ("embeddings",),
+                         ("serving_index", digest), build)
 
 
 @query("pq_topk")  # rows-only: trained codebooks are not oracle SQL
@@ -1279,8 +1224,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates exact-reranked can only raise recall@10): widening the
     refine window — PQ_REFINE 8 -> 16 lifts the sf0.1 panel 0.405 ->
     ~0.54 against a 0.59 routing ceiling (knob curve: 8/16/32 ->
-    0.445/0.5375/0.5775 sim, ceiling 0.59). Training is memoized per
-    session (kmeans_train / _pq_codebooks memos); the serving plan
+    0.445/0.5375/0.5775 sim, ceiling 0.59). Training is cached per
+    session (kmeans_train / _pq_codebooks cache); the serving plan
     shape is unchanged — one scan, literal centroids/codebooks/LUTs,
     zero exchanges, zero Python."""
     books, qv = _pq_codebooks(spark, sf_dir)

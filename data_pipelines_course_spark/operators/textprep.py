@@ -17,10 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..datasets import load, widen_scan
+from ..datasets import load, session_cache, widen_scan
 from ..functions.scalar import fround, fround_sql
 from ..queries import query
-from ..memo import evict_stale
 
 # Patterns are deliberately written in the common subset of Java regex
 # (Spark) and RE2 (DuckDB): character classes, \b, {m,}, alternation —
@@ -376,11 +375,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGES = 20  # merge rounds to train (toy scale; the loop is the point)
 
-# Session-scoped memo for trained merge lists (KB-sized driver state;
-# keyed by applicationId; stale-session entries swept on miss via
-# memo.evict_stale — see memo.py for the hygiene + snapshot caveat).
-_BPE_MEMO: dict[tuple, list[tuple[str, str]]] = {}
-
 
 def _sq(sym: str) -> str:
     """Quote a BPE symbol for interpolation into a SQL string literal.
@@ -415,15 +409,15 @@ def bpe_train(spark: SparkSession, sf_dir: str,
     Parity with a pure-Python reference BPE is asserted in
     tests/test_textprep_bpe.py.
 
-    Memoized per (application, sf_dir, n_merges): training is a
-    deterministic driver loop and BOTH registered consumers
-    (bpe_merge_table, bpe_token_stats) call it — the quantizer-memo
-    pattern from similarity.kmeans_train."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _BPE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_BPE_MEMO, memo_key[0])
+    Cached per session: training is a deterministic driver loop and
+    BOTH registered consumers (bpe_merge_table, bpe_token_stats) call
+    it."""
+    return session_cache(spark, sf_dir, ("documents",), ("bpe", n_merges),
+                         lambda: _train_bpe(spark, sf_dir, n_merges))
+
+
+def _train_bpe(spark: SparkSession, sf_dir: str,
+               n_merges: int) -> list[tuple[str, str]]:
     docs = load(spark, sf_dir, "documents")
     vocab = (docs.select(F.explode(
                  F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
@@ -469,7 +463,6 @@ def bpe_train(spark: SparkSession, sf_dir: str,
                 f"array('{qa}{qb}')) ELSE concat(acc, array(x)) END, "
                 f"acc -> slice(acc, 2, size(acc) - 1))"))
                 .localCheckpoint())  # truncate per-round lineage
-        _BPE_MEMO[memo_key] = merges
         return merges
     finally:
         vocab.unpersist()

@@ -106,86 +106,9 @@ def load_registry() -> None:
     _LOADED = True
 
 
-# Driver-coverage rotation. The verify driver records CORRECTNESS rows
-# for the FIRST 50 entries of queries() in dict order (observed across
-# r1-r3: its list is exactly the first 50 names). With 150+ registered
-# queries no single round can give every query a driver row, so the
-# registry surfaces the names with the LEAST driver coverage first; the
-# already-covered core follows in registration order. The full oracle
-# sweep (tests/test_parity.py) runs ALL oracle-backed queries every
-# round regardless of this ordering.
-DRIVER_FIRST: tuple[str, ...] = (
-    # Round 13 rotation: staleness-ratchet front (VERDICT r11 #4) — the
-    # 50 names whose most recent driver CORRECTNESS row is oldest,
-    # ranked (latest round, name): the 15 remaining r9 names + the 35
-    # alphabetically-first r10 names — exactly the tuple the guard test
-    # emits (max staleness stays bounded). The r12-rewritten
-    # oracle-backed queries price_quantiles_approx, dispersion_stats,
-    # lang_id and the r13-touched json_group_by_key all land in this
-    # front; window_first_last_ratio / lang_token_stats rank just past
-    # 50 on the alphabetical tiebreak and are covered driver-side by
-    # the fast-tier test_parity sweep instead (VERDICT r12 #2).
-    # tests/test_registry.py recomputes the ranking from the committed
-    # CORRECTNESS files and fails with a paste-ready tuple when the
-    # rotation goes stale.
-    "pii_redaction",
-    "pq_topk",
-    "price_quantiles",
-    "price_quantiles_approx",
-    "quality_mixture_sample",
-    "quantity_quantiles_by_flag",
-    "quantity_quantiles_by_flag_approx",
-    "range_join_click_count",
-    "range_position",
-    "table_profile_orders",
-    "temperature_resample_docs",
-    "tfidf_top_terms",
-    "unigram_logprob_score",
-    "vocabulary_build",
-    "weighted_sample_docs",
-    "anti_join_stopwords",
-    "array_element_extract",
-    "array_mean",
-    "array_size",
-    "array_transform_norm",
-    "broadcast_join",
-    "case_when_bucket",
-    "contamination_report",
-    "corpus_curation",
-    "cube_agg",
-    "derived_datetime_parts",
-    "deterministic_sample_docs",
-    "dispersion_stats",
-    "distinct_count",
-    "doc_fingerprint",
-    "doc_length_stats",
-    "duplicate_ratio_report",
-    "embedding_norm_stats",
-    "except_inactive_customers",
-    "explode_array_agg",
-    "filter_contains",
-    "filter_date_window",
-    "filter_equality",
-    "global_minmax",
-    "grouped_count",
-    "grouped_hour_sum",
-    "grouping_sets_agg",
-    "intersect_nation_keys",
-    "join_multiway_revenue",
-    "json_extract_props",
-    "json_group_by_key",
-    "lag_lead_delta",
-    "lang_id",
-    "literal_and_cast",
-    "moving_average",
-)
-
-
 def all_queries() -> dict[str, QueryFn]:
     load_registry()
-    ordered = {n: QUERIES[n] for n in DRIVER_FIRST if n in QUERIES}
-    ordered.update((n, fn) for n, fn in QUERIES.items() if n not in ordered)
-    return ordered
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:

@@ -47,15 +47,19 @@ Block lifecycle: repeated query constructions stage fresh tables, but
 neither mode leaks unboundedly — once a constructed frame becomes
 unreachable, Spark's ContextCleaner GC hook drops its checkpoint/cache
 blocks, and under memory pressure persist's MEMORY_AND_DISK evicts LRU
-(recomputing from lineage on re-read). The memoized consumers
-(graph/BPE/kmeans) hold exactly one referenced frame per (app, sf_dir). The iterative driver loops (``operators/graph.py`` label
-propagation, ``operators/textprep.py`` BPE training) are NOT routed
-through this gate: they need lineage TRUNCATION each round — under
-``persist`` their plan would double every iteration and the fixpoint
-loop's analysis cost would explode — so they keep eager
-``localCheckpoint()`` unconditionally; their executor-loss exposure is
-one round's worth of K-row state, restarted cheaply, and is documented
-at the loop sites.
+(recomputing from lineage on re-read). Staged frames reused across
+queries (the LSH bucket index, the PQ/IVF serving index, the converged
+dedup clusters) are held by ``datasets.session_cache``: one referenced
+frame per session, sf_dir and key, replaced when its input tables'
+fingerprint changes and dropped when another session misses.
+
+The iterative driver loops (``operators/graph.py`` label propagation,
+``operators/textprep.py`` BPE training) are NOT routed through this
+gate: they need lineage TRUNCATION each round — under ``persist`` their
+plan would double every iteration and the fixpoint loop's analysis cost
+would explode — so they keep eager ``localCheckpoint()``
+unconditionally; their executor-loss exposure is one round's worth of
+K-row state, restarted cheaply, and is documented at the loop sites.
 """
 
 from __future__ import annotations

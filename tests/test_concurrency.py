@@ -4,10 +4,10 @@ users, orchestrated stages), and the one r4 data-loss-class bug — the
 partitionOverwriteMode session race — lived exactly in shared-session
 mutable state. The sinks carry a dedicated interleave test; this covers
 the QUERY surface: a diverse slice of the registry (relational, window,
-LSH digest checkpoints, the memoized cluster builds, the restructured
+LSH digest checkpoints, the cached cluster builds, the restructured
 attrition report) raced on one session must return exactly the
 sequential answers — no cross-talk through session confs, dataset
-caches, lazy checkpoints, or the per-application memo dicts."""
+caches, lazy checkpoints, or the session cache."""
 
 from __future__ import annotations
 
@@ -22,8 +22,8 @@ CONCURRENT = (
     "sessionize_events",
     "minhash_lsh_pairs",
     "simhash_pairs",
-    "dedup_cluster_size_histogram",   # memoized eager build
-    "dedup_keep_best",                # same memo, raced on first build
+    "dedup_cluster_size_histogram",   # cached eager build
+    "dedup_keep_best",                # shares the cached cluster build
     "curation_attrition_report",
     "quantity_quantiles_by_flag",
     "lang_confusion_report",

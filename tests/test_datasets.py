@@ -50,29 +50,29 @@ def test_events_nanos_bigint_branch(spark, tmp_path):
 
 
 def test_memo_eviction_drops_stale_session_entries(spark):
-    """The appId-keyed memos must SWEEP dead-session entries on a miss,
-    not just skip them (ADVICE r5): a long-lived process cycling
-    SparkSessions would otherwise accumulate DataFrames bound to stopped
-    SparkContexts. Simulated with planted foreign-appId entries — the
-    next miss removes them while live-session entries survive."""
-    from data_pipelines_course_spark.memo import evict_stale
+    """A miss in the session cache must SWEEP dead-session entries, not
+    just skip them: a long-lived process cycling SparkSessions would
+    otherwise accumulate DataFrames bound to stopped SparkContexts.
+    Simulated with a planted foreign-appId entry — the next miss removes
+    it while live-session entries survive."""
+    import uuid
+
     from data_pipelines_course_spark import datasets as D
     from tests.conftest import SF_DIR as sf_dir
 
-    # Unit semantics: only foreign appIds are dropped.
-    memo = {("dead-app", "x"): 1, ("live-app", "y"): 2}
-    evict_stale(memo, "live-app")
-    assert memo == {("live-app", "y"): 2}
-
-    # Integration: cache_table's miss path sweeps the planted orphan.
     app = spark.sparkContext.applicationId
-    with D._CACHE_LOCK:
-        D._CACHED[("application_0000_dead", sf_dir, "region")] = object()
-    D.cache_table(spark, sf_dir, "nation")
-    with D._CACHE_LOCK:
-        assert ("application_0000_dead", sf_dir, "region") not in D._CACHED
-        assert (app, sf_dir, "nation") in D._CACHED
-    D.uncache_table(spark, sf_dir, "nation")
+    load(spark, sf_dir, "nation")
+    live = (app, sf_dir, ("schema", "nation"))
+    dead = ("application_0000_dead", sf_dir, ("schema", "region"))
+    with D._SESSION_LOCK:
+        D._SESSION_CACHE[dead] = (
+            (D._fingerprint(f"{sf_dir}/region.parquet"),), object())
+    miss = ("eviction-probe", uuid.uuid4().hex)
+    assert D.session_cache(spark, sf_dir, ("nation",), miss, lambda: 7) == 7
+    with D._SESSION_LOCK:
+        assert dead not in D._SESSION_CACHE
+        assert live in D._SESSION_CACHE
+        assert D._SESSION_CACHE.pop((app, sf_dir, miss))[1] == 7
 
 
 def test_second_load_of_unchanged_file_starts_no_job(spark):
