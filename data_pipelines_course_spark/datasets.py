@@ -162,18 +162,22 @@ def widen_scan(df: DataFrame, key: str) -> DataFrame:
     so locally every scan stage runs as exactly ONE task and any heavy
     per-row work layered on it (exact-percentile partial aggregation,
     hyperplane/codebook HOF arithmetic, from_json parsing) serializes on
-    one core. This is the generalization of `operators/dedup.py:_widen`
-    (in the engine since r2 for the shingle family) to the other heavy
-    map stages, measured per consumer in OPTIMIZATION_r12.md.
+    one core. The shingle/n-gram digest family and the other heavy map
+    stages widen through this one function.
 
-    Scale honesty: the width probe is `inputFiles()` — at 100 TB a table
-    scan is already split into ~128 MB tasks across many files, the probe
-    sees files >= the shuffle-partition target, and this is a NO-OP; only
-    a scan whose file count cannot feed the target parallelism pays the
-    one linear row-shuffle. Hash-partitioned by a deterministic `key`
-    column (never round-robin): retried map tasks reproduce the same
+    Scale honesty: the width probe is `inputFiles()` — pure metadata, no
+    RDD conversion. At 100 TB a table scan is already split into ~128 MB
+    tasks across many files, the probe sees files >= the shuffle-
+    partition target, and this is a NO-OP (one file can split into many
+    tasks but never the reverse, so `files >= n` proves the scan is
+    already wide); only a scan whose file count cannot feed the target
+    parallelism, or a non-file frame (which reports []), pays the one
+    linear row-shuffle. Hash-partitioned by a deterministic `key` column
+    (never round-robin): retried map tasks reproduce the same
     row-to-partition assignment (SPARK-38388) and no sort-before-
-    repartition pass is charged. Streaming frames pass through untouched.
+    repartition pass is charged. Streaming frames pass through untouched:
+    `.rdd` is illegal on them, and a micro-batch's parallelism is the
+    source's concern (e.g. maxFilesPerTrigger), not a repartition's.
     """
     if df.isStreaming:
         return df

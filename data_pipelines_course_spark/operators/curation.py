@@ -29,21 +29,18 @@ from ..datasets import load, widen_scan
 from ..functions.scalar import fround
 from ..queries import ORACLES, query
 from ..staging import stage
-from .dedup import _DUCK_GRAMS5, _DUCK_WORDS, _NGRAM_N
+from .dedup import (_DUCK_CONTAMINATED_CTES, _DUCK_WORDS, _WORDS,
+                    contaminated_ids, gram_hashes)
 from .sampling import _bucket_sql, hash_bucket
 from .textops import (STOP_DE, STOP_EN, STOP_FR, _duck_hits, _hits_of_tk,
                       _spark_hits)
 
 _MIN_TOKENS = 20
 
-# Word/bigram expressions shared by the repetition and type-token reports.
-# Spark and DuckDB forms are kept structurally identical (lowercased
-# whitespace tokens; bigrams by adjacent-position concat) so the per-doc
-# values are bit-equal across engines.
-_SPARK_WORDS = "split(lower(trim(text)), '\\\\s+')"
-# NOTE: never inline _SPARK_WORDS inside a transform/filter LAMBDA body —
-# the lambda re-evaluates it per element (O(tokens²) per doc). Stage the
-# array through a projection first (see repetition_ratio).
+# Bigrams for the repetition report. Spark and DuckDB forms are kept
+# structurally identical (dedup's lowercased whitespace words; bigrams by
+# adjacent-position concat) so the per-doc values are bit-equal across
+# engines.
 _DUCK_BIGRAMS = (
     f"list_transform(range(1, len({_DUCK_WORDS})),"
     f" i -> {_DUCK_WORDS}[i] || ' ' || {_DUCK_WORDS}[i+1])"
@@ -122,14 +119,11 @@ def lang_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus report: document and token tallies keyed by the
     lang_id heuristic — the input numbers for a data-mix recipe.
 
-    r12: tokenize once + branch on the hit ints (the lang_confusion /
-    lang_id treatment, guide §1.2 — the CASE's inlined _spark_hits
-    re-ran split(lower(text)) per branch) and widen the single-row-group
-    scan (§2.5). n_tokens keeps its own split(trim(text)) — trim and
-    lower tokenize differently on edge whitespace, so the two arrays are
-    not shared (2 tokenizations/row, down from up to 7). Measured
-    0.413 s -> 0.183 s warm at sf0.1 (min-of-7, interleaved); rows
-    collect-identical; hash_match at 3 SFs."""
+    Tokenizes once and branches on the hit ints (an inlined _spark_hits
+    per CASE branch would re-run split(lower(text)) per branch), over a
+    widened single-row-group scan. n_tokens keeps its own
+    split(trim(text)) — trim and lower tokenize differently on edge
+    whitespace, so the two arrays are not shared (2 tokenizations/row)."""
     docs = widen_scan(load(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
         F.split(F.lower("text"), r"\s+").alias("tk"),
@@ -199,15 +193,12 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the transform lambda per element (O(tokens²) work per doc — measured
     4.6 s at sf0.1 vs 0.28 s staged, 16×). CollapseProject keeps the
     staging because each alias is non-cheap and referenced more than
-    once, so each array is computed exactly once per row.
-
-    r12: widen the single-row-group scan before the bigram HOF stage
-    (guide §2.5; same heavy-per-row-map rule as text_quality/gopher).
-    Per-row outputs, placement-independent; no-op at 100 TB. Measured
-    0.331 s -> 0.186 s warm at sf0.1 (min-of-7, interleaved);
-    hash_match at 3 SFs."""
+    once, so each array is computed exactly once per row. The
+    single-row-group scan is widened before the bigram HOF stage (the
+    heavy-per-row-map rule); per-row outputs are placement-independent
+    and the widen is a no-op at 100 TB."""
     docs = widen_scan(load(spark, sf_dir, "documents"), "doc_id")
-    return (docs.select("doc_id", F.expr(_SPARK_WORDS).alias("w"))
+    return (docs.select("doc_id", F.expr(_WORDS).alias("w"))
             .filter(F.size("w") >= 2)
             .select("doc_id",
                     F.expr("transform(sequence(1, size(w) - 1),"
@@ -243,7 +234,7 @@ def type_token_ratio_by_source(spark: SparkSession,
     on (source, word), which is near-uniform — no skew key exists."""
     docs = load(spark, sf_dir, "documents")
     words = docs.select("source",
-                        F.explode(F.expr(_SPARK_WORDS)).alias("word"))
+                        F.explode(F.expr(_WORDS)).alias("word"))
     return (words.groupBy("source")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
                  F.countDistinct("word").cast("bigint").alias("n_types"),
@@ -311,15 +302,7 @@ def duplicate_ratio_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT min(doc_id) AS doc_id, count(*) AS dup_count
         FROM kept GROUP BY md5(text)
     ),
-    g AS (
-        SELECT doc_id, unnest({_DUCK_GRAMS5}) AS gram
-        FROM documents WHERE len({_DUCK_WORDS}) >= {_NGRAM_N}
-    ),
-    bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0),
-    contaminated AS (
-        SELECT DISTINCT g.doc_id FROM g JOIN bench USING (gram)
-        WHERE g.doc_id % 10 <> 0
-    )
+    {_DUCK_CONTAMINATED_CTES}
     SELECT r.doc_id, r.dup_count,
            CASE WHEN {_bucket_sql('r.doc_id')} < 10
                 THEN 'eval' ELSE 'train' END AS split
@@ -335,31 +318,16 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the curation branch is scan → codegen filter → one
     md5-hash shuffle; the decontamination branch explodes the corpus
-    into gram digests ONCE (checkpointed; both the bench and train
+    into gram digests ONCE (staged; both the bench and train
     filters read the materialization), its bench gram set broadcasts,
     and the contaminated-id set is tiny, so the final LEFT ANTI lands
     as a broadcast join under AQE. At 100 TB the only unavoidable
     corpus shuffles remain the content-hash groupBy and the per-doc
     gram count — everything else is map-side."""
-    from .dedup import _GRAMS5_OF_W, _widen, _WORDS
-
     docs = load(spark, sf_dir, "documents")
     curated = curate(docs.filter(F.col("doc_id") % 10 != 0))
-    # Digest checkpoint (r5, the curation_attrition_report idiom): the
-    # bench and train branches are disjoint filters of ONE 5-gram
-    # explode — materialize its (doc_id, hash) digests once instead of
-    # exploding the corpus per branch.
-    gh = (_widen(docs)
-          .select("doc_id", F.expr(_WORDS).alias("w"))
-          .filter(F.size("w") >= _NGRAM_N)
-          .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))
-          .select("doc_id", F.xxhash64("gram").alias("gh"))
-          .transform(stage))
-    bench_g = gh.filter(F.col("doc_id") % 10 == 0).select("gh").distinct()
-    contaminated = (gh.filter(F.col("doc_id") % 10 != 0)
-                    .join(F.broadcast(bench_g), "gh")
-                    .select("doc_id").distinct())
-    return curated.join(contaminated, "doc_id", "left_anti")
+    return curated.join(contaminated_ids(gram_hashes(docs)), "doc_id",
+                        "left_anti")
 
 
 @query(
@@ -375,13 +343,7 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT min(doc_id) AS doc_id FROM kept GROUP BY md5(text)),
     reps_src AS (
         SELECT r.doc_id, k.source FROM reps r JOIN kept k USING (doc_id)),
-    g AS (
-        SELECT doc_id, unnest({_DUCK_GRAMS5}) AS gram
-        FROM documents WHERE len({_DUCK_WORDS}) >= {_NGRAM_N}),
-    bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0),
-    contaminated AS (
-        SELECT DISTINCT g.doc_id FROM g JOIN bench USING (gram)
-        WHERE g.doc_id % 10 <> 0),
+    {_DUCK_CONTAMINATED_CTES},
     final AS (
         SELECT doc_id, source FROM reps_src
         WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
@@ -417,24 +379,21 @@ def curation_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the stage tables compute the SAME semantics as
     corpus_curation_full, but the two branches that feed multiple
     downstream counts are materialized ONCE as compact digests
-    (VERDICT r4 #5 — the naive shape re-ran the quality filter 3× and
-    the 5-gram explode 2×): `kept_small` = (doc_id, md5(text), source)
+    (the naive shape re-ran the quality filter 3× and the 5-gram
+    explode 2×): `kept_small` = (doc_id, md5(text), source)
     after the quality gate — no raw text travels — feeds the n_quality
     count, the dedup groupBy, and the representative-source join;
-    `gh` = (doc_id, xxhash64(gram)) after one explode feeds both the
-    bench gram set and the contamination probe. Both are staged through
-    the env-gated ``staging.stage()`` (lazy — first consumer
-    materializes; O(rows × ~50 B) of digests, the multimodal
-    digests-only idiom), so the corpus text is scanned once per branch and the
-    explode CPU is paid once. Measured honestly at sf0.1 the wall-clock
+    `gram_hashes` = (doc_id, xxhash64(gram)) after one explode feeds
+    both the bench gram set and the contamination probe. Both are
+    staged through the env-gated ``staging.stage()`` (lazy — first
+    consumer materializes; O(rows × ~50 B) of digests), so the corpus
+    text is scanned once per branch and the explode CPU is paid once. Measured honestly at sf0.1 the wall-clock
     is a wash (~1.9 s either shape — stage-scheduling overhead
     dominates 5k docs), but the corpus-scan count drops 6 → 3 and the
     explode runs once instead of twice, which is what matters when the
     scan is 100 TB. Representative attribution: a duplicate cluster
     counts toward the source of its KEPT (min doc_id) representative,
     matching what actually ships."""
-    from .dedup import _GRAMS5_OF_W, _widen, _WORDS
-
     docs = load(spark, sf_dir, "documents")
     cand = docs.filter(F.col("doc_id") % 10 != 0)
     n_tokens = F.size(F.split(F.trim("text"), r"\s+"))
@@ -446,26 +405,7 @@ def curation_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id"))
     reps_src = reps.join(kept_small.select("doc_id", "source"), "doc_id")
-    gh = (_widen(docs)
-          .select("doc_id", F.expr(_WORDS).alias("w"))
-          .filter(F.size("w") >= _NGRAM_N)
-          .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))
-          .select("doc_id", F.xxhash64("gram").alias("gh"))
-          .transform(stage))
-    # r12: stage the distinct bench gram set (guide §2.4) — the
-    # broadcast build re-ran the gh scan + distinct per execution
-    # (exchange reuse cannot cross the broadcast boundary); the staged
-    # table is the decontamination family's bench-side digest, built
-    # once. The train-side distinct STAYS: it bounds the anti-join's
-    # right side (dropping it measured a wash locally, 0.293 vs 0.294,
-    # and risks an unbounded join side at scale). Measured 0.635 s ->
-    # 0.294 s warm at sf0.1 (min-of-7, interleaved); report rows
-    # identical; hash_match at 3 SFs.
-    bench_g = stage(gh.filter(F.col("doc_id") % 10 == 0)
-                    .select("gh").distinct())
-    contaminated = (gh.filter(F.col("doc_id") % 10 != 0)
-                    .join(F.broadcast(bench_g), "gh")
-                    .select("doc_id").distinct())
+    contaminated = contaminated_ids(gram_hashes(docs))
     final = reps_src.join(contaminated, "doc_id", "left_anti")
 
     def by_src(df: DataFrame, alias: str) -> DataFrame:

@@ -24,9 +24,9 @@ No SQL oracle for the LSH/SimHash paths (hash-permutation semantics are
 not expressible in DuckDB's function set); they get rows-only driver
 checks plus pytest ground-truth tests against planted duplicates.
 
-DIGEST STAGING / cluster resilience (VERDICT r5 #3): every multiply-
-consumed digest table in this module (shingle hashes, signatures,
-simhash chunks — 9 sites) is materialized through ``staging.stage()``,
+DIGEST STAGING / cluster resilience: every multiply-consumed digest
+table in this module (shingle hashes, signatures, band tables, simhash
+chunks, gram hashes) is materialized through ``staging.stage()``,
 because exchange reuse does not fire across a BroadcastExchange
 boundary and each consumer would otherwise re-run the digest pipeline.
 The default strategy is ``localCheckpoint(eager=False)`` — fastest, but
@@ -35,9 +35,17 @@ cluster, losing ONE executor (spot kill, dynamic-allocation idle reap)
 makes the checkpointed partitions unrecoverable and fails the job. Set
 ``SPARK_GRAFT_STAGING=persist`` on preemptible/dynamic clusters —
 MEMORY_AND_DISK keeps lineage, so lost blocks recompute instead of
-failing; values are identical in every mode (full-registry driver_sim
-sweep under persist, NOTES_r06). See ``staging.py`` for the full
-trade-off matrix, including ``none`` for plan audits.
+failing; values are identical in every mode. See ``staging.py`` for the
+full trade-off matrix, including ``none`` for plan audits.
+
+TEXT DIGESTS: how a document becomes a digest is defined once, here —
+the word split (``_WORDS``/``_DUCK_WORDS``), distinct word n-grams
+(``ngrams_of_w``/``duck_ngrams``/``ngram_arrays``), hashed shingles
+(``sized_shingle_hashes``), 5-gram hashes and the benchmark
+contamination sets (``gram_hashes``/``bench_grams``/
+``contaminated_ids``), and MinHash band keys and estimates
+(``minhash_bands``/``sig_agreement``). The curation, quality, graph,
+streaming and training-run modules build on these builders.
 
 PRECONDITION (whole module, and the similarity/kNN family): doc_id is a
 unique document identity. Digests (shingle sets, signatures, span
@@ -52,9 +60,9 @@ axis, tests/test_adversarial.py axis 9).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..datasets import load, shuffle_width
+from ..datasets import load, shuffle_width, widen_scan
 from ..functions.scalar import fround
 from ..queries import query
 from ..staging import stage
@@ -66,8 +74,8 @@ def _fanout(df: DataFrame, *cols: str) -> DataFrame:
     The similarity self-joins below expand a few MB of (doc_id, key) rows
     into millions of candidate pairs — tiny shuffle bytes, heavy CPU. AQE
     sizes partitions by shuffle bytes, so it coalesces these stages down
-    to ONE partition and serializes the whole pair-expansion (measured:
-    36.8 s → single task at sf0.1). An explicit numPartitions repartition
+    to ONE partition and serializes the whole pair-expansion (36.8 s in a
+    single task at sf0.1). An explicit numPartitions repartition
     (REPARTITION_BY_NUM) is exempt from AQE coalescing, pins the join
     stage's parallelism, and — being keyed on the join columns — lets
     Catalyst reuse a single exchange for both sides of the self-join, so
@@ -75,35 +83,6 @@ def _fanout(df: DataFrame, *cols: str) -> DataFrame:
     n = shuffle_width(df.sparkSession)
     return df.repartition(n, *[F.col(c) for c in cols])
 
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Ensure the expensive shingle/token map stage runs wide.
-
-    At 100 TB the parquet scan is split into ~128 MB tasks and this is a
-    no-op. On a small input (one file ⇒ one partition — exactly the local
-    bench) the whole interpreted-HOF shingle stage would otherwise run in
-    a single task; pay one linear row-shuffle to spread it. Keyed by
-    doc_id (not round-robin) so the output partitioning is deterministic.
-
-    Streaming frames pass through untouched: `.rdd` is illegal on them,
-    and a micro-batch's parallelism is the source's concern (e.g.
-    maxFilesPerTrigger), not a repartition's.
-
-    The width probe is `inputFiles()` — pure metadata, no RDD
-    conversion (the r2 `df.rdd.getNumPartitions()` probe forced a plan
-    analysis + Py4J round-trip per call). One file can split into many
-    tasks but never the reverse, so `files >= n` proves the scan is
-    already wide; fewer files (or a non-file frame, which reports [])
-    pays the one linear row-shuffle."""
-    if df.isStreaming:
-        return df
-    n = shuffle_width(df.sparkSession)
-    try:
-        if len(df.inputFiles()) >= n:
-            return df
-    except Exception:
-        pass
-    return df.repartition(n, F.col("doc_id"))
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy).
@@ -125,41 +104,55 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shingling shared by the similarity-dedup family: lowercase whitespace
-# words → 3-gram shingles, distinct per document. Pure HOF expressions.
+# Text digests: lowercase whitespace words → distinct word n-grams, distinct
+# per document. Pure HOF expressions; one Spark and one DuckDB form each.
 # --------------------------------------------------------------------------
 
 _WORDS = "split(lower(trim(text)), '\\\\s+')"
-# Shingles over a STAGED words column `w` — never inline _WORDS into the
-# lambda body: the lambda re-evaluates the split per element, turning the
-# per-doc cost O(tokens²) (measured 16× on repetition_ratio's identical
-# shape). The staging projections below survive CollapseProject because
-# each alias is non-cheap and referenced more than once.
-_SHINGLES_OF_W = (
-    "array_distinct(transform(sequence(1, size(w) - 2),"
-    " i -> concat_ws(' ', element_at(w, i),"
-    " element_at(w, i + 1), element_at(w, i + 2))))"
-)
+_DUCK_WORDS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
-def _shingle_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh_arr): distinct 3-gram shingle array per document;
-    documents with <3 words dropped. split() runs once per row."""
-    return (_widen(docs)
+def ngrams_of_w(n: int) -> str:
+    """Spark SQL for the distinct word n-grams of a STAGED words column
+    `w` (n >= 2). Never inline _WORDS into the lambda body: the lambda
+    re-evaluates the split per element, turning the per-doc cost
+    O(tokens²) (16× on repetition_ratio's identical shape). The staging
+    projections survive CollapseProject because each alias is non-cheap
+    and referenced more than once."""
+    words = ", ".join(["element_at(w, i)"]
+                      + [f"element_at(w, i + {k})" for k in range(1, n)])
+    return (f"array_distinct(transform(sequence(1, size(w) - {n - 1}),"
+            f" i -> concat_ws(' ', {words})))")
+
+
+def duck_ngrams(n: int) -> str:
+    """DuckDB twin of `ngrams_of_w` over the raw `text` column."""
+    words = " || ' ' || ".join([f"{_DUCK_WORDS}[i]"]
+                               + [f"{_DUCK_WORDS}[i+{k}]" for k in range(1, n)])
+    return (f"list_distinct(list_transform(range(1, len({_DUCK_WORDS})"
+            f" - {n - 2}), i -> {words}))")
+
+
+def ngram_arrays(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, grams): the distinct word n-gram array per document;
+    documents with < n words dropped. split() runs once per row, on a
+    widened scan (the HOF stage is the heavy per-row map)."""
+    return (widen_scan(docs, "doc_id")
             .select("doc_id", F.expr(_WORDS).alias("w"))
-            .filter(F.size("w") >= 3)
-            .select("doc_id", F.expr(_SHINGLES_OF_W).alias("sh_arr")))
+            .filter(F.size("w") >= n)
+            .select("doc_id", F.expr(ngrams_of_w(n)).alias("grams")))
 
 
 def shingle_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) distinct pairs; documents with <3 words dropped."""
-    return (_shingle_arrays(docs)
-            .select("doc_id", F.explode("sh_arr").alias("shingle")))
+    """(doc_id, shingle) distinct 3-gram pairs; documents with <3 words
+    dropped."""
+    return (ngram_arrays(docs, 3)
+            .select("doc_id", F.explode("grams").alias("shingle")))
 
 
 def sized_shingle_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, n, h): per-doc distinct-shingle count carried inline with
-    each 64-bit shingle hash.
+    each 64-bit shingle hash, fanned out on h and staged.
 
     Two deliberate scale moves: (a) the set size n is computed from the
     shingle ARRAY before exploding, so no separate sizes aggregation (and
@@ -167,20 +160,14 @@ def sized_shingle_hashes(docs: DataFrame) -> DataFrame:
     xxhash64(shingle), 8 bytes, instead of the ~25-byte shingle string —
     at 100 TB the shingle self-join's shuffle volume drops ~3× for a
     collision risk of ~(distinct shingles)²/2⁶⁴, which is negligible
-    against the LSH paths' intrinsic approximation."""
-    return (_shingle_arrays(docs)
-            .select("doc_id", F.size("sh_arr").alias("n"),
-                    F.explode("sh_arr").alias("shingle"))
-            .select("doc_id", "n", F.xxhash64("shingle").alias("h")))
-
-
-_DUCK_WORDS = "string_split_regex(lower(trim(text)), '\\s+')"
-# DuckDB 3-gram shingles via list lambda over start positions.
-_DUCK_SHINGLES = (
-    f"list_distinct(list_transform(range(1, len({_DUCK_WORDS}) - 1),"
-    f" i -> {_DUCK_WORDS}[i] || ' ' || {_DUCK_WORDS}[i+1]"
-    f" || ' ' || {_DUCK_WORDS}[i+2]))"
-)
+    against the LSH paths' intrinsic approximation. Both consumers
+    self-join it on h, so the table is staged: otherwise the self-join's
+    broadcast build side re-runs the whole tokenize+shingle pipeline."""
+    hashed = (ngram_arrays(docs, 3)
+              .select("doc_id", F.size("grams").alias("n"),
+                      F.explode("grams").alias("shingle"))
+              .select("doc_id", "n", F.xxhash64("shingle").alias("h")))
+    return _fanout(hashed, "h").transform(stage)
 
 
 # --------------------------------------------------------------------------
@@ -197,15 +184,8 @@ def _pair_jaccard(docs: DataFrame) -> DataFrame:
     inline (see sized_shingle_hashes) — |A∩B| is the per-pair match count
     and |A∪B| = n1 + n2 − |A∩B|, so the whole computation is join → agg,
     with no sizes re-join. Integer counts → the jaccard double is
-    bit-identical on both engines.
-
-    The hashed-shingle table is materialized once (lazy checkpoint of
-    (doc_id, n, h) digests): the self-join's broadcast build side
-    otherwise re-runs the whole tokenize+shingle pipeline — exchange
-    reuse does not fire across a BroadcastExchange boundary. Measured
-    1.41 s -> 0.90 s warm at sf0.1 (rebuilt-frame protocol); values
-    unchanged (the checkpoint is pure materialization)."""
-    sh = _fanout(sized_shingle_hashes(docs), "h").transform(stage)
+    bit-identical on both engines."""
+    sh = sized_shingle_hashes(docs)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (a.join(b, (F.col("a.h") == F.col("b.h"))
@@ -227,7 +207,7 @@ def _pair_jaccard(docs: DataFrame) -> DataFrame:
     scale_twin="ngram_jaccard_threshold_prefix",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle
+        SELECT doc_id, unnest({duck_ngrams(3)}) AS shingle
         FROM documents WHERE len({_DUCK_WORDS}) >= 3
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -306,6 +286,32 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
         F.array(*[F.col(f"s{i}") for i in range(NUM_PERM)]).alias("sig"))
 
 
+def minhash_bands(sigs: DataFrame, id_col: str, bands: int = BANDS,
+                  rows_per_band: int = ROWS_PER_BAND) -> DataFrame:
+    """(id_col, band, band_hash): one LSH band key per signature band —
+    the hash of `rows_per_band` consecutive components of `sig`. The one
+    band definition every batch and streaming MinHash path joins on.
+
+    Slim on purpose: carrying the 32-long sig through the band explosion
+    and the candidate join would multiply shuffle volume by ~2 KB/doc,
+    so callers re-attach signatures per candidate pair instead."""
+    return sigs.select(
+        F.col("doc_id").alias(id_col),
+        F.posexplode(F.expr(
+            f"transform(sequence(0, {bands - 1}),"
+            f" b -> hash(slice(sig, b * {rows_per_band} + 1,"
+            f" {rows_per_band})))"))
+        .alias("band", "band_hash"))
+
+
+def sig_agreement(sig1: Column, sig2: Column) -> Column:
+    """Fraction of agreeing signature components — the MinHash estimate
+    of the two documents' shingle Jaccard."""
+    matches = F.size(F.filter(F.zip_with(sig1, sig2, lambda x, y: x == y),
+                              lambda v: v))
+    return matches / F.lit(NUM_PERM).cast("double")
+
+
 # LSH skew guard: a bucket of m docs yields m(m-1)/2 candidate pairs, so
 # one adversarial bucket (boilerplate/templated text all agreeing on a
 # band) turns the linear banding plan quadratic. Buckets above this
@@ -326,7 +332,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); only same-bucket docs are joined. est_jaccard = fraction of
     agreeing signature components; pairs below 0.5 are dropped.
 
-    Recall contract (measured r8/r9, RECALL_r09.json): 8 bands x 4 rows
+    Recall contract (measured by recall_referee.py): 8 bands x 4 rows
     puts the banding s-curve's midpoint at (1/b)^(1/r) = 0.595 ~=
     JACCARD_T — the textbook operating point for t=0.6 (MMDS ch.3),
     which means recall at exactly J=t is definitionally ~0.67 for ANY
@@ -334,11 +340,11 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     J>=0.9. The HARD contract is the J>=0.8 bands: measured recall 1.0
     at every tier (sf1 27/27 + 271/271; sf10-docs 2/2 + 86/86), suite
     floor >= 0.9. Below J=0.8 the s-curve is not an expected LOWER
-    bound (ADVICE r8 #1): the est-Jaccard >= 0.5 output cutoff drops
+    bound: the est-Jaccard >= 0.5 output cutoff drops
     co-bucketed pairs whose 32-sample estimate reads under 0.5 — a
     loss the banding model omits — so measured sits near theory within
     binomial noise, judged by per-band Wilson 95% CIs in the referee
-    (r8 spread: sf10 [0.6,0.7) 0.857 ABOVE theory 0.740, sf10
+    (measured spread: sf10 [0.6,0.7) 0.857 ABOVE theory 0.740, sf10
     [0.7,0.8) 0.75 on n=16 vs theory 0.933 — CI [0.51,0.90], the
     cutoff + noise, not a banding bug; sf1 aggregate 0.88 because 46%
     of truth pairs sit in [0.6,0.7) where the s-curve pays its
@@ -354,8 +360,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_banding_pairs(spark, sf_dir, BANDS, ROWS_PER_BAND)
 
 
-# The measured high-recall banding split (r11 triage, RECALL_r11 +
-# recall_referee.py): 16 bands x 2 rows over the SAME 32-perm signatures.
+# The measured high-recall banding split (recall_referee.py): 16 bands x 2
+# rows over the SAME 32-perm signatures.
 HR_BANDS = 16
 HR_ROWS_PER_BAND = NUM_PERM // HR_BANDS
 
@@ -368,8 +374,8 @@ def minhash_lsh_pairs_highrecall(spark: SparkSession, sf_dir: str
     shingles, same permutations, same est-Jaccard >= 0.5 output cutoff
     — only the band/row split changes).
 
-    Why it exists as registered product surface (VERDICT r11 #5): the
-    r11 [0.7,0.8)-band triage measured, on the same signatures at
+    Why it exists as registered product surface: a [0.7,0.8)-band
+    triage measured, on the same signatures at
     sf10-docs (500k docs), that the 16x2 split lifts band recall
     0.75 -> 1.0 in [0.7,0.8) and 0.85 -> 0.94 in [0.6,0.7), at a 63x
     candidate-volume cost (474k -> 29.8M candidate pairs). That is
@@ -377,7 +383,7 @@ def minhash_lsh_pairs_highrecall(spark: SparkSession, sf_dir: str
     the s-curve midpoint (1/b)^(1/r) drops from 0.595 to 0.25, so far
     more sub-threshold pairs co-bucket and the est-cutoff does the
     precision work. Keeping it registered (instead of a docstring
-    constant) makes the knob driver-checked every round and lets the
+    constant) keeps the knob driver-checked and lets the
     recall referee publish its per-band panel next to the default's
     (recall_referee.py measures BOTH against the same sampled GT).
 
@@ -393,43 +399,24 @@ def _lsh_banding_pairs(spark: SparkSession, sf_dir: str,
     (the only degree of freedom between the registered default and the
     high-recall twin). See `minhash_lsh_pairs` for the plan notes."""
     docs = load(spark, sf_dir, "documents")
-    # Materialize the signature table ONCE (lazy checkpoint): three
-    # branches consume it (the band table + both per-pair re-attach
-    # joins), and exchange reuse does not fire across the self-join's
-    # BroadcastExchange boundary, so without the checkpoint the full
-    # tokenize+minhash pipeline ran up to twice more. (doc_id, sig) is
-    # ~260 B/doc of digests — the digest-checkpoint idiom. Measured
-    # 1.46 s -> 0.93 s warm at sf0.1 (rebuilt-frame protocol).
+    # Staged: three branches consume the signatures (the band table and
+    # both per-pair re-attach joins), and exchange reuse does not fire
+    # across the self-join's BroadcastExchange boundary, so without it
+    # the full tokenize+minhash pipeline ran up to twice more. (doc_id,
+    # sig) is ~260 B/doc of digests.
     sigs = minhash_signatures(docs).transform(stage)
-    # Slim band table: doc_id + band key ONLY. Carrying the 32-long sig
-    # through the 8× band explosion and the candidate join would multiply
-    # shuffle volume by ~2 KB/doc; instead signatures are re-attached per
-    # candidate pair below off the shared checkpoint.
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, {bands_n - 1}),"
-            f" b -> hash(slice(sig, b * {rows_per_band} + 1,"
-            f" {rows_per_band})))"))
-        .alias("band", "band_hash"),
-    )
-    bands = _fanout(bands, "band", "band_hash")
+    bands = _fanout(minhash_bands(sigs, "doc_id", bands_n, rows_per_band),
+                    "band", "band_hash")
     bucket_w = Window.partitionBy("band", "band_hash")
     bands = (bands
              .withColumn("bucket_n", F.count(F.lit(1)).over(bucket_w))
              .filter(F.col("bucket_n") <= MAX_BUCKET)
              .drop("bucket_n"))
-    # r12 optimization: stage the guarded band table. The self-join's
-    # small side goes through a BroadcastExchange, and exchange reuse
-    # does NOT fire across a broadcast boundary (the same reason the
-    # signature table above is staged), so _fanout's shared-exchange
-    # intent was defeated: the plan ran Generate→Exchange→Sort→Window
-    # TWICE, once per join side (plans/r12/minhash_lsh_pairs_before.txt,
-    # branches 1-7 vs 8-14). Staging materializes the banding + skew
-    # guard once; both sides scan the checkpoint. Measured 0.721 s ->
-    # 0.384 s warm at sf0.1 (min-of-7, interleaved); rows identical.
-    # Same digest-size argument as the signature checkpoint: (doc_id,
-    # band, band_hash) ≈ 20 B/row × bands_n — write-time layout at scale.
+    # Staged too: the self-join's small side goes through a
+    # BroadcastExchange, so _fanout's shared exchange would not be reused
+    # and the plan would run Generate→Exchange→Sort→Window once per join
+    # side. (doc_id, band, band_hash) is ≈ 20 B/row × bands_n — write-time
+    # layout at scale.
     bands = stage(bands)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -443,14 +430,10 @@ def _lsh_banding_pairs(spark: SparkSession, sf_dir: str,
     # pre-renamed projections: both attach joins then share a canonically
     # identical `sigs` subtree, so the broadcast exchange is built once
     # and reused (pre-renaming made the subtrees differ and re-computed
-    # the whole signature pipeline per side — measured 4.7 s of the
-    # query's 6 s at sf0.1).
+    # the whole signature pipeline per side).
     s1 = sigs.alias("s1")
     s2 = sigs.alias("s2")
-    matches = F.size(F.filter(
-        F.zip_with(F.col("s1.sig"), F.col("s2.sig"), lambda x, y: x == y),
-        lambda v: v))
-    est = matches / F.lit(NUM_PERM).cast("double")
+    est = sig_agreement(F.col("s1.sig"), F.col("s2.sig"))
     return (cand.join(s1, F.col("doc1") == F.col("s1.doc_id"))
             .join(s2, F.col("doc2") == F.col("s2.doc_id"))
             .select("doc1", "doc2", fround(est, 4).alias("est_jaccard"))
@@ -470,10 +453,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint). Per-token xxhash64; bit i of the signature
     is the sign of Σ_tokens (±count) for that bit. 64 conditional-sum
     aggregates in one hash-aggregate pass."""
-    tokens = (_widen(docs)
-              .select("doc_id",
-                      F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                      .alias("tok"))
+    tokens = (widen_scan(docs, "doc_id")
+              .select("doc_id", F.explode(F.expr(_WORDS)).alias("tok"))
               .filter(F.col("tok") != "")
               .groupBy("doc_id", "tok")
               .agg(F.count(F.lit(1)).alias("cnt"))
@@ -501,14 +482,14 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     such pair agrees exactly on at least one of 4 16-bit chunks — the
     chunk-equality join is the candidate filter (no quadratic scan).
 
-    Semantics note (measured r8, RECALL_r08.json): Hamming ≤ 3 on a
+    Semantics note (measured by recall_referee.py): Hamming ≤ 3 on a
     64-bit profile is a NEAR-EXACT duplicate detector (Charikar'02 /
     Manku et al. WWW'07 use it for crawl near-dups), not a
     Jaccard-threshold scan — vs the exact J≥0.6 truth set it recovers
     ~0.67 of J≥0.9 pairs and almost nothing below 0.8 at sf1/sf10-docs.
     For threshold-Jaccard dedup use minhash_lsh_pairs; simhash's niche
     is boilerplate/template pages with tiny edits, at about half
-    minhash's cost (8.1 s vs 14.0 s at 500k docs, TWIN_BENCH_r07)."""
+    minhash's cost (8.1 s vs 14.0 s at 500k docs)."""
     docs = load(spark, sf_dir, "documents")
     sigs = simhash_signatures(docs)
     chunks = sigs.select(
@@ -518,8 +499,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             " c -> (simhash >> (c * 16)) & 65535)")).alias("chunk", "ckey"),
     )
     chunks = _fanout(chunks, "chunk", "ckey")
-    # Same skew guard as minhash_lsh_pairs (closed r5 — this path had
-    # none): m identical docs share ALL four chunks, so one boilerplate
+    # Same skew guard as minhash_lsh_pairs: m identical docs share ALL four chunks, so one boilerplate
     # mega-cluster costs 4·m(m-1)/2 candidate rows. The window count
     # partitions on the join key, so the guard reuses the _fanout
     # exchange — zero extra shuffles. Recall impact mirrors minhash's:
@@ -531,13 +511,11 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("bucket_n", F.count(F.lit(1)).over(bucket_w))
               .filter(F.col("bucket_n") <= MAX_BUCKET)
               .drop("bucket_n"))
-    # Materialize the guarded chunk table ONCE (lazy checkpoint): the
-    # self-join's broadcast build side otherwise recomputes the whole
-    # signature pipeline (two full tokenize+64-bitsum passes — exchange
-    # reuse does not fire across the BroadcastExchange boundary).
-    # The table is 4 rows/doc x ~24 B of (doc_id, simhash, chunk, ckey)
-    # digests — the attrition-report digest-checkpoint idiom. Measured
-    # 1.44 s -> 0.68 s warm at sf0.1.
+    # Staged: the self-join's broadcast build side otherwise recomputes
+    # the whole signature pipeline (two full tokenize+64-bitsum passes —
+    # exchange reuse does not fire across the BroadcastExchange
+    # boundary). The table is 4 rows/doc x ~24 B of (doc_id, simhash,
+    # chunk, ckey) digests.
     chunks = chunks.transform(stage)
     a = chunks.alias("a")
     b = chunks.alias("b")
@@ -568,7 +546,7 @@ JACCARD_T = 0.6
     scale_twin="ngram_jaccard_threshold_prefix",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle
+        SELECT doc_id, unnest({duck_ngrams(3)}) AS shingle
         FROM documents WHERE len({_DUCK_WORDS}) >= 3
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -608,7 +586,7 @@ def ngram_jaccard_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ngram_jaccard_threshold_prefix",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle
+        SELECT doc_id, unnest({duck_ngrams(3)}) AS shingle
         FROM documents WHERE len({_DUCK_WORDS}) >= 3
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -635,7 +613,7 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
     corpora, where pairs sharing ≥1 shingle vastly outnumber pairs with
     J ≥ t and the full shared-shingle join is quadratic-ish.
 
-    Regime boundary (measured r7, TWIN_BENCH_r07.json): prefix
+    Regime boundary (measured on the sf10-docs tier): prefix
     filtering's pruning power comes from the RARE end of the shingle
     frequency spectrum. On a shingle-SATURATED corpus — distinct
     shingles stop growing while the corpus grows, so every shingle's
@@ -669,13 +647,12 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
        candidates ≪ corpus.
     """
     docs = load(spark, sf_dir, "documents")
-    # Digest checkpoints (r5, same rationale as _pair_jaccard): `sh`
-    # feeds the frequency aggregate AND the freq re-join; `docsets`
-    # feeds the prefix explode AND both verification attach joins —
-    # without materialization the shingle pipeline re-ran per consumer
-    # (broadcast boundaries defeat exchange reuse). Measured
-    # 3.85 s -> 2.33 s warm at sf0.1, values unchanged.
-    sh = _fanout(sized_shingle_hashes(docs), "h").transform(stage)
+    # Both digests are staged: `sh` feeds the frequency aggregate AND the
+    # freq re-join; `docsets` feeds the prefix explode AND both
+    # verification attach joins — without materialization the shingle
+    # pipeline re-ran per consumer (broadcast boundaries defeat exchange
+    # reuse).
+    sh = sized_shingle_hashes(docs)
     freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("freq"))
     plen = (F.col("n") - F.ceil(F.lit(JACCARD_T) * F.col("n"))
             + F.lit(1)).cast("int")
@@ -691,17 +668,16 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
                    F.transform(F.slice("by_freq", F.lit(1), plen),
                                lambda x: x["h"]).alias("pref"))
                .transform(stage))
-    # r12: carry n through the prefix explode and apply the AllPairs
-    # LENGTH filter inside the candidate join (guide §3.2 "reduce before
-    # you shuffle/verify"): J(A,B) = |∩|/|∪| <= min(n1,n2)/max(n1,n2),
-    # so J >= t requires t*n1 <= n2 AND t*n2 <= n1 — pairs of very
+    # Carry n through the prefix explode and apply the AllPairs LENGTH
+    # filter inside the candidate join ("reduce before you
+    # shuffle/verify"): J(A,B) = |∩|/|∪| <= min(n1,n2)/max(n1,n2), so
+    # J >= t requires t*n1 <= n2 AND t*n2 <= n1 — pairs of very
     # different sizes are pruned BEFORE the dedup aggregate and the two
-    # verification joins, for one extra int per prefix row. Candidates
-    # 299,377 -> 193,148 at sf0.1; rows verified identical (256 pairs);
-    # 2.42 s -> 1.56 s warm (min-of-7, interleaved).
+    # verification joins, for one extra int per prefix row (candidates
+    # 299,377 -> 193,148 at sf0.1).
     #
-    # r13: PPJoin's POSITIONAL filter on top (guide §3.2 again — same
-    # principle, sharper bound). A collision at 1-based prefix positions
+    # PPJoin's POSITIONAL filter on top (same principle, sharper bound).
+    # A collision at 1-based prefix positions
     # (p1, p2) bounds the overlap: every common token sits at position
     # >= p1 in doc1's frequency-sorted set and >= p2 in doc2's, so
     # |∩| <= 1 + min(n1-p1, n2-p2); and J >= t forces
@@ -710,8 +686,7 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
     # collision rows survives, and verification recomputes exact
     # Jaccard from the full sets anyway. One more int per prefix row;
     # candidates 193,148 -> 68,594 at sf0.1 (2.8x less dedup/verify
-    # volume); rows identical (256 pairs); 0.785 -> 0.748 s warm
-    # (min-of-7, interleaved, 6/7 paired reps below).
+    # volume).
     prefix = _fanout(
         docsets.select("doc_id", "n",
                        F.posexplode("pref").alias("p0", "h"))
@@ -728,14 +703,12 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
             .select(F.col("a.doc_id").alias("doc1"),
                     F.col("b.doc_id").alias("doc2"))
             .dropDuplicates(["doc1", "doc2"]))
-    # r12 (guide §2.5, the ann_batch_topk coalesce fix): AQE coalesces
-    # the few-MB deduped candidate set to ONE partition, so ~193k
-    # array_intersect verifications ran serially behind it. Repartition
-    # the 16 B/row (doc1, doc2) pairs to the configured width before the
-    # verification joins — at scale this narrow exchange stands exactly
-    # where the attach join's own doc1 shuffle would be (and is reused
-    # by it). Measured 1.593 s -> 0.821 s warm at sf0.1 (min-of-7,
-    # interleaved); 256 rows identical; hash_match at 3 SFs.
+    # AQE coalesces the few-MB deduped candidate set to ONE partition,
+    # so the array_intersect verifications would run serially behind it.
+    # Repartition the 16 B/row (doc1, doc2) pairs to the configured width
+    # before the verification joins — at scale this narrow exchange
+    # stands exactly where the attach join's own doc1 shuffle would be
+    # (and is reused by it).
     cand = cand.repartition(shuffle_width(docs.sparkSession),
                             F.col("doc1"))
     s1, s2 = docsets.alias("s1"), docsets.alias("s2")
@@ -763,30 +736,6 @@ def ngram_jaccard_threshold_prefix(spark: SparkSession,
 # benchmark's shingle/signature table broadcasts and the train side never
 # shuffles at all — detection is a map-side join over the train scan.
 # --------------------------------------------------------------------------
-
-def cross_set_jaccard(train: DataFrame, bench: DataFrame,
-                      threshold: float = JACCARD_T) -> DataFrame:
-    """(train doc_id, bench doc_id, exact jaccard) for every cross pair
-    with J >= threshold — shared-shingle equi-join between two genuinely
-    distinct document tables (no a<b constraint needed: the sets are
-    disjoint by construction)."""
-    a = _fanout(sized_shingle_hashes(train), "h").select(
-        F.col("doc_id").alias("train_id"), F.col("n").alias("n1"), "h")
-    b = _fanout(sized_shingle_hashes(bench), "h").select(
-        F.col("doc_id").alias("bench_id"), F.col("n").alias("n2"), "h")
-    return _cross_jaccard_from_sides(a, b, threshold)
-
-
-def _cross_jaccard_from_sides(a: DataFrame, b: DataFrame,
-                              threshold: float) -> DataFrame:
-    inter = (a.join(b, "h")
-             .groupBy("train_id", "bench_id", "n1", "n2")
-             .agg(F.count(F.lit(1)).alias("inter_cnt")))
-    jac = (F.col("inter_cnt").cast("double")
-           / (F.col("n1") + F.col("n2") - F.col("inter_cnt")))
-    return (inter.filter(jac >= threshold)
-            .select("train_id", "bench_id", fround(jac, 6).alias("jaccard")))
-
 
 def cross_set_jaccard_split(docs: DataFrame, bench_pred,
                             threshold: float = JACCARD_T) -> DataFrame:
@@ -825,7 +774,7 @@ def _split_docs(docs: DataFrame):
     "decontaminate_exact",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle
+        SELECT doc_id, unnest({duck_ngrams(3)}) AS shingle
         FROM documents WHERE len({_DUCK_WORDS}) >= 3
     ),
     sized AS (
@@ -872,40 +821,23 @@ def decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the opposite of what decontamination is for."""
     train, bench = _split_docs(load(spark, sf_dir, "documents"))
 
-    def bands_of(sigs: DataFrame, id_alias: str) -> DataFrame:
-        return sigs.select(
-            F.col("doc_id").alias(id_alias),
-            F.posexplode(F.expr(
-                f"transform(sequence(0, {BANDS - 1}),"
-                f" b -> hash(slice(sig, b * {ROWS_PER_BAND} + 1,"
-                f" {ROWS_PER_BAND})))"))
-            .alias("band", "band_hash"))
-
     # Each signature table feeds its band explode AND a per-pair
-    # re-attach join — checkpoint once, same rationale (and measured
-    # shape) as minhash_lsh_pairs.
+    # re-attach join — staged once, same rationale as minhash_lsh_pairs.
     tsig = minhash_signatures(train).transform(stage)
     bsig = minhash_signatures(bench).transform(stage)
-    # Stage the BENCH-side band table too (r13, VERDICT r12 #4 — the
-    # broadcast-boundary defect's fifth sighting): the band explode over
-    # bsig sits behind a BroadcastExchange, so exchange reuse never
-    # fires and every execution re-ran the banding from the staged
-    # signatures. The digest is benchmark-bounded (|bench| x BANDS
-    # rows of 16 B), exactly the write-time layout the minhash staging
-    # promises. The TRAIN side stays live: its banding is map-side work
+    # The BENCH-side band table is staged too: the band explode over bsig
+    # sits behind a BroadcastExchange, so exchange reuse never fires and
+    # every execution would re-run the banding from the staged
+    # signatures. The digest is benchmark-bounded (|bench| x BANDS rows
+    # of 16 B). The TRAIN side stays live: its banding is map-side work
     # feeding _fanout's shuffle and never re-executes within a run.
-    # Interleaved A/B at sf0.1: 0.447 -> 0.430 s warm (min-of-7, staged
-    # below current in 6/7 paired reps); rows identical (47 pairs).
-    cand = (_fanout(bands_of(tsig, "train_id"), "band", "band_hash")
-            .join(F.broadcast(stage(bands_of(bsig, "bench_id"))),
+    cand = (_fanout(minhash_bands(tsig, "train_id"), "band", "band_hash")
+            .join(F.broadcast(stage(minhash_bands(bsig, "bench_id"))),
                   ["band", "band_hash"])
             .select("train_id", "bench_id")
             .dropDuplicates(["train_id", "bench_id"]))
     s1, s2 = tsig.alias("s1"), bsig.alias("s2")
-    matches = F.size(F.filter(
-        F.zip_with(F.col("s1.sig"), F.col("s2.sig"), lambda x, y: x == y),
-        lambda v: v))
-    est = matches / F.lit(NUM_PERM).cast("double")
+    est = sig_agreement(F.col("s1.sig"), F.col("s2.sig"))
     return (cand.join(s1, F.col("train_id") == F.col("s1.doc_id"))
             .join(F.broadcast(s2), F.col("bench_id") == F.col("s2.doc_id"))
             .select("train_id", "bench_id", fround(est, 4).alias("est_jaccard"))
@@ -922,16 +854,16 @@ def rowwise_minhash_sig(docs: DataFrame) -> DataFrame:
     The batch path keeps the groupBy form because partial-aggregate min()
     is codegen while HOF lambdas are interpreted; the shingle and hash
     arrays are staged through projections so each is computed once per
-    row (the r2 shape inlined them per permutation — 16 recomputes of
-    the shingle hash array per doc on top of the per-element split)."""
+    row (inlined per permutation they were recomputed 16 times per doc,
+    on top of the per-element split)."""
     sig = F.array(*[
         F.expr(f"array_min(transform(harr,"
                f" h -> ({a}L * h + {b}L) % {_MERSENNE_P}L))")
         for a, b in PERMS
     ])
-    return (_shingle_arrays(docs)
+    return (ngram_arrays(docs, 3)
             .select("doc_id",
-                    F.expr(f"transform(sh_arr,"
+                    F.expr(f"transform(grams,"
                            f" s -> xxhash64(s) & {_MASK32}L)").alias("harr"))
             .select("doc_id", sig.alias("sig")))
 
@@ -947,28 +879,59 @@ def rowwise_minhash_sig(docs: DataFrame) -> DataFrame:
 
 _NGRAM_N = 5  # GPT-3 used 13-grams; the synthetic docs are short
 
-_GRAMS5_OF_W = (
-    "array_distinct(transform(sequence(1, size(w) - 4),"
-    " i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1),"
-    " element_at(w, i + 2), element_at(w, i + 3), element_at(w, i + 4))))"
-)
 
-_DUCK_GRAMS5 = (
-    f"list_distinct(list_transform(range(1, len({_DUCK_WORDS}) - 3),"
-    f" i -> {_DUCK_WORDS}[i] || ' ' || {_DUCK_WORDS}[i+1]"
-    f" || ' ' || {_DUCK_WORDS}[i+2] || ' ' || {_DUCK_WORDS}[i+3]"
-    f" || ' ' || {_DUCK_WORDS}[i+4]))"
-)
+def gram_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, gh): xxhash64 of every distinct word 5-gram of every
+    document, staged. The benchmark and train sides are disjoint filters
+    of this one explode, so its 8-byte digests are materialized once
+    instead of exploding the corpus per branch."""
+    return (ngram_arrays(docs, _NGRAM_N)
+            .select("doc_id", F.explode("grams").alias("gram"))
+            .select("doc_id", F.xxhash64("gram").alias("gh"))
+            .transform(stage))
+
+
+def bench_grams(gh: DataFrame) -> DataFrame:
+    """The benchmark split's distinct gram hashes, staged: the set is
+    the broadcast build side of every contamination probe, and exchange
+    reuse cannot cross the broadcast boundary, so unstaged it would
+    re-run the gh scan + distinct per execution. Bounded by the
+    benchmark corpus."""
+    _, bench = _split_docs(gh)
+    return stage(bench.select("gh").distinct())
+
+
+def contaminated_ids(gh: DataFrame) -> DataFrame:
+    """(doc_id): the distinct train documents sharing >= 1 5-gram with
+    the benchmark split. The train-side distinct stays: it bounds the
+    right side of the anti-join that drops these documents. The probe is
+    a left-semi join, which the staged (opaque) bench set no longer lets
+    the optimizer infer from its distinctness: as an inner join its size
+    estimate is a product of both sides, and the anti-join downstream
+    would plan as a sort-merge join."""
+    train, _ = _split_docs(gh)
+    return (train.join(F.broadcast(bench_grams(gh)), "gh", "left_semi")
+            .select("doc_id").distinct())
+
+
+# DuckDB twins of gram_hashes + bench_grams (the `g` and `bench` CTEs)
+# and of contaminated_ids (the `contaminated` CTE).
+_DUCK_BENCH_GRAM_CTES = f"""g AS (
+        SELECT doc_id, unnest({duck_ngrams(_NGRAM_N)}) AS gram
+        FROM documents WHERE len({_DUCK_WORDS}) >= {_NGRAM_N}
+    ),
+    bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0)"""
+_DUCK_CONTAMINATED_CTES = _DUCK_BENCH_GRAM_CTES + """,
+    contaminated AS (
+        SELECT DISTINCT g.doc_id FROM g JOIN bench USING (gram)
+        WHERE g.doc_id % 10 <> 0
+    )"""
 
 
 @query(
     "decontaminate_ngram_hit",
     oracle=f"""
-    WITH g AS (
-        SELECT doc_id, unnest({_DUCK_GRAMS5}) AS gram
-        FROM documents WHERE len({_DUCK_WORDS}) >= {_NGRAM_N}
-    ),
-    bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0)
+    WITH {_DUCK_BENCH_GRAM_CTES}
     SELECT g.doc_id AS train_id, count(DISTINCT g.gram) AS hit_ngrams
     FROM g JOIN bench USING (gram)
     WHERE g.doc_id % 10 <> 0
@@ -984,25 +947,14 @@ def decontaminate_ngram_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-gram table is bounded by the benchmark corpus (10^4-10^6
     docs), hashed to 8-byte keys and BROADCAST — the train side is a
     map-side hash probe over the scan, never shuffled for the join; the
-    only exchange is the per-doc count of the (tiny) hit set. Gram
-    staging runs once per branch off a shared exchange (the doc_id%10
-    split predicates push to the two scans). At 100 TB the bench gram
+    only exchange is the per-doc count of the (tiny) hit set. Both
+    branches filter the one staged gram digest (gram_hashes). At 100 TB the bench gram
     set outgrowing the broadcast ceiling is the signal to switch to a
     bloom-filter pre-probe + shuffled semi-join — same answer, one more
     exchange."""
-    docs = load(spark, sf_dir, "documents")
-    # Digest checkpoint (r5): bench and train are disjoint filters of
-    # one 5-gram explode — materialize its (doc_id, hash) digests once
-    # instead of exploding the corpus per branch (the attrition idiom).
-    gh = (_widen(docs)
-          .select("doc_id", F.expr(_WORDS).alias("w"))
-          .filter(F.size("w") >= _NGRAM_N)
-          .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))
-          .select("doc_id", F.xxhash64("gram").alias("gh"))
-          .transform(stage))
-    bench = gh.filter(F.col("doc_id") % 10 == 0).select("gh").distinct()
-    train = gh.filter(F.col("doc_id") % 10 != 0)
-    return (train.join(F.broadcast(bench), "gh")
+    gh = gram_hashes(load(spark, sf_dir, "documents"))
+    train, _ = _split_docs(gh)
+    return (train.join(F.broadcast(bench_grams(gh)), "gh")
             .groupBy(F.col("doc_id").alias("train_id"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("hit_ngrams")))
 
@@ -1020,7 +972,7 @@ def decontaminate_ngram_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SPAN_W = 10
 # Windows over a STAGED words column `w` (same staging rule as
-# _SHINGLES_OF_W): (pos, md5-of-window) structs. md5, not xxhash64, so
+# ngrams_of_w): (pos, md5-of-window) structs. md5, not xxhash64, so
 # the DuckDB oracle computes identical keys; the 100 TB swap is
 # xxhash64 (8-byte shuffle keys, ~4x smaller than the hex digest) once
 # cross-engine parity is no longer the contract.
@@ -1054,9 +1006,8 @@ def _span_frames(docs: DataFrame):
     the digest checkpoints elsewhere in this module this materializes
     the TOKENIZED CORPUS (~text-sized on executor storage, not a
     digest) — the standard tokenized-intermediate tradeoff: storage
-    ~doubles during the query, each downstream pass saves a scan+split.
-    Measured 1.33 -> 1.06 s warm for trim at sf0.1."""
-    base = (_widen(docs)
+    ~doubles during the query, each downstream pass saves a scan+split."""
+    base = (widen_scan(docs, "doc_id")
             .select("doc_id", F.expr(_WORDS).alias("w"))
             .transform(stage))
     wins = (base.filter(F.size("w") >= _SPAN_W)
@@ -1186,26 +1137,24 @@ def dup_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserves one copy of legitimately repeated passages — the
     dedup_keep_best decision at sub-document granularity.
 
-    Plan (r12 rewrite, guide §8 "decide with small rows, move big rows
-    once"): windows explode once (window-form count + min over the SAME
-    wh partition — one shuffle+sort serves both the duplicate decision
-    and the canonical choice); non-canonical windows expand to their
-    covered token positions (bounded x{_SPAN_W} fanout of the
-    DUPLICATED subset only) and aggregate to ONE cut-position ARRAY per
-    affected doc — pure int metadata, bounded by the doc's own length.
-    The rebuild then joins that tiny table back to the staged words
-    array and drops cut positions with an indexed array `filter` HOF:
-    the corpus tokens never explode and never shuffle (the pre-r12
-    shape posexploded every token, anti-joined on (doc_id, pos), and
-    re-assembled docs through a collect_list aggregate — shuffling the
-    token payload to decide with int positions). AQE broadcasts the cut
-    table (no hint: if the duplicated set ever outgrows the broadcast
-    ceiling the join degrades to ONE corpus-array shuffle, still
-    strictly less than the old explode+rebuild). Measured 0.890 s ->
-    0.623 s warm at sf0.1 (min-of-7, interleaved); rows verified
-    identical and hash_match at 3 SFs. Canonical key packs
-    (doc_id, pos) as doc_id*2^32+pos — exact while docs stay under
-    4.3e9 tokens, which the Gopher-style length gates upstream
+    Plan ("decide with small rows, move big rows once"): windows
+    explode once (window-form count + min over the SAME wh partition —
+    one shuffle+sort serves both the duplicate decision and the
+    canonical choice); non-canonical windows expand to their covered
+    token positions (bounded x{_SPAN_W} fanout of the DUPLICATED subset
+    only) and aggregate to ONE cut-position ARRAY per affected doc —
+    pure int metadata, bounded by the doc's own length. The rebuild then
+    joins that tiny table back to the staged words array and drops cut
+    positions with an indexed array `filter` HOF: the corpus tokens
+    never explode and never shuffle (posexploding every token,
+    anti-joining on (doc_id, pos) and re-assembling docs through a
+    collect_list aggregate would shuffle the token payload to decide
+    with int positions). AQE broadcasts the cut table (no hint: if the
+    duplicated set ever outgrows the broadcast ceiling the join degrades
+    to ONE corpus-array shuffle, still strictly less than an
+    explode+rebuild). Canonical key packs (doc_id, pos) as
+    doc_id*2^32+pos — exact while docs stay under 4.3e9 tokens, which
+    the Gopher-style length gates upstream
     guarantee."""
     base, wins = _span_frames(load(spark, sf_dir, "documents"))
     key = F.col("doc_id") * F.lit(4294967296) + F.col("pos")

@@ -21,7 +21,7 @@ driver-side `.count()` per round is a scalar convergence probe, not a
 data collect.
 
 These loop checkpoints are deliberately NOT routed through the
-env-gated `staging.stage()` (VERDICT r5 #3): the loops NEED lineage
+env-gated `staging.stage()`: the loops NEED lineage
 truncation — under persist the plan would deepen every round and the
 fixpoint's analysis cost would explode. The executor-loss exposure is
 therefore accepted here and bounded: each round's state is a K-row
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..datasets import load, session_cache
 from ..queries import query
-from .dedup import _DUCK_SHINGLES, _DUCK_WORDS, JACCARD_T
+from .dedup import _DUCK_WORDS, JACCARD_T, duck_ngrams
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
@@ -123,7 +123,7 @@ def _cached_clusters(spark: SparkSession, sf_dir: str, cc) -> DataFrame:
 
 # Shared recursive-CTE oracle prefix: exact-Jaccard edges (J >= 0.6)
 # over 3-gram shingles -> symmetric closure -> transitive reachability.
-# Split at the edge list (VERDICT r6 #2): _DUCK_EDGE_CTES is the
+# Split at the edge list: _DUCK_EDGE_CTES is the
 # polynomial part (shingle self-join), reusable by the driver_sim
 # union-find referee; the recursive `reach` closure appended below is
 # what explodes at sf>=1 (~26 min per sibling query at sf1 for ~25 s of
@@ -132,7 +132,7 @@ def _cached_clusters(spark: SparkSession, sf_dir: str, cc) -> DataFrame:
 _DUCK_EDGE_CTES = f"""
     WITH RECURSIVE
     sh AS (
-        SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle
+        SELECT doc_id, unnest({duck_ngrams(3)}) AS shingle
         FROM documents WHERE len({_DUCK_WORDS}) >= 3
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),

@@ -78,14 +78,6 @@ def fake_decode_batches(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataF
         })
 
 
-def real_decode_batches(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """Placeholder for codec-backed decode; libraries absent in this
-    environment."""
-    raise NotImplementedError(
-        "real media decode requires PIL/librosa/ffmpeg — not available in "
-        "this container; use fake_decode_batches (same plumbing)")
-
-
 @query(
     "media_feature_extract",
     # The fake feature math is deterministic arithmetic on byte length, so

@@ -32,8 +32,8 @@ Scale notes: every query is one documents scan plus hash aggregates on
 bounded keys (token / 5-gram vocabularies grow sublinearly in corpus
 size). The unigram join keys on the token string — Zipf-skewed, but the
 count table is vocabulary-sized and AQE picks a broadcast at any
-realistic vocab/corpus ratio; no hint is hard-coded (VERDICT r2 rule:
-hints only on fixed-cardinality sides). Token arrays are STAGED through
+realistic vocab/corpus ratio; no hint is hard-coded (hints only on
+fixed-cardinality sides). Token arrays are STAGED through
 a projection before any lambda touches them (the measured O(tokens²)
 re-split trap documented in dedup.py).
 """
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..datasets import load, widen_scan
 from ..functions.scalar import fround, fround_sql
 from ..queries import query
-from .dedup import _DUCK_WORDS, _GRAMS5_OF_W, _DUCK_GRAMS5
+from .dedup import _DUCK_WORDS, _WORDS, duck_ngrams, ngram_arrays
 from .sampling import _bucket_sql
 
 # Gopher-style thresholds, integer-exact on both engines.
@@ -54,8 +54,6 @@ MIN_MEAN_LEN, MAX_MEAN_LEN = 3, 10  # mean chars/word bounds
 MIN_STOP_HITS = 2                   # "contains at least 2 stopwords"
 
 _STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is")
-
-_SPARK_WORDS = "split(lower(trim(text)), '\\\\s+')"
 
 
 @query(
@@ -88,17 +86,14 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer space (``3*n <= sum_len``) so keep/drop never depends on
     float rounding.
 
-    r12: widen the single-row-group scan before the HOF stage
-    (guide §2.5) — the tokenize + aggregate/filter lambdas are exactly
-    the heavy-per-row-map profile the widen rule adopted for
-    text_quality; per-row outputs are placement-independent. No-op at
-    100 TB (the docstring's zero-shuffle claim still holds there).
-    Measured 0.192 s -> 0.117 s warm at sf0.1 (min-of-7, interleaved);
-    hash_match at 3 SFs."""
+    The single-row-group scan is widened before the HOF stage — the
+    tokenize + aggregate/filter lambdas are the heavy-per-row-map
+    profile; per-row outputs are placement-independent. No-op at
+    100 TB (the zero-shuffle claim above still holds there)."""
     docs = widen_scan(load(spark, sf_dir, "documents"), "doc_id")
     stops = ", ".join(f"'{s}'" for s in _STOPWORDS)
     staged = docs.select(
-        "doc_id", F.expr(_SPARK_WORDS).alias("w"))
+        "doc_id", F.expr(_WORDS).alias("w"))
     stats = staged.select(
         "doc_id",
         F.size("w").cast("bigint").alias("n_words"),
@@ -130,7 +125,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            -- same decomposition as the Spark side (sum(ln c)/n − ln T),
            -- not avg(ln c − ln t): differing float summation could flip
-           -- the half-up rounding at a 4th-decimal boundary (ADVICE r3)
+           -- the half-up rounding at a 4th-decimal boundary
            {fround_sql('sum(ln(c)) / count(*) - ln(any_value(t))', 4)}
                AS avg_logprob
     FROM toks JOIN counts USING (token) CROSS JOIN tot
@@ -154,24 +149,22 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode→aggregate chain; identical to 4 decimals. The per-doc
     aggregate is the only corpus-sized shuffle, keyed on doc_id.
 
-    r12 (guide §1.2 / §2.4): three changes, rows verified identical and
-    hash_match at 3 SFs. (a) The corpus total T is read off the vocab
-    count table (sum of c == token instances, exactly the old third
-    branch's sum(size(w))) instead of a third scan+tokenize of the
-    corpus. (b) The count table is staged: it fed the broadcast build
-    AND (now) the total, and exchange reuse does not cross a broadcast
-    boundary, so the tokenize+explode+aggregate pipeline ran once per
-    consumer; the checkpoint is vocab-sized (sublinear — a digest, not
-    the corpus). (c) widen_scan ahead of the tokenize (the heavy-
-    per-row-map rule). Measured 0.633 s -> 0.354 s warm at sf0.1
-    (min-of-7, interleaved); staging the corpus-sized token table
-    instead was measured WORSE (0.342 vs 0.303) and rejected."""
+    (a) The corpus total T is read off the vocab count table (sum of c
+    == token instances, i.e. sum(size(w))) instead of a third
+    scan+tokenize of the corpus. (b) The count table is staged: it feeds
+    the broadcast build AND the total, and exchange reuse does not cross
+    a broadcast boundary, so the tokenize+explode+aggregate pipeline
+    would run once per consumer; the checkpoint is vocab-sized
+    (sublinear — a digest, not the corpus). Staging the corpus-sized
+    token table instead was measured slower (0.342 vs 0.303 s) and
+    rejected. (c) widen_scan ahead of the tokenize (the heavy-per-row-
+    map rule)."""
     from ..staging import stage
 
     docs = widen_scan(load(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
         "doc_id",
-        F.explode(F.expr(_SPARK_WORDS)).alias("token"))
+        F.explode(F.expr(_WORDS)).alias("token"))
     counts = stage(toks.groupBy("token")
                    .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     total = counts.agg(F.sum("c").cast("double").alias("t"))
@@ -190,7 +183,7 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH grams AS (
         SELECT doc_id, unnest(g) AS gram
-        FROM (SELECT doc_id, {_DUCK_GRAMS5} AS g
+        FROM (SELECT doc_id, {duck_ngrams(5)} AS g
               FROM documents
               WHERE len({_DUCK_WORDS}) >= 5)),
     gram_docs AS (
@@ -224,18 +217,13 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     table that can never broadcast at 100 TB, which would force the
     aggregate-then-join form into shuffling BOTH sides on the gram
     anyway, plus a second corpus scan. Measured 1.8x over the
-    join form at sf0.1 (1.11 s vs 1.96 s).
-
-    r12: widen the single-row-group scan before the 5-gram HOF +
-    explode (guide §2.5, the heavy-per-row-map rule); counts are
-    placement-independent. Measured 0.802 s -> 0.610 s warm at sf0.1
-    (min-of-7, interleaved); hash_match at 3 SFs."""
-    docs = widen_scan(load(spark, sf_dir, "documents"), "doc_id")
-    grams = (docs
-             .select("doc_id", F.expr(_SPARK_WORDS).alias("w"))
-             .filter(F.size("w") >= 5)
-             .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram")))
+    join form at sf0.1 (1.11 s vs 1.96 s). The gram arrays come from a
+    widened scan (dedup.ngram_arrays); counts are placement-
+    independent."""
     from pyspark.sql import Window
+
+    grams = (ngram_arrays(load(spark, sf_dir, "documents"), 5)
+             .select("doc_id", F.explode("grams").alias("gram")))
     gram_w = Window.partitionBy("gram")
     ann = grams.withColumn("n_docs", F.count(F.lit(1)).over(gram_w))
     novel = F.sum(F.when(F.col("n_docs") == 1, 1).otherwise(0)).cast("bigint")
@@ -282,7 +270,7 @@ def vocab_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (found by the planted-typo unit test); the 10x skew makes the
     orientation unique, so no pair emits twice."""
     docs = load(spark, sf_dir, "documents")
-    vocab = (docs.select(F.explode(F.expr(_SPARK_WORDS)).alias("token"))
+    vocab = (docs.select(F.explode(F.expr(_WORDS)).alias("token"))
              .groupBy("token")
              .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     a = vocab.alias("a")
@@ -331,7 +319,7 @@ def vocab_typo_pairs_symspell(spark: SparkSession, sf_dir: str) -> DataFrame:
     block, so first-letter typos ('table'→'able') are not silently
     excluded — this twin's oracle is the COMPLETE distance-1 spec."""
     docs = load(spark, sf_dir, "documents")
-    vocab = (docs.select(F.explode(F.expr(_SPARK_WORDS)).alias("token"))
+    vocab = (docs.select(F.explode(F.expr(_WORDS)).alias("token"))
              .groupBy("token")
              .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     keys = vocab.select(
@@ -377,7 +365,7 @@ _RATES = {"high": 80, "mid": 50, "low": 10}
     scored AS (
         SELECT doc_id,
                -- same decomposition as the Spark side; see
-               -- unigram_logprob_score's oracle (ADVICE r3)
+               -- unigram_logprob_score's oracle
                {fround_sql('sum(ln(c)) / count(*) - ln(any_value(t))', 4)}
                    AS avg_logprob
         FROM toks JOIN counts USING (token) CROSS JOIN tot
@@ -391,7 +379,7 @@ _RATES = {"high": 80, "mid": 50, "low": 10}
     SELECT doc_id, band, avg_logprob
     FROM banded
     -- the SHARED bucket scheme (sampling._bucket_sql), not an inline
-    -- copy that could drift from hash_bucket (review r4)
+    -- copy that could drift from hash_bucket
     WHERE {_bucket_sql('doc_id', 100)} <
           CASE band WHEN 'high' THEN {_RATES['high']}
                     WHEN 'mid' THEN {_RATES['mid']}

@@ -1032,12 +1032,6 @@ def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
     return session_cache(spark, sf_dir, ("embeddings",), ("pq_res",), build)
 
 
-def _sql_arr(vs: list[float]) -> str:
-    # _dlit, not bare {v!r}D: a NaN/Inf lookup-table entry must stay a
-    # literal, not an unresolvable identifier (see _dlit).
-    return "array(" + ",".join(_dlit(v) for v in vs) + ")"
-
-
 def _pq_encode_sql(books: list[list[list[float]]], dsub: int,
                    vec: str = "nv") -> str:
     """codes: array<int> of length PQ_M — per subspace, the index of the
@@ -1058,7 +1052,7 @@ def _pq_encode_sql(books: list[list[list[float]]], dsub: int,
     for m, book in enumerate(books):
         sub = f"slice({vec}, {m * dsub + 1}, {dsub})"
         cands = ",".join(
-            f"struct(aggregate(zip_with({sub}, {_sql_arr(c)}, "
+            f"struct(aggregate(zip_with({sub}, {_arr_sql(c)}, "
             f"(x, y) -> (x - y) * (x - y)), 0.0D, (a, v) -> a + v) AS d, "
             f"{j} AS j)"
             for j, c in enumerate(book))
@@ -1075,7 +1069,7 @@ def _residual_sql(cents: list[list[float]]) -> str:
     per row (the same constant-folding escape _pq_encode_sql documents
     for nested codebook literals)."""
     branches = " ".join(
-        f"WHEN {i} THEN zip_with(nv, {_sql_arr(c)}, (x, y) -> x - y)"
+        f"WHEN {i} THEN zip_with(nv, {_arr_sql(c)}, (x, y) -> x - y)"
         for i, c in enumerate(cents))
     return f"CASE _cell {branches} END"
 
@@ -1086,7 +1080,7 @@ def _residual_sql(cents: list[list[float]]) -> str:
 # every execution, serially in the one-row-group scan task; worse, the
 # lazy `nv` alias collapses into each consumer lambda so the norm
 # aggregate re-evaluated per element per centroid/codeword (the
-# dedup.py `_SHINGLES_OF_W` hazard, here at 64 els × 16 cells × 8
+# dedup.py `ngrams_of_w` hazard, here at 64 els × 16 cells × 8
 # subspaces). At 100 TB these columns are WRITE-TIME table layout (the
 # pq_topk/ivf_pq_topk docstrings' stated design: cells are the partition
 # column, codes a stored column); locally the staged digest is that
@@ -1158,7 +1152,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qm = qv[m * dsub:(m + 1) * dsub]
         luts.append([sum(a * b for a, b in zip(qm, c)) for c in book])
     adc_sql = " + ".join(
-        f"element_at({_sql_arr(luts[m])}, element_at(codes, {m + 1}) + 1)"
+        f"element_at({_arr_sql(luts[m])}, element_at(codes, {m + 1}) + 1)"
         for m in range(PQ_M))
 
     # r12: codes come from the staged probe-independent serving index
@@ -1249,7 +1243,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qm = qv[m * dsub:(m + 1) * dsub]
         luts.append([sum(a * b for a, b in zip(qm, c)) for c in book])
     adc_sql = " + ".join(
-        f"element_at({_sql_arr(luts[m])}, element_at(codes, {m + 1}) + 1)"
+        f"element_at({_arr_sql(luts[m])}, element_at(codes, {m + 1}) + 1)"
         for m in range(PQ_M))
 
     # r12: _cell and codes come from the staged probe-independent serving

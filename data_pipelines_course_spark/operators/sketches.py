@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..datasets import load
 from ..queries import query
+from .dedup import _WORDS
 
 
 @query("sketch_distinct_users_by_type")  # rows-only: sketch bytes not SQL
@@ -68,7 +69,7 @@ CMS_SEED = 42
 
 def _doc_tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"))
+        F.explode(F.expr(_WORDS)).alias("tok"))
 
 
 def cms_token_sketch(docs: DataFrame,

@@ -66,28 +66,14 @@ def training_run(spark: SparkSession, sf_dir: str,
         return ledgered_write(keep_first, _stage_path(out_dir, "deduped"))
 
     def decontaminate(ctx: dict[str, Any]):
-        from ..operators.dedup import _GRAMS5_OF_W, _WORDS
+        from ..operators.dedup import contaminated_ids, gram_hashes
 
         deduped = spark.read.parquet(_stage_path(out_dir, "deduped"))
         # benchmark set: the deterministic holdout (doc_id % 10 == 0),
-        # same convention as corpus_curation_full
-        bench = deduped.filter(F.col("doc_id") % 10 == 0)
-        grams = (bench.select(F.expr(_WORDS).alias("w"))
-                 .filter(F.size("w") >= 5)
-                 .select(F.explode(F.expr(_GRAMS5_OF_W)).alias("g"))
-                 .select(F.xxhash64("g").alias("gh")).distinct())
-        train_side = (deduped.filter(F.col("doc_id") % 10 != 0)
-                      .withColumn("w", F.expr(_WORDS)))
-        hits = (train_side
-                .select("doc_id",
-                        F.explode(F.when(F.size("w") >= 5,
-                                         F.expr(_GRAMS5_OF_W))
-                                  .otherwise(F.array())).alias("g"))
-                .select("doc_id", F.xxhash64("g").alias("gh"))
-                .join(F.broadcast(grams), "gh")
-                .select("doc_id").distinct())
-        clean = (train_side.drop("w")
-                 .join(hits, "doc_id", "left_anti"))
+        # same convention and same digests as corpus_curation_full
+        clean = (deduped.filter(F.col("doc_id") % 10 != 0)
+                 .join(contaminated_ids(gram_hashes(deduped)), "doc_id",
+                       "left_anti"))
         return ledgered_write(clean, _stage_path(out_dir, "decontaminated"))
 
     def split(ctx: dict[str, Any]):
@@ -149,7 +135,7 @@ def training_run(spark: SparkSession, sf_dir: str,
         """Chord over tokenize+pack: one run-level summary manifest.
         Ledger reads/writes go through the same Hadoop FS API as
         ledgered_write — plain local open() breaks on any non-local
-        filesystem (ADVICE r3)."""
+        filesystem."""
         from ..sinks.writers import read_small_file, write_small_file
 
         stages = ["curated", "deduped", "decontaminated", "split",

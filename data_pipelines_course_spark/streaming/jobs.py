@@ -65,7 +65,7 @@ def wordcount_transform(lines: DataFrame, col: str = "value") -> DataFrame:
     manual combiner. The tokenizer IS the batch one (relational._tokens)
     — one definition, two execution modes, so the batch/stream parity
     tests and the DuckDB oracle can never desynchronize from a tweak to
-    one copy (review r4)."""
+    one copy."""
     from ..operators.relational import _tokens
 
     return (_tokens(lines, text_col=col)
@@ -81,7 +81,8 @@ def windowed_wordcount(lines: DataFrame, ts_col: str = "timestamp",
     beyond `watermark` are dropped and state is bounded.
 
     Watermark semantics note (fuzz grammar v9, 40 randomized
-    append-mode scenarios vs an exact simulator — fuzz.py v9 section):
+    append-mode scenarios vs an exact simulator — tests/fuzz.py v9
+    section):
     Spark's LATE-data filter lags the EVICTION watermark by one
     micro-batch, filters on the window END (not the row's event time),
     and both boundaries are inclusive — so a row later than the
@@ -122,7 +123,7 @@ def session_windows(events: DataFrame, ts_col: str = "ts",
     close the session (NOT exercised in the reference; engine surface).
 
     Semantics notes (fuzz grammar v10, 40 randomized append-mode
-    scenarios vs a batch-by-batch state simulator — fuzz.py v10
+    scenarios vs a batch-by-batch state simulator — tests/fuzz.py v10
     section): sessions merge by interval union of [ts, ts+gap],
     INCLUSIVE at touching boundaries; merging happens before eviction
     within a micro-batch, so a same-batch event can extend a session
@@ -227,7 +228,7 @@ def foreach_batch_writer(result: DataFrame, batch_fn,
     delivers partial per-window counts every batch, which breaks sinks
     whose contract is "all of a closed window's rows arrive together"
     (trending_topk_sink) — attach those with output_mode="append" so
-    only watermark-closed windows flow (review r4)."""
+    only watermark-closed windows flow."""
     return (result.writeStream.outputMode(output_mode)
             .foreachBatch(batch_fn).trigger(availableNow=True).start())
 
@@ -243,8 +244,7 @@ def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame,
     batches are picked up). No hard broadcast hint: the dimension grows
     with the business (the repo-wide rule — a forced broadcast bypasses
     the size check and OOMs once the dim outgrows it); Spark's size
-    estimate broadcasts it while small and shuffle-joins beyond
-    (review r4)."""
+    estimate broadcasts it while small and shuffle-joins beyond."""
     return stream.join(dim, on, how)
 
 
@@ -268,8 +268,8 @@ def interval_join_view_clicks(views: DataFrame, clicks: DataFrame,
     views once their interval expires (attribution misses).
 
     Semantics notes (fuzz grammar v11, 40 randomized inner-join
-    scenarios vs an exact row-level oracle — fuzz.py v11 section): the
-    GLOBAL watermark is the MIN over both sides' watermarks (default
+    scenarios vs an exact row-level oracle — tests/fuzz.py v11
+    section): the GLOBAL watermark is the MIN over both sides' watermarks (default
     multipleWatermarkPolicy) — a quiet side pins it, so state grows
     until BOTH streams advance; both inputs are late-filtered on raw
     event time, inclusively, against the watermark one micro-batch
@@ -278,12 +278,12 @@ def interval_join_view_clicks(views: DataFrame, clicks: DataFrame,
     exactly {condition holds AND both rows passed their arrival-batch
     filter}.
 
-    `how` is validated against the VERIFIED modes (VERDICT r11 #6 —
-    previously it was passed through unvalidated, so full_outer ran
-    with semantics no grammar had pinned): inner (fuzz v11),
-    left_outer (fuzz v12), right_outer (fuzz v13 — null-emission =
-    the row's own event time falling behind the final min-policy
-    watermark, strictness from the LOWER bound; probes R-A..R-E).
+    `how` is validated against the VERIFIED modes (an unvalidated `how`
+    would run full_outer with semantics no grammar has pinned): inner
+    (fuzz v11), left_outer (fuzz v12), right_outer (fuzz v13 —
+    null-emission = the row's own event time falling behind the final
+    min-policy watermark, strictness from the LOWER bound; probes
+    R-A..R-E).
     full_outer is rejected until a grammar verifies its combined
     two-sided eviction timing."""
     verified = ("inner", "left_outer", "right_outer")
@@ -327,26 +327,18 @@ def decontaminate_stream(stream_docs: DataFrame,
     Emits (doc_id, bench_id) candidate hits — duplicated per matching band;
     dedup per micro-batch (and idempotent delivery) belongs in foreachBatch
     at the sink, where `dropDuplicates` is batch-local and bounded.
-    Cross-engine/batch parity: band hashes are the same expressions as the
-    batch path, so a hit here IS a batch candidate pair."""
+    Batch parity: both sides band through dedup.minhash_bands, the one
+    band definition decontaminate_lsh also joins on, and the per-row
+    signature is bit-identical to the batch one, so a hit here IS a
+    decontaminate_lsh candidate pair before its est-Jaccard cutoff."""
     from ..operators.dedup import (
-        BANDS,
-        ROWS_PER_BAND,
+        minhash_bands,
         minhash_signatures,
         rowwise_minhash_sig,
     )
 
-    band_expr = (f"transform(sequence(0, {BANDS - 1}),"
-                 f" b -> hash(slice(sig, b * {ROWS_PER_BAND} + 1,"
-                 f" {ROWS_PER_BAND})))")
-
-    def bands_of(sigs: DataFrame, id_alias: str) -> DataFrame:
-        return sigs.select(
-            F.col("doc_id").alias(id_alias),
-            F.posexplode(F.expr(band_expr)).alias("band", "band_hash"))
-
-    bench_bands = bands_of(minhash_signatures(bench_docs), "bench_id")
-    stream_bands = bands_of(rowwise_minhash_sig(stream_docs), "doc_id")
+    bench_bands = minhash_bands(minhash_signatures(bench_docs), "bench_id")
+    stream_bands = minhash_bands(rowwise_minhash_sig(stream_docs), "doc_id")
     return (stream_bands
             .join(F.broadcast(bench_bands), ["band", "band_hash"])
             .select("doc_id", "bench_id"))
@@ -419,7 +411,7 @@ def idempotent_batch_sink(path: str):
         # with any other query on the same session — its restore could
         # land mid-way through a sibling sink's overwrite, flipping that
         # write to static mode and deleting every partition but the
-        # current batch (review r4). The writer option is scoped to this
+        # current batch. The writer option is scoped to this
         # one write and takes precedence over the session conf.
         (df.withColumn("_batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite")
@@ -459,8 +451,8 @@ def rollup_maintenance_sink(rollup_path: str):
         low = batch_df.select(F.min(F.to_date("ts"))).head()[0]
         log = spark.read.parquet(log_path).drop("_batch_id")
         # A non-empty batch whose timestamps are ALL NULL has no date
-        # watermark (min is None; .isoformat() crashed the sink — review
-        # r5). Fall back to a full recompute: correct for any input, and
+        # watermark (min is None; .isoformat() would crash the sink).
+        # Fall back to a full recompute: correct for any input, and
         # an all-NULL batch is a data-quality anomaly, not the hot path.
         incremental_daily_rollup(log, rollup_path,
                                  since=None if low is None
@@ -548,21 +540,21 @@ def scd2_maintenance_sink(dim_path: str, buckets: int = SCD2_BUCKETS):
     # probe, log filter and dim build): `user_id % N` is NULL for them,
     # which crashed the touched-bucket collect (int(None)) and could
     # never match an isin() filter — a CDC batch containing one NULL key
-    # would otherwise kill the sink (streaming review, r5). CDC feeds DO
+    # would otherwise kill the sink. CDC feeds DO
     # deliver NULL keys (broken-RI axis), and their history belongs in
     # the dimension's NULL-key group, not in a crash. pmod (not %) with
     # sentinel N, not -1: Spark's % keeps the dividend's sign, so a
     # negative-key corpus would spread across buckets -1..-(N-1) and
     # user_id ≡ -1 (mod N) would ALIAS the -1 sentinel — whole-bucket
     # recompute kept that correct, but the NULL group wasn't the
-    # disjoint partition the layout claims (ADVICE r5). With pmod, real
+    # disjoint partition the layout claims. With pmod, real
     # keys of either sign occupy 0..N-1 and the sentinel N is provably
     # theirs alone.
     bucket_of = F.coalesce(F.pmod(F.col("user_id"), F.lit(buckets)),
                            F.lit(buckets))
 
-    # Backward-compat guard (ADVICE r6): a dimension written under the
-    # pre-r6 sign-preserving layout (% with sentinel -1) holds
+    # Backward-compat guard: a dimension written under the older
+    # sign-preserving layout (% with sentinel -1) holds
     # bucket=-1 .. bucket=-(N-1) partitions that the pmod layout never
     # writes — and dynamic partition overwrite only rewrites buckets
     # present in NEW data, so those stale partitions would survive an
@@ -647,11 +639,7 @@ def dedup_index_sink(index_path: str, hits_path: str):
     matching buckets only, and band rows are 24 bytes/doc/band. Flags
     are candidate pairs (LSH semantics); exact-Jaccard confirmation of
     flagged pairs is a downstream filter, same as the batch path."""
-    from ..operators.dedup import BANDS, ROWS_PER_BAND, rowwise_minhash_sig
-
-    band_expr = (f"transform(sequence(0, {BANDS - 1}),"
-                 f" b -> hash(slice(sig, b * {ROWS_PER_BAND} + 1,"
-                 f" {ROWS_PER_BAND})))")
+    from ..operators.dedup import minhash_bands, rowwise_minhash_sig
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -660,12 +648,9 @@ def dedup_index_sink(index_path: str, hits_path: str):
         # Persisted: bands feeds BOTH sides of the intra-batch self-join,
         # the index probe, and the index append — without the persist the
         # 32-permutation MinHash map stage (the sink's dominant CPU cost)
-        # re-executes ~4x per micro-batch (review r4).
-        bands = (rowwise_minhash_sig(batch_df)
-                 .select("doc_id",
-                         F.posexplode(F.expr(band_expr))
-                         .alias("band", "band_hash"))
-                 .persist())
+        # re-executes ~4x per micro-batch.
+        bands = minhash_bands(rowwise_minhash_sig(batch_df),
+                              "doc_id").persist()
         # Existence probe, NOT a blanket except around the read: a
         # corrupt/unreadable index must raise, never silently count as
         # "no history" (which would wave duplicates through).

@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
-from data_pipelines_course_spark.fuzz import (  # noqa: E402
+from tests.fuzz import (  # noqa: E402
     generate, generate_v2, generate_v3, generate_v4, generate_v5,
     generate_v6, generate_v7, generate_v8, generate_v9, generate_v10,
     generate_v11, generate_v12, generate_v13,

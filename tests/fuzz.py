@@ -128,8 +128,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .datasets import load
-from .functions.scalar import weekday_py
+from data_pipelines_course_spark.datasets import load
+from data_pipelines_course_spark.functions.scalar import weekday_py
 
 
 def _mkdtemp_tracked(prefix: str) -> str:
@@ -1791,7 +1791,7 @@ def generate_v8(seed: int) -> FuzzV3:
 # --------------------------------------------------------------------------
 
 def _gen_v7_asof(rng: random.Random, seed: int) -> FuzzV3:
-    from .operators.temporal import asof_join
+    from data_pipelines_course_spark.operators.temporal import asof_join
 
     lpreds = [_v5_pred(rng, "events") for _ in range(rng.randint(0, 2))]
     rpreds = [_v5_pred(rng, "events") for _ in range(rng.randint(1, 2))]
@@ -1832,7 +1832,7 @@ _V7_MINUTES = [5, 15, 30, 60, 120, 360, 720]
 
 
 def _gen_v7_range(rng: random.Random, seed: int) -> FuzzV3:
-    from .operators.temporal import banded_range_join
+    from data_pipelines_course_spark.operators.temporal import banded_range_join
 
     lpreds = [_v5_pred(rng, "events") for _ in range(rng.randint(0, 2))]
     rpreds = [_v5_pred(rng, "events") for _ in range(rng.randint(1, 2))]

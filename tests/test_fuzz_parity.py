@@ -2,7 +2,7 @@
 (VERDICT r7 #3; SURVEY §5.1 "randomized query gen: NOT present" closed).
 
 Every seed in SEEDS deterministically generates one query AST
-(data_pipelines_course_spark/fuzz.py), rendered BOTH as a DataFrame-API
+(tests/fuzz.py), rendered BOTH as a DataFrame-API
 plan and as ANSI SQL, executed on Spark and DuckDB at sf0.01, and
 compared with the suite's driver-style comparator (row count + schema +
 normalized values — the same assert_frames_match every hand-paired
@@ -24,7 +24,7 @@ import hashlib
 
 import pytest
 
-from data_pipelines_course_spark.fuzz import (
+from .fuzz import (
     generate, generate_v2, generate_v3, generate_v4, generate_v5,
     generate_v6, generate_v7, generate_v8, generate_v9, generate_v10,
     generate_v11, generate_v12, generate_v13,

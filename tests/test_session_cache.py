@@ -12,6 +12,8 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import pytest
+
 from data_pipelines_course_spark import datasets as D
 from data_pipelines_course_spark.operators.similarity import kmeans_train
 from data_pipelines_course_spark.operators.textprep import bpe_train
@@ -99,3 +101,19 @@ def test_no_per_session_memo_outside_datasets():
                  if p != PACKAGE / "datasets.py"
                  and "applicationId" in p.read_text()]
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize("literal, copies", [
+    ("split(lower(trim(text))", 1),   # the word split
+    ("hash(slice(sig", 1),            # the MinHash band key
+    ('F.xxhash64("gram")', 1),        # the 5-gram hash digest
+    ("def _widen", 0),                # scan widening is datasets.widen_scan
+])
+def test_each_text_digest_is_defined_once(literal, copies):
+    """Every module builds its text digests through operators/dedup.py:
+    each digest's defining expression occurs exactly once in the
+    package."""
+    found = {str(p.relative_to(PACKAGE)): p.read_text().count(literal)
+             for p in PACKAGE.rglob("*.py")}
+    assert sum(found.values()) == copies, {
+        k: n for k, n in found.items() if n}

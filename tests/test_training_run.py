@@ -56,3 +56,26 @@ def test_training_run_end_to_end_and_idempotent(spark, tmp_path):
     gated = [n for n, s in pipe2.status.items() if s == "gated"]
     assert set(gated) >= {"curate", "dedup", "decontaminate", "split",
                           "tokenize", "pack", "shards"}, pipe2.status
+
+
+def test_decontaminate_stage_matches_duckdb(spark, duck, tmp_path):
+    """The decontaminate stage keeps exactly the deduped train docs that
+    corpus_curation_full's oracle CTEs (g, bench, contaminated) do not
+    flag, computed by DuckDB over the run's own `deduped` table."""
+    from data_pipelines_course_spark.operators.dedup import (
+        _DUCK_CONTAMINATED_CTES)
+
+    out = str(tmp_path / "run")
+    training_run(spark, SF_DIR, out).run()
+    deduped = os.path.join(out, "deduped", "*.parquet")
+    ctes = _DUCK_CONTAMINATED_CTES.replace(
+        "FROM documents", f"FROM read_parquet('{deduped}')")
+    train = {r[0] for r in duck.sql(
+        f"SELECT doc_id FROM read_parquet('{deduped}')"
+        " WHERE doc_id % 10 <> 0").fetchall()}
+    contaminated = {r[0] for r in duck.sql(
+        f"WITH {ctes} SELECT doc_id FROM contaminated").fetchall()}
+    got = {r["doc_id"] for r in spark.read.parquet(
+        os.path.join(out, "decontaminated")).select("doc_id").collect()}
+    assert contaminated and contaminated < train
+    assert got == train - contaminated
