@@ -1,4 +1,4 @@
-"""Multi-probe ANN recall referee (round 8, beyond the r8 punch list).
+"""Multi-probe ANN recall referee.
 
 The ANN family's recall is measured in tests/test_similarity.py — but
 only at sf0.01 (500 vectors) and only for the ONE registered probe
@@ -19,14 +19,18 @@ Method, per tier:
    double dot, fround 1e-6, ties by vec_id), row_number <= TOP_K per
    probe. Probe 0's GT slice is pinned EQUAL to the registered
    single-probe query by tests/test_ann_recall_referee.py.
-3. Each ANN path re-expressed in BATCH form over the identical index:
-   - LSH: the same `lsh_bucket_cols()` signatures; candidates by
-     (table, bucket) equi-join instead of a per-probe OR filter.
-   - IVF: the same first-IVF_K-vectors coarse quantizer and
-     `_py_cos` routing; candidates by cell equi-join.
-   - PQ / IVF-PQ: the same `_pq_codebooks` training and
-     `_pq_encode_sql` codes; per-probe LUTs ride the broadcast probe
-     frame as a flat array column, ADC = PQ_M element_at adds.
+3. Each ANN path re-expressed in BATCH form over the identical index,
+   calling the engine's own steps:
+   - LSH: the registered `lsh_batch_topk` (`ann_batch_topk`'s body);
+     candidates by (table, bucket) equi-join instead of a per-probe OR
+     filter.
+   - IVF: the engine's `ivf_centroids` / `ivf_cell` quantizer (or the
+     trained `kmeans_train` / `_best_cell` one) and `ivf_route`
+     routing; candidates by cell equi-join.
+   - PQ / IVF-PQ: the same `_pq_codebooks` training, `_pq_encode_sql`
+     codes and `adc_luts` tables; per-probe LUTs ride the broadcast
+     probe frame as a flat array column, ADC = PQ_M element_at adds,
+     re-scored with the engine's `rounded_cos`.
    Probe 0's batch top-k is pinned EQUAL to each registered
    single-probe query, so the batch referee provably measures the
    registered index, not a lookalike.
@@ -46,7 +50,7 @@ Usage:
     python ann_recall_referee.py --nprobe-sweep           # IVF knob map
     python ann_recall_referee.py --lsh-sweep              # (L, p) map
     python ann_recall_referee.py --refine-sweep           # PQ window cost
-Prints one JSON line per invocation; round artifact = ANN_RECALL_r08.json.
+Prints one JSON line per invocation (artifacts: ANN_RECALL_r*.json).
 """
 
 from __future__ import annotations
@@ -59,22 +63,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipelines_course_spark.datasets import load
-from data_pipelines_course_spark.functions.scalar import fround
 from data_pipelines_course_spark.operators.similarity import (
-    IVF_K, IVF_NPROBE, PQ_KSUB, PQ_M, PQ_REFINE, TOP_K,
-    _arr_sql, _normalized, _pq_codebooks, _pq_encode_sql,
-    _pq_residual_codebooks, _py_cos, _residual_sql,
-    ann_probe_panel, batch_ranked_topk, batch_score, cosine, dot,
-    finite_norm, lsh_batch_topk, lsh_bucket_cols, norm,
+    IVF_K, IVF_NPROBE, N_TABLES, PLANES_PER_TABLE, PQ_KSUB, PQ_M,
+    PQ_REFINE, TOP_K,
+    _best_cell, _normalized, _pq_codebooks, _pq_encode_sql,
+    _pq_residual_codebooks, _residual_sql, adc_luts,
+    ann_probe_panel, batch_ranked_topk, batch_score, dot, ivf_cell,
+    ivf_centroids, ivf_route, kmeans_train, lsh_batch_topk,
+    lsh_bucket_cols, norm, rounded_cos,
 )
-
-# The LSH batch path and its panel/score/rank building blocks were
-# promoted INTO the engine in round 9 (registered query
-# `ann_batch_topk`, VERDICT r8 #1 sanction) — the referee now measures
-# the registered implementation directly instead of a mirror of it.
-probe_panel = ann_probe_panel
-_ranked_topk = batch_ranked_topk
-_score = batch_score
 
 
 def batch_lsh(emb: DataFrame, probes: DataFrame,
@@ -92,78 +89,55 @@ def batch_ground_truth(emb: DataFrame, probes: DataFrame) -> DataFrame:
     pairs = (emb.filter(norm("embedding") > 0)
              .crossJoin(F.broadcast(probes))
              .filter(F.col("vec_id") != F.col("probe_id")))
-    return _ranked_topk(_score(pairs), TOP_K)
+    return batch_ranked_topk(batch_score(pairs))
 
 
-def _ivf_cents(emb: DataFrame) -> dict[int, list[float]]:
-    """The registered coarse quantizer: first IVF_K usable vectors."""
-    rows = (emb.filter((F.col("vec_id") < IVF_K) & finite_norm("embedding"))
-            .select("vec_id", "embedding").collect())
-    return {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-            for r in rows}
-
-
-def _ivf_best_cell(cents: dict[int, list[float]]):
-    """ivf_topk's cell-assignment expression, verbatim semantics."""
-    scores = F.array(*[
-        F.struct(cosine("embedding", _arr_sql(cents[c])).alias("s"),
-                 F.lit(c).alias("c")) for c in sorted(cents)])
-    return F.element_at(F.sort_array(scores, asc=False), 1)["c"]
+def _routes(spark: SparkSession, probes: DataFrame,
+            cents: dict[int, list[float]],
+            nprobe: int = IVF_NPROBE) -> DataFrame:
+    """(probe_id, _cell): each panel probe's `ivf_route` cells, as a
+    frame to broadcast-join against the cell column."""
+    routes = [(int(r["probe_id"]), c) for r in probes.collect()
+              for c in ivf_route([float(x) for x in r["pv"]], cents, nprobe)]
+    return spark.createDataFrame(routes, "probe_id bigint, _cell int")
 
 
 def batch_ivf(spark: SparkSession, emb: DataFrame,
               probes: DataFrame, nprobe: int = IVF_NPROBE) -> DataFrame:
-    """ivf_topk in batch form: same quantizer, same `_py_cos` routing;
+    """ivf_topk in batch form: same quantizer, same `ivf_route` routing;
     per-probe cell lists become a broadcast (probe_id, cell) frame.
     `nprobe` defaults to the registered IVF_NPROBE; the sweep mode
     varies it to map the recall-vs-touched-fraction curve (nprobe=K
     must reproduce brute force exactly — a built-in sanity check)."""
-    cents = _ivf_cents(emb)
-    routes = []
-    for r in probes.collect():
-        qv = [float(x) for x in r["pv"]]
-        cells = sorted(sorted(cents),
-                       key=lambda c: -_py_cos(qv, cents[c]))[:nprobe]
-        routes += [(int(r["probe_id"]), int(c)) for c in cells]
-    routes_df = spark.createDataFrame(routes, "probe_id bigint, _cell int")
-    cands = (emb.withColumn("_cell", _ivf_best_cell(cents).cast("int"))
-             .join(F.broadcast(routes_df), "_cell")
+    cents = ivf_centroids(emb)
+    cands = (emb.withColumn("_cell", ivf_cell(cents).cast("int"))
+             .join(F.broadcast(_routes(spark, probes, cents, nprobe)),
+                   "_cell")
              .join(F.broadcast(probes), "probe_id")
              .filter((F.col("vec_id") != F.col("probe_id"))
                      & (norm("embedding") > 0)))
-    return _ranked_topk(_score(cands), TOP_K)
+    return batch_ranked_topk(batch_score(cands))
 
 
 def batch_ivf_kmeans(spark: SparkSession, emb: DataFrame,
                      probes: DataFrame, sf_dir: str) -> DataFrame:
     """The trained-router IVF twin: identical plan shape to batch_ivf,
     but the coarse quantizer is the registered `kmeans_train` output
-    instead of the first-IVF_K-vectors stand-in. Since r9 this IS the
-    batch twin of a registered query (`ivf_kmeans_topk`, VERDICT r8 #6
-    sanction — its probe-0 slice is pinned equal in
-    tests/test_ann_recall_referee.py); it measures how much routing
-    recall the trained centroids buy at the same nprobe/K."""
-    from data_pipelines_course_spark.operators.similarity import (
-        _best_cell, kmeans_train,
-    )
-
+    instead of the first-IVF_K-vectors stand-in. It is the batch twin
+    of the registered `ivf_kmeans_topk` (its probe-0 slice is pinned
+    equal in tests/test_ann_recall_referee.py); it measures how much
+    routing recall the trained centroids buy at the same nprobe/K."""
     cents, _ = kmeans_train(spark, sf_dir)
     if not cents:
         return spark.createDataFrame([], "probe_id bigint, vec_id bigint,"
                                          " cos_sim double")
-    routes = []
-    for r in probes.collect():
-        qv = [float(x) for x in r["pv"]]
-        cells = sorted(range(len(cents)),
-                       key=lambda c: -_py_cos(qv, cents[c]))[:IVF_NPROBE]
-        routes += [(int(r["probe_id"]), int(c)) for c in cells]
-    routes_df = spark.createDataFrame(routes, "probe_id bigint, _cell int")
     cands = (_normalized(emb)
              .withColumn("_cell", _best_cell(cents)["c"].cast("int"))
-             .join(F.broadcast(routes_df), "_cell")
+             .join(F.broadcast(_routes(spark, probes, dict(enumerate(cents)))),
+                   "_cell")
              .join(F.broadcast(probes), "probe_id")
              .filter(F.col("vec_id") != F.col("probe_id")))
-    return _ranked_topk(_score(cands), TOP_K)
+    return batch_ranked_topk(batch_score(cands))
 
 
 def _probe_luts(spark: SparkSession, emb: DataFrame, probes: DataFrame,
@@ -175,16 +149,12 @@ def _probe_luts(spark: SparkSession, emb: DataFrame, probes: DataFrame,
     With `cents` (the IVFADC path): cdots[c] = q . cents[c], the exact
     inner-product decomposition's per-cell term (the registered query's
     `cell_dots` literal, one array column per probe)."""
-    dsub = len(books[0][0])
     rows = []
     for r in (_normalized(emb.join(F.broadcast(probes),
                                    emb.vec_id == probes.probe_id))
               .select("probe_id", "nv").collect()):
         nvp = [float(x) for x in r["nv"]]
-        lut = []
-        for m, book in enumerate(books):
-            qm = nvp[m * dsub:(m + 1) * dsub]
-            lut += [sum(a * b for a, b in zip(qm, c)) for c in book]
+        lut = [v for sub_lut in adc_luts(nvp, books) for v in sub_lut]
         row = [int(r["probe_id"]), nvp, lut]
         if cents is not None:
             row.append([sum(a * b for a, b in zip(nvp, c)) for c in cents])
@@ -209,28 +179,22 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
     LUT is a column on the broadcast probe frame. Probe-0 parity pinned
     in tests/test_ann_recall_referee.py.
 
-    residual=True (requires ivf_route): the MEASURED-AND-REJECTED
-    IVFADC variant (VERDICT r10 #2; see ivf_pq_topk's docstring for the
-    verdict) — codes quantize the residual nv − cents[_cell]
-    (`_pq_residual_codebooks`), the LUT is over residual codebooks, and
-    the exact inner-product decomposition's per-cell term
-    q·cents[_cell] rides the probe frame as `cdots`. Kept as a
-    referee-only panel so every round's artifact re-measures the
-    negative result against the shipped raw path."""
+    residual=True (requires ivf_route): the MEASURED-AND-REJECTED IVFADC
+    variant (see ivf_pq_topk's docstring) — codes quantize the residual
+    nv − cents[_cell] (`_pq_residual_codebooks`), the LUT is over
+    residual codebooks, and the exact inner-product decomposition's
+    per-cell term q·cents[_cell] rides the probe frame as `cdots`. Kept
+    as a referee-only panel so every artifact re-measures the negative
+    result against the shipped raw path."""
     if residual and not ivf_route:
-        # ADVICE r11: without the guard, residual=True silently ran the
-        # raw flat-PQ path and could mislabel a future referee panel.
+        # Without the guard, residual=True would silently run the raw
+        # flat-PQ path and mislabel the panel.
         raise ValueError("residual=True requires ivf_route=True "
                          "(IVFADC quantizes cell residuals)")
     empty = "probe_id bigint, vec_id bigint, cos_sim double"
     if ivf_route:
-        # Trained router since r10 (VERDICT r9 #3): same kmeans_train
-        # centroids + _best_cell assignment as the registered
-        # ivf_pq_topk / ivf_kmeans_topk.
-        from data_pipelines_course_spark.operators.similarity import (
-            _best_cell, kmeans_train,
-        )
-
+        # Trained router: same kmeans_train centroids + _best_cell
+        # assignment as the registered ivf_pq_topk / ivf_kmeans_topk.
         if residual:
             books, _, cents = _pq_residual_codebooks(spark, sf_dir)
         else:
@@ -239,23 +203,12 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
         if books is None or not cents:
             return spark.createDataFrame([], empty)
         dsub = len(books[0][0])
-        routes = []
-        for r in probes.collect():
-            qv = [float(x) for x in r["pv"]]
-            cells = sorted(range(len(cents)),
-                           key=lambda c: -_py_cos(qv, cents[c]))[:IVF_NPROBE]
-            routes += [(int(r["probe_id"]), int(c)) for c in cells]
-        routes_df = spark.createDataFrame(routes,
-                                          "probe_id bigint, _cell int")
         # _cell, rv and codes depend ONLY on the corpus row, so they are
-        # computed BEFORE the routes join. The r11 restructure computed
-        # codes after it, which made Spark evaluate the argmin-over-
-        # codebooks encode expression once per (row x routed probe)
-        # instead of once per row — Catalyst does not push computed
-        # projections below a join — and blew the sf1 panel up 8.2x
-        # (2149.8 s vs 261.9 s, VERDICT r11 obs. #3: the cost was this
-        # referee shape, not the PQ_REFINE widening; pq_topk with the
-        # same 16x window got FASTER at sf1).
+        # computed BEFORE the routes join: computed after it, Spark
+        # evaluates the argmin-over-codebooks encode expression once per
+        # (row x routed probe) instead of once per row — Catalyst does
+        # not push computed projections below a join — which made the
+        # sf1 panel 8.2x slower.
         coded = (_normalized(emb)
                  .withColumn("_cell", _best_cell(cents)["c"].cast("int")))
         if residual:
@@ -268,7 +221,9 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
             coded = coded.withColumn(
                 "codes", F.expr(_pq_encode_sql(books, dsub)))
             adc_sql = _ADC_SQL
-        coded = coded.join(F.broadcast(routes_df), "_cell")
+        coded = coded.join(
+            F.broadcast(_routes(spark, probes, dict(enumerate(cents)))),
+            "_cell")
         pairs = coded.join(
             F.broadcast(_probe_luts(spark, emb, probes, books,
                                     cents=cents if residual else None)),
@@ -284,14 +239,12 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
             F.broadcast(_probe_luts(spark, emb, probes, books)))
         adc_sql = _ADC_SQL
     pairs = pairs.filter(F.col("vec_id") != F.col("probe_id"))
-    adc_ranked = _ranked_topk(
+    adc_ranked = batch_ranked_topk(
         pairs.select("probe_id", "vec_id", "nv", "nvp",
                      F.expr(adc_sql).alias("adc_score")),
         refine * TOP_K, score="adc_score")
-    rescored = adc_ranked.select(
-        "probe_id", "vec_id",
-        (fround(dot("nv", "nvp"), 6) + F.lit(0.0)).alias("cos_sim"))
-    return _ranked_topk(rescored, TOP_K)
+    return batch_ranked_topk(adc_ranked.select(
+        "probe_id", "vec_id", rounded_cos(dot("nv", "nvp"))))
 
 
 # -------------------------------------------------------------------------
@@ -325,19 +278,49 @@ def recall_report(gt: dict[int, set[int]],
     }
 
 
-def run(spark: SparkSession, sf_dir: str, mod: int) -> dict:
+def _panel(spark: SparkSession, sf_dir: str, mod: int):
+    """(emb, probes, gt, head): the cached corpus and probe panel, the
+    exact ground truth, and the fields every artifact starts with."""
     emb = load(spark, sf_dir, "embeddings").cache()
-    n_corpus = emb.count()
-    probes = probe_panel(emb, mod).cache()
-    n_probes = probes.count()
-
+    probes = ann_probe_panel(emb, mod).cache()
+    head = {"sf_dir": sf_dir, "n_corpus": emb.count(), "mod": mod,
+            "n_probes": probes.count(), "top_k": TOP_K}
     t0 = time.time()
     gt = _collect_sets(batch_ground_truth(emb, probes))
-    gt_sec = round(time.time() - t0, 1)
+    head["gt_sec"] = round(time.time() - t0, 1)
+    return emb, probes, gt, head
 
-    out = {"sf_dir": sf_dir, "n_corpus": n_corpus, "mod": mod,
-           "n_probes": n_probes, "top_k": TOP_K, "gt_sec": gt_sec,
-           "paths": {}}
+
+def _measure(gt: dict[int, set[int]], fn) -> dict:
+    """recall_report of one batch path against gt, plus its seconds."""
+    t0 = time.time()
+    rep = recall_report(gt, _collect_sets(fn()))
+    rep["sec"] = round(time.time() - t0, 1)
+    return rep
+
+
+def _lsh_cand_frac(emb: DataFrame, probes: DataFrame, head: dict,
+                   n_tables: int = N_TABLES,
+                   planes: int = PLANES_PER_TABLE) -> float:
+    """Candidates the LSH path touches per probe, as a fraction of the
+    corpus (the efficiency half of recall). Zero-norm vectors are
+    excluded BEFORE the bucket explode, as the serving path does."""
+    emb_b = (emb.filter(norm("embedding") > 0)
+             .withColumn("buckets", F.array(*lsh_bucket_cols(n_tables,
+                                                             planes))))
+    probe_b = (emb_b.join(F.broadcast(probes),
+                          emb_b.vec_id == probes.probe_id)
+               .select("probe_id",
+                       F.posexplode("buckets").alias("t", "qb")))
+    corp_b = emb_b.select("vec_id", F.posexplode("buckets").alias("t", "b"))
+    n_cand = (corp_b.join(F.broadcast(probe_b),
+                          (corp_b.t == probe_b.t) & (corp_b.b == F.col("qb")))
+              .select("probe_id", "vec_id").distinct().count())
+    return round(n_cand / (head["n_probes"] * head["n_corpus"]), 4)
+
+
+def run(spark: SparkSession, sf_dir: str, mod: int) -> dict:
+    emb, probes, gt, head = _panel(spark, sf_dir, mod)
     runners = {
         "ann_lsh_topk": lambda: batch_lsh(emb, probes),
         "ivf_topk": lambda: batch_ivf(spark, emb, probes),
@@ -345,44 +328,19 @@ def run(spark: SparkSession, sf_dir: str, mod: int) -> dict:
         "ivf_pq_topk": lambda: batch_pq(spark, emb, probes, sf_dir,
                                         ivf_route=True),
         # referee-only: the rejected IVFADC residual variant, re-measured
-        # every round against the shipped raw path (see batch_pq)
+        # every run against the shipped raw path (see batch_pq)
         "ivf_pq_residual": lambda: batch_pq(spark, emb, probes, sf_dir,
                                             ivf_route=True, residual=True),
         "ivf_kmeans_topk": lambda: batch_ivf_kmeans(
             spark, emb, probes, sf_dir),
     }
-    for name, fn in runners.items():
-        t0 = time.time()
-        found = _collect_sets(fn())
-        rep = recall_report(gt, found)
-        rep["sec"] = round(time.time() - t0, 1)
-        out["paths"][name] = rep
-    # Selectivity: candidates each routing path touches, per probe,
-    # as a fraction of the corpus (the efficiency half of recall).
-    # Zero-norm vectors are excluded BEFORE the bucket explode so this
-    # reports the same quantity as run_lsh_param_sweep (ADVICE r8 #2:
-    # the two artifacts previously agreed only because no zero-norm
-    # vector happened to co-bucket at the measured tiers).
-    emb_b = (emb.filter(norm("embedding") > 0)
-             .withColumn("buckets", F.array(*lsh_bucket_cols())))
-    probe_b = (emb_b.join(F.broadcast(probes),
-                          emb_b.vec_id == probes.probe_id)
-               .select("probe_id",
-                       F.posexplode("buckets").alias("t", "qb")))
-    corp_b = emb_b.select("vec_id", F.posexplode("buckets").alias("t", "b"))
-    lsh_cands = (corp_b.join(F.broadcast(probe_b),
-                             (corp_b.t == probe_b.t) & (corp_b.b == F.col("qb")))
-                 .select("probe_id", "vec_id").distinct().count())
-    out["paths"]["ann_lsh_topk"]["cand_frac"] = round(
-        lsh_cands / (n_probes * n_corpus), 4)
-    out["paths"]["ivf_topk"]["cand_frac"] = round(IVF_NPROBE / IVF_K, 4)
-    out["paths"]["pq_topk"]["cand_frac"] = 1.0  # ADC scans all codes
-    out["paths"]["ivf_pq_topk"]["cand_frac"] = round(IVF_NPROBE / IVF_K, 4)
-    out["paths"]["ivf_pq_residual"]["cand_frac"] = round(
-        IVF_NPROBE / IVF_K, 4)
-    out["paths"]["ivf_kmeans_topk"]["cand_frac"] = round(
-        IVF_NPROBE / IVF_K, 4)
-    return out
+    paths = {name: _measure(gt, fn) for name, fn in runners.items()}
+    paths["ann_lsh_topk"]["cand_frac"] = _lsh_cand_frac(emb, probes, head)
+    paths["pq_topk"]["cand_frac"] = 1.0  # ADC scans all codes
+    for name in ("ivf_topk", "ivf_pq_topk", "ivf_pq_residual",
+                 "ivf_kmeans_topk"):
+        paths[name]["cand_frac"] = round(IVF_NPROBE / IVF_K, 4)
+    return {**head, "paths": paths}
 
 
 def run_nprobe_sweep(spark: SparkSession, sf_dir: str, mod: int) -> dict:
@@ -390,48 +348,29 @@ def run_nprobe_sweep(spark: SparkSession, sf_dir: str, mod: int) -> dict:
     recall each additional touched cell buys. nprobe=IVF_K routes to
     every cell, so its recall MUST be 1.0 (brute force through the IVF
     plan) — the sweep's self-check."""
-    emb = load(spark, sf_dir, "embeddings").cache()
-    n_corpus = emb.count()
-    probes = probe_panel(emb, mod).cache()
-    gt = _collect_sets(batch_ground_truth(emb, probes))
-    out = {"sweep": "ivf_nprobe", "sf_dir": sf_dir, "n_corpus": n_corpus,
-           "mod": mod, "n_probes": probes.count(), "top_k": TOP_K,
-           "ivf_k": IVF_K, "points": {}}
+    emb, probes, gt, head = _panel(spark, sf_dir, mod)
+    points = {}
     for nprobe in (2, 4, 8, IVF_K):
-        t0 = time.time()
-        found = _collect_sets(batch_ivf(spark, emb, probes, nprobe=nprobe))
-        rep = recall_report(gt, found)
-        rep["sec"] = round(time.time() - t0, 1)
+        rep = _measure(gt, lambda: batch_ivf(spark, emb, probes,
+                                             nprobe=nprobe))
         rep["cand_frac"] = round(nprobe / IVF_K, 4)
-        out["points"][str(nprobe)] = rep
-    return out
+        points[str(nprobe)] = rep
+    return {"sweep": "ivf_nprobe", **head, "ivf_k": IVF_K, "points": points}
 
 
 def run_refine_sweep(spark: SparkSession, sf_dir: str, mod: int) -> dict:
-    """Recall-vs-cost curve for the PQ refine window (VERDICT r11 #3:
-    price the 16x window instead of assuming it). For refine in
+    """Recall-vs-cost curve for the PQ refine window. For refine in
     {8, 16, 32}, run the ivf_pq batch panel with that ADC candidate
     window and report recall + seconds. The window is provably
     monotone-nondecreasing in recall (a superset of ADC candidates
     exact-reranked), so the curve's only open question is the COST
-    slope per tier — r12's referee-shape fix (encode before the routes
-    join) is what makes the cost comparable across rounds: the r11 sf1
-    blow-up (2149.8 s) was the join shape, not the window."""
-    emb = load(spark, sf_dir, "embeddings").cache()
-    n_corpus = emb.count()
-    probes = probe_panel(emb, mod).cache()
-    gt = _collect_sets(batch_ground_truth(emb, probes))
-    out = {"sweep": "pq_refine", "sf_dir": sf_dir, "n_corpus": n_corpus,
-           "mod": mod, "n_probes": probes.count(), "top_k": TOP_K,
-           "registered": PQ_REFINE, "points": {}}
-    for refine in (8, 16, 32):
-        t0 = time.time()
-        found = _collect_sets(batch_pq(spark, emb, probes, sf_dir,
-                                       ivf_route=True, refine=refine))
-        rep = recall_report(gt, found)
-        rep["sec"] = round(time.time() - t0, 1)
-        out["points"][str(refine)] = rep
-    return out
+    slope per tier."""
+    emb, probes, gt, head = _panel(spark, sf_dir, mod)
+    points = {str(refine): _measure(gt, lambda: batch_pq(
+        spark, emb, probes, sf_dir, ivf_route=True, refine=refine))
+        for refine in (8, 16, 32)}
+    return {"sweep": "pq_refine", **head, "registered": PQ_REFINE,
+            "points": points}
 
 
 def run_lsh_param_sweep(spark: SparkSession, sf_dir: str,
@@ -441,39 +380,15 @@ def run_lsh_param_sweep(spark: SparkSession, sf_dir: str,
     (more planes sharpen buckets for strong-similarity corpora; more
     tables buy back recall). (16, 4) is the registered configuration
     and must reproduce the main run's numbers exactly."""
-    from data_pipelines_course_spark.operators.similarity import (
-        N_TABLES, PLANES_PER_TABLE,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").cache()
-    n_corpus = emb.count()
-    probes = probe_panel(emb, mod).cache()
-    n_probes = probes.count()
-    gt = _collect_sets(batch_ground_truth(emb, probes))
-    out = {"sweep": "lsh_params", "sf_dir": sf_dir, "n_corpus": n_corpus,
-           "mod": mod, "n_probes": n_probes, "top_k": TOP_K,
-           "registered": [N_TABLES, PLANES_PER_TABLE], "points": {}}
-    emb_nz = emb.filter(norm("embedding") > 0)
+    emb, probes, gt, head = _panel(spark, sf_dir, mod)
+    points = {}
     for L, p in ((16, 2), (16, 4), (8, 6), (16, 6), (32, 6), (16, 8)):
-        t0 = time.time()
-        found = _collect_sets(batch_lsh(emb, probes, n_tables=L, planes=p))
-        rep = recall_report(gt, found)
-        rep["sec"] = round(time.time() - t0, 1)
-        emb_b = emb_nz.withColumn(
-            "buckets", F.array(*lsh_bucket_cols(L, p)))
-        probe_b = (emb_b.join(F.broadcast(probes),
-                              emb_b.vec_id == probes.probe_id)
-                   .select("probe_id",
-                           F.posexplode("buckets").alias("t", "qb")))
-        corp_b = emb_b.select("vec_id",
-                              F.posexplode("buckets").alias("t", "b"))
-        n_cand = (corp_b.join(F.broadcast(probe_b),
-                              (corp_b.t == probe_b.t)
-                              & (corp_b.b == F.col("qb")))
-                  .select("probe_id", "vec_id").distinct().count())
-        rep["cand_frac"] = round(n_cand / (n_probes * n_corpus), 4)
-        out["points"][f"{L}x{p}"] = rep
-    return out
+        rep = _measure(gt, lambda: batch_lsh(emb, probes, n_tables=L,
+                                             planes=p))
+        rep["cand_frac"] = _lsh_cand_frac(emb, probes, head, L, p)
+        points[f"{L}x{p}"] = rep
+    return {"sweep": "lsh_params", **head,
+            "registered": [N_TABLES, PLANES_PER_TABLE], "points": points}
 
 
 def main() -> None:

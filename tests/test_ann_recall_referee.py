@@ -28,11 +28,13 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from ann_recall_referee import (
-    batch_ground_truth, batch_ivf, batch_lsh, batch_pq, probe_panel,
+    batch_ground_truth, batch_ivf, batch_lsh, batch_pq,
     recall_report, _collect_sets,
 )
 from data_pipelines_course_spark.datasets import load
-from data_pipelines_course_spark.operators.similarity import QUERY_VEC_ID
+from data_pipelines_course_spark.operators.similarity import (
+    QUERY_VEC_ID, ann_probe_panel,
+)
 from data_pipelines_course_spark.queries import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -47,7 +49,7 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def probe0(spark, emb):
-    return probe_panel(emb, 10 ** 9).cache()  # only vec_id 0 survives
+    return ann_probe_panel(emb, 10 ** 9).cache()  # only vec_id 0 survives
 
 
 def _rows(df):
@@ -171,7 +173,7 @@ def test_lsh_panel_recall_floor(spark, emb):
     """Multi-probe floor on the cheap path: 100-probe mean recall@10
     measured 0.881 at sf0.01 (ANN_RECALL_r08.json); floor with margin.
     Deterministic end to end (fixed hyperplanes, fixed panel)."""
-    probes = probe_panel(emb, 5).cache()
+    probes = ann_probe_panel(emb, 5).cache()
     gt = _collect_sets(batch_ground_truth(emb, probes))
     found = _collect_sets(batch_lsh(emb, probes))
     rep = recall_report(gt, found)

@@ -4,6 +4,8 @@ brute-force ranking — the check the rows-only driver gate can't do."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from data_pipelines_course_spark.queries import all_queries
@@ -181,6 +183,45 @@ def test_py_cos_zero_norm_sorts_below_every_real_centroid():
 
 
 # ---------------------------------------------------------------------------
+# ivf_route: the routing rule every IVF path and the referee share
+# ---------------------------------------------------------------------------
+
+def test_ivf_route_ties_go_to_the_lower_cell():
+    from data_pipelines_course_spark.operators.similarity import ivf_route
+
+    cents = {3: [1.0, 0.0], 1: [2.0, 0.0], 2: [0.0, 1.0]}
+    assert ivf_route([1.0, 0.0], cents, nprobe=1) == [1]
+    assert ivf_route([1.0, 0.0], cents, nprobe=2) == [1, 3]
+
+
+def test_ivf_route_zero_centroid_ranks_below_negative_cosine():
+    from data_pipelines_course_spark.operators.similarity import ivf_route
+
+    cents = {0: [0.0, 0.0], 1: [-0.6, -0.8], 2: [0.6, 0.8]}
+    assert ivf_route([1.0, 0.0], cents, nprobe=3) == [2, 1, 0]
+    assert ivf_route([1.0, 0.0], cents, nprobe=2) == [2, 1]
+
+
+def test_ivf_route_nprobe_at_least_k_returns_every_cell():
+    from data_pipelines_course_spark.operators.similarity import ivf_route
+
+    cents = {i: [float(i), 1.0] for i in range(5)}
+    for nprobe in (5, 6, 100):
+        got = ivf_route([1.0, 0.0], cents, nprobe=nprobe)
+        assert sorted(got) == list(range(5))
+
+
+def test_ivf_route_returns_the_dict_keys():
+    """The untrained quantizer keys cells by vec_id, which need not be
+    0..K-1: the route names those ids, not positions."""
+    from data_pipelines_course_spark.operators.similarity import ivf_route
+
+    cents = {7: [0.0, 1.0], 12: [1.0, 0.0], 40: [1.0, 1.0]}
+    assert ivf_route([1.0, 0.1], cents, nprobe=2) == [12, 40]
+    assert ivf_route([1.0, 0.1], cents, nprobe=3) == [12, 40, 7]
+
+
+# ---------------------------------------------------------------------------
 # knn_brute_force: the probe is computed inside the plan
 # ---------------------------------------------------------------------------
 
@@ -255,3 +296,28 @@ def test_lsh_batch_topk_rejects_overrides_differing_from_prebuilt_index(spark):
                        emb_b=other)
     with pytest.raises(ValueError, match="would be ignored"):
         sim.lsh_batch_topk(emb, probes, emb_b=other, n_tables=16)
+
+
+# ---------------------------------------------------------------------------
+# Each vector-search step has one definition (engine and referee)
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("literal, copies", [
+    ("-_py_cos(", 1),                              # IVF routing order
+    ('orderBy(F.desc("cos_sim"), "vec_id")', 1),   # single-probe top-k
+    ("== QUERY_VEC_ID).head()", 1),                # probe fetch
+    ("(x, y) -> cast(x as double) *", 1),          # the dot product
+    ("def _ivf_cents", 0),                         # engine ivf_centroids
+    ("def _ivf_best_cell", 0),                     # engine ivf_cell
+])
+def test_each_vector_search_step_is_defined_once(literal, copies):
+    """The registered vector queries and ann_recall_referee.py share one
+    definition of each search step, so recall is measured on the
+    engine's own probe, routing, scoring and re-rank rules."""
+    root = Path(__file__).resolve().parent.parent
+    files = [*(root / "data_pipelines_course_spark").rglob("*.py"),
+             root / "ann_recall_referee.py"]
+    found = {str(p.relative_to(root)): p.read_text().count(literal)
+             for p in files}
+    assert sum(found.values()) == copies, {
+        k: n for k, n in found.items() if n}
