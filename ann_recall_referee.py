@@ -27,7 +27,7 @@ Method, per tier:
    - IVF: the engine's `ivf_centroids` / `ivf_cell` quantizer (or the
      trained `kmeans_train` / `_best_cell` one) and `ivf_route`
      routing; candidates by cell equi-join.
-   - PQ / IVF-PQ: the same `_pq_codebooks` training, `_pq_encode_sql`
+   - PQ / IVF-PQ: the same `_pq_codebooks` training, `pq_codes`
      codes and `adc_luts` tables; per-probe LUTs ride the broadcast
      probe frame as a flat array column, ADC = PQ_M element_at adds,
      re-scored with the engine's `rounded_cos`.
@@ -66,11 +66,10 @@ from data_pipelines_course_spark.datasets import load
 from data_pipelines_course_spark.operators.similarity import (
     IVF_K, IVF_NPROBE, N_TABLES, PLANES_PER_TABLE, PQ_KSUB, PQ_M,
     PQ_REFINE, TOP_K,
-    _best_cell, _normalized, _pq_codebooks, _pq_encode_sql,
-    _pq_residual_codebooks, _residual_sql, adc_luts,
-    ann_probe_panel, batch_ranked_topk, batch_score, dot, ivf_cell,
-    ivf_centroids, ivf_route, kmeans_train, lsh_batch_topk,
-    lsh_bucket_cols, norm, rounded_cos,
+    _best_cell, _normalized, _pq_codebooks, _pq_residual_codebooks,
+    _residual_sql, adc_luts, ann_probe_panel, batch_ranked_topk,
+    batch_score, dot, ivf_cell, ivf_centroids, ivf_route, kmeans_train,
+    lsh_batch_topk, lsh_bucket_cols, norm, pq_codes, rounded_cos,
 )
 
 
@@ -175,7 +174,7 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
              residual: bool = False,
              refine: int = PQ_REFINE) -> DataFrame:
     """pq_topk (ivf_route=False) / ivf_pq_topk (True) in batch form:
-    same `_pq_codebooks` training, same `_pq_encode_sql` codes; the ADC
+    same `_pq_codebooks` training, same `pq_codes` codes; the ADC
     LUT is a column on the broadcast probe frame. Probe-0 parity pinned
     in tests/test_ann_recall_referee.py.
 
@@ -202,7 +201,6 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
             cents, _ = kmeans_train(spark, sf_dir)
         if books is None or not cents:
             return spark.createDataFrame([], empty)
-        dsub = len(books[0][0])
         # _cell, rv and codes depend ONLY on the corpus row, so they are
         # computed BEFORE the routes join: computed after it, Spark
         # evaluates the argmin-over-codebooks encode expression once per
@@ -214,12 +212,10 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
         if residual:
             coded = (coded
                      .withColumn("rv", F.expr(_residual_sql(cents)))
-                     .withColumn("codes", F.expr(
-                         _pq_encode_sql(books, dsub, vec="rv"))))
+                     .withColumn("codes", pq_codes(books, vec="rv")))
             adc_sql = "element_at(cdots, _cell + 1) + " + _ADC_SQL
         else:
-            coded = coded.withColumn(
-                "codes", F.expr(_pq_encode_sql(books, dsub)))
+            coded = coded.withColumn("codes", pq_codes(books))
             adc_sql = _ADC_SQL
         coded = coded.join(
             F.broadcast(_routes(spark, probes, dict(enumerate(cents)))),
@@ -232,9 +228,7 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
         books, _ = _pq_codebooks(spark, sf_dir)
         if books is None:
             return spark.createDataFrame([], empty)
-        dsub = len(books[0][0])
-        coded = (_normalized(emb)
-                 .withColumn("codes", F.expr(_pq_encode_sql(books, dsub))))
+        coded = _normalized(emb).withColumn("codes", pq_codes(books))
         pairs = coded.crossJoin(
             F.broadcast(_probe_luts(spark, emb, probes, books)))
         adc_sql = _ADC_SQL

@@ -21,6 +21,7 @@ list_transform/list_sum pipeline.
 from __future__ import annotations
 
 import hashlib
+import json
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -1019,32 +1020,28 @@ def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
     return session_cache(spark, sf_dir, ("embeddings",), ("pq_res",), build)
 
 
-def _pq_encode_sql(books: list[list[list[float]]], dsub: int,
-                   vec: str = "nv") -> str:
+def pq_codes(books: list[list[list[float]]], vec: str = "nv") -> Column:
     """codes: array<int> of length PQ_M — per subspace, the index of the
     nearest sub-centroid (squared-L2 over a slice of the `vec` column:
     the unit vector `nv` for raw PQ, the residual `rv` for IVFADC), as
-    an argmin via array_sort over (distance, index) structs.
+    an argmin via array_sort over (distance, index) structs, so ties go
+    to the lower index.
 
-    Emitted as ONE UNROLLED SQL string so construction is a single
-    parse on the JVM: building the same 8x16 tree through Column
-    operators cost ~5 s of py4j round-trips per construction (measured;
-    execution was fine). The tempting alternative — nested
-    transform()s over a literal 3-D codebook array — parses fast but
-    REBUILDS the 1024-literal array per lambda element at runtime
-    (CreateArray under a lambda escapes constant folding): measured
-    3x slower execution. Unrolled text keeps each candidate's codebook
-    row a small foldable literal. Still zero UDF, still codegen."""
-    subs = []
-    for m, book in enumerate(books):
-        sub = f"slice({vec}, {m * dsub + 1}, {dsub})"
-        cands = ",".join(
-            f"struct(aggregate(zip_with({sub}, {_arr_sql(c)}, "
-            f"(x, y) -> (x - y) * (x - y)), 0.0D, (a, v) -> a + v) AS d, "
-            f"{j} AS j)"
-            for j, c in enumerate(book))
-        subs.append(f"element_at(array_sort(array({cands})), 1).j")
-    return "array(" + ",".join(subs) + ")"
+    One small higher-order expression over the codebooks as ONE typed
+    literal: from_json of a constant string is constant-folded into a
+    single array literal, so analysis stays cheap and nothing is rebuilt
+    per row or per lambda element (a nested array() of per-component
+    literals would be: CreateArray under a lambda escapes constant
+    folding). JSON spells NaN and ±Infinity as bare words that from_json
+    reads back as doubles. Zero UDF, one scan-side projection."""
+    dsub = len(books[0][0])
+    lit = f"from_json('{json.dumps(books)}', 'array<array<array<double>>>')"
+    return F.expr(
+        f"transform(sequence(0, {len(books) - 1}), m -> element_at(array_sort("
+        f"transform(element_at({lit}, m + 1), (c, j) -> struct(aggregate("
+        f"zip_with(slice({vec}, m * {dsub} + 1, {dsub}), c, "
+        f"(x, y) -> (x - y) * (x - y)), 0.0D, (a, v) -> a + v) AS d, "
+        f"j AS j))), 1).j)")
 
 
 def _residual_sql(cents: list[list[float]]) -> str:
@@ -1052,9 +1049,9 @@ def _residual_sql(cents: list[list[float]]) -> str:
     nv − cents[_cell] — the quantity IVFADC's codebooks encode. A CASE
     over _cell (not element_at into a 2-D literal array): CASE
     evaluates only the matched branch's 64-literal centroid per row,
-    where a literal array-of-arrays would rebuild all K·dim literals
-    per row (the same constant-folding escape _pq_encode_sql documents
-    for nested codebook literals)."""
+    where a literal array-of-arrays built with array() would rebuild
+    all K·dim literals per row (pq_codes' from_json literal is the
+    folded alternative)."""
     branches = " ".join(
         f"WHEN {i} THEN zip_with(nv, {_arr_sql(c)}, (x, y) -> x - y)"
         for i, c in enumerate(cents))
@@ -1071,10 +1068,11 @@ def _residual_sql(cents: list[list[float]]) -> str:
 # subspaces). At 100 TB these columns are WRITE-TIME table layout (the
 # pq_topk/ivf_pq_topk docstrings' stated design: cells are the partition
 # column, codes a stored column); locally the staged digest is that
-# layout, built once per session in the cold pass (OPTIMIZATION_r12.md
-# has the timings). Values are identical: staging is pure
-# materialization, and `SPARK_GRAFT_STAGING=none` re-derives from raw
-# lineage.
+# layout, built once per session in the cold pass. Its `codes` column is
+# one projection over a single folded codebook literal (pq_codes), so
+# the build's analysis cost does not grow with the codebook size.
+# Values are identical: staging is pure materialization, and
+# `SPARK_GRAFT_STAGING=none` re-derives from raw lineage.
 
 
 def _serving_index(spark: SparkSession, sf_dir: str,
@@ -1090,8 +1088,7 @@ def _serving_index(spark: SparkSession, sf_dir: str,
         if cents:
             idx = idx.withColumn("_cell", _best_cell(cents)["c"].cast("int"))
         if books is not None:
-            dsub = len(books[0][0])  # sub-vector width
-            idx = idx.withColumn("codes", F.expr(_pq_encode_sql(books, dsub)))
+            idx = idx.withColumn("codes", pq_codes(books))
         return stage(idx)
     # Keyed by the trained VALUES, not only their shapes: a caller
     # retraining with different hyperparameters (same k) in one session
@@ -1136,9 +1133,9 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric distance (query-side lookup tables, one add per
     subspace), exact-cosine re-rank the top PQ_REFINE*TOP_K.
 
-    Plan: encoding is a scan-side projection (argmin over literal
-    codebooks); the ADC score is PQ_M element_at() lookups into literal
-    LUT arrays + adds — no join, no shuffle until the final top-k
+    Plan: encoding is a scan-side projection (argmin over one folded
+    codebook literal, see pq_codes); the ADC score is PQ_M element_at()
+    lookups into literal LUT arrays + adds — no join, no shuffle until the final top-k
     (TakeOrderedAndProject). Exact re-rank touches only the surviving
     candidates' float vectors. At 100 TB the codes are a WRITE-TIME
     column (8 B/vector beside the 256 B vector): the serving scan reads
@@ -1172,8 +1169,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per touched vector.
 
     Plan: one scan; cell assignment and PQ codes are both scan-side
-    projections (literal centroids / codebooks, unrolled-SQL form —
-    see _pq_encode_sql for why); the cell filter cuts the scan output
+    projections (literal centroids; one folded codebook literal — see
+    pq_codes); the cell filter cuts the scan output
     before ADC ranks it; TakeOrderedAndProject twice (ADC candidates,
     then exact top-k). Zero exchanges, zero Python. At 100 TB: cells
     are the partition column, codes a stored column — the serving scan

@@ -43,9 +43,21 @@ _RUNTIME_CONF: dict[str, str] = {
     # filter) gets pushed below any parallelizing repartition, serializing
     # it onto the raw scan. The engine's generators always explode
     # non-empty arrays (explicit size() pre-filters), so the inference
-    # only costs; measured 2.2× on the shingle path (bench r1).
+    # only costs; it measured 2.2× slower on the shingle path.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # lower()/upper() through the JVM's own case mapping, not ICU's. With
+    # ICU on, the first lower() in a JVM runs a static initializer that
+    # title-cases every code point through ICU, charged to the first
+    # text-quality query of a session (a first lower() action took
+    # 1.6-1.7 s, against 0.3 s with ICU off, on a 4-core host). Off,
+    # lower() takes UTF8String's ASCII fast path and String.toLowerCase
+    # otherwise.
+    # Trade-off: non-ASCII case mapping follows the JVM's default locale
+    # (a Turkish locale maps 'I' to a dotless 'ı'). Under an English or
+    # root locale it is the full Unicode mapping that
+    # test_known_casefold_divergence pins.
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 
@@ -113,6 +125,14 @@ def get_spark(app_name: str = "data-pipelines-course-spark",
         # No stage progress bars on stdout: bench.py's contract is machine-
         # parsed JSON lines and the \r-rewritten bars corrupt tail capture.
         .config("spark.ui.showConsoleProgress", "false")
+        # No Python call-site capture per Column method: PySpark's
+        # _with_origin wrapper otherwise adds py4j calls and a stack walk
+        # to every Column call (building tpch_q1_pricing_summary makes 909
+        # py4j calls with it, 309 without). Trade-off: Spark errors no longer
+        # carry the Python call site in their query context. PySpark
+        # reads it once per Python process, so it is a builder conf, not
+        # a runtime one.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle width: one task per local core — wider stages over small
     # inputs only add per-task fixed cost, and AQE coalesces further when

@@ -1,12 +1,12 @@
-"""Env-gated materialization for shared digest tables (VERDICT r5 #3).
+"""Env-gated materialization for shared digest tables.
 
 The LSH/Jaccard/curation family computes compact digest tables (shingle
 hashes, minhash signatures, simhash chunks, quality-gate survivor sets)
 that are consumed by MORE THAN ONE downstream operator — typically both
 sides of a self-join. Spark's exchange reuse does not fire across a
 BroadcastExchange boundary, so without explicit staging each consumer
-re-runs the whole digest pipeline (measured r5: the checkpoint sweep
-halved the family's warm bench). `stage()` is the one place that
+re-runs the whole digest pipeline (staging with checkpoints halved
+the family's warm bench). `stage()` is the one place that
 materialization strategy lives, selected by ``SPARK_GRAFT_STAGING``:
 
 - ``checkpoint`` (default) — ``localCheckpoint(eager=False)``. Fastest:
@@ -24,11 +24,11 @@ materialization strategy lives, selected by ``SPARK_GRAFT_STAGING``:
   ``spark.dynamicAllocation.cachedExecutorIdleTimeout`` high enough
   that idle reaping doesn't evict the digest mid-query). Values are
   identical to checkpoint mode — proven by the driver_sim full-registry
-  sweep under ``SPARK_GRAFT_STAGING=persist`` (NOTES_r06) — and the
+  sweep under ``SPARK_GRAFT_STAGING=persist`` — and the
   recompute-on-block-loss behavior is OBSERVED, not assumed:
   ``tests/test_staging.py::test_persist_mode_recomputes_lost_blocks``
   drops every staged block between two consumers of one constructed
-  frame and requires a hash match (VERDICT r6 #4). The mirror
+  frame and requires a hash match. The mirror
   injection under ``checkpoint`` (drop a block, watch the job fail) is
   not locally testable — localCheckpoint blocks live in RDD storage
   with no catalog handle, and a single JVM has no executor to lose —
@@ -74,8 +74,17 @@ _MODES = ("checkpoint", "persist", "none")
 
 def stage(df: DataFrame) -> DataFrame:
     """Materialize a multiply-consumed digest table per the env-selected
-    strategy (see module docstring). Lazy in every mode: the first
-    consumer's action pays the build, later consumers reuse it."""
+    strategy (see module docstring); the first consumer's action stores
+    it and later consumers reuse it.
+
+    Not fully lazy under ``checkpoint`` with AQE on (the default):
+    ``localCheckpoint(eager=False)`` asks for the subtree's RDD, and the
+    adaptive plan runs every shuffle and broadcast stage below the
+    staged frame to produce it — at construction, before any action.
+    Only the final stage that writes the blocks waits for the first
+    action. Building the PQ serving index thus runs its widen shuffle
+    when the frame is built. ``persist``, ``none`` and ``checkpoint``
+    with AQE off start no job at construction."""
     mode = os.environ.get("SPARK_GRAFT_STAGING", "checkpoint").lower()
     if mode == "checkpoint":
         return df.localCheckpoint(eager=False)

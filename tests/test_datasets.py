@@ -144,3 +144,23 @@ def test_local_cores_parses_local_masters():
     assert _local_cores("local[*]") == len(os.sched_getaffinity(0))
     assert _local_cores("spark://host:7077") is None
     assert _local_cores("local-cluster[2,1,1024]") is None
+
+
+ICU_CONF = "spark.sql.icu.caseMappings.enabled"
+
+
+def test_get_spark_turns_off_icu_case_mapping_and_call_site_capture(spark):
+    assert spark.conf.get(ICU_CONF) == "false"
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") \
+        == "false"
+
+
+def test_configure_turns_off_icu_case_mapping(spark):
+    from data_pipelines_course_spark.session import configure
+
+    spark.conf.set(ICU_CONF, "true")
+    try:
+        configure(spark)
+        assert spark.conf.get(ICU_CONF) == "false"
+    finally:
+        configure(spark)

@@ -155,6 +155,74 @@ def test_ivf_pq_recall_and_exact_rerank(spark):
             assert abs(r["cos_sim"] - brute[r["vec_id"]]) < 1e-9
 
 
+def _np_pq_codes(x, books):
+    """Reference PQ encode: per subspace, the argmin of squared L2 over
+    the codewords, summed left to right like the engine's aggregate, a
+    NaN distance ranked last and ties going to the lower index."""
+    import numpy as np
+
+    x = np.asarray(x, dtype=float)
+    dsub = len(books[0][0])
+    codes = []
+    for m, book in enumerate(books):
+        sub = x[:, m * dsub:(m + 1) * dsub]
+        c = np.asarray(book, dtype=float)
+        d = np.zeros((len(x), len(c)))
+        for k in range(dsub):
+            d = d + (sub[:, k, None] - c[None, :, k]) ** 2
+        # NaN sorts after +inf in Spark; lexsort is stable, so equal
+        # distances keep the lower j first
+        nan = np.isnan(d)
+        codes.append(np.lexsort((nan, np.where(nan, np.inf, d)))[:, 0])
+    return [tuple(int(v) for v in row) for row in np.array(codes).T]
+
+
+def test_pq_codes_match_numpy_reference(spark):
+    """The serving index's raw `codes` and the residual (`rv`) encode
+    equal an independent numpy argmin over the cached codebooks."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    books, _ = sim._pq_codebooks(spark, SF_DIR)
+    rbooks, _, cents = sim._pq_residual_codebooks(spark, SF_DIR)
+    rows = (sim._serving_index(spark, SF_DIR, books, cents)
+            .select("vec_id", "nv", "_cell", "codes").orderBy("vec_id")
+            .collect())
+    nv = np.array([r["nv"] for r in rows])
+    assert [tuple(r["codes"]) for r in rows] == _np_pq_codes(nv, books)
+
+    rv = nv - np.array(cents)[[r["_cell"] for r in rows]]
+    res = (sim._serving_index(spark, SF_DIR, None, cents)
+           .withColumn("rv", F.expr(sim._residual_sql(cents)))
+           .select("vec_id", sim.pq_codes(rbooks, vec="rv").alias("codes"))
+           .orderBy("vec_id").collect())
+    assert [r["vec_id"] for r in res] == [r["vec_id"] for r in rows]
+    assert [tuple(r["codes"]) for r in res] == _np_pq_codes(rv, rbooks)
+
+
+def test_pq_codes_encode_non_finite_codebook_components(spark):
+    """NaN and ±Infinity codebook components encode without a parse
+    error. Such a codeword's distance is NaN or inf: inf never wins over
+    a finite distance, NaN ranks after inf, and an all-NaN subspace
+    falls back to the lowest j."""
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    nan, inf = float("nan"), float("inf")
+    books = [[[nan, 0.0], [1.0, 1.0], [inf, 0.0]],
+             [[0.5, -inf], [0.0, 0.0], [0.0, 0.0]],
+             [[nan, 0.0], [inf, 0.0], [nan, nan]],
+             [[nan, nan], [nan, 1.0], [0.0, nan]]]
+    vecs = [[1.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+            [9.0, 0.0, 0.5, 0.0, 1.0, 1.0, 1.0, 1.0]]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)],
+                               "id int, nv array<double>")
+    got = [tuple(r["codes"]) for r in df.select(
+        "id", sim.pq_codes(books).alias("codes")).orderBy("id").collect()]
+    assert got == _np_pq_codes(vecs, books) == [(1, 1, 1, 0), (1, 1, 1, 0)]
+
+
 def test_py_cos_zero_norm_sorts_below_every_real_centroid():
     """ADVICE r10/r11: a trained centroid CAN be the exact zero vector
     when a cell's member mean cancels (adversarial v/-v corpora — _unit
@@ -309,6 +377,8 @@ def test_lsh_batch_topk_rejects_overrides_differing_from_prebuilt_index(spark):
     ("(x, y) -> cast(x as double) *", 1),          # the dot product
     ("def _ivf_cents", 0),                         # engine ivf_centroids
     ("def _ivf_best_cell", 0),                     # engine ivf_cell
+    ("def _pq_encode_sql", 0),                     # engine pq_codes
+    ("(x - y) * (x - y)", 1),                      # PQ squared-L2
 ])
 def test_each_vector_search_step_is_defined_once(literal, copies):
     """The registered vector queries and ann_recall_referee.py share one
