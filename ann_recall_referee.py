@@ -25,8 +25,9 @@ Method, per tier:
      candidates by (table, bucket) equi-join instead of a per-probe OR
      filter.
    - IVF: the engine's `ivf_centroids` / `ivf_cell` quantizer (or the
-     trained `kmeans_train` / `_best_cell` one) and `ivf_route`
-     routing; candidates by cell equi-join.
+     trained `kmeans_train` / `_best_cell` one), both the engine's one
+     nearest-centroid argmax over one folded centroid literal, and
+     `ivf_route` routing; candidates by cell equi-join.
    - PQ / IVF-PQ: the same `_pq_codebooks` training, `pq_codes`
      codes and `adc_luts` tables; per-probe LUTs ride the broadcast
      probe frame as a flat array column, ADC = PQ_M element_at adds,
@@ -67,9 +68,9 @@ from data_pipelines_course_spark.operators.similarity import (
     IVF_K, IVF_NPROBE, N_TABLES, PLANES_PER_TABLE, PQ_KSUB, PQ_M,
     PQ_REFINE, TOP_K,
     _best_cell, _normalized, _pq_codebooks, _pq_residual_codebooks,
-    _residual_sql, adc_luts, ann_probe_panel, batch_ranked_topk,
+    _residual, adc_luts, ann_probe_panel, batch_ranked_topk,
     batch_score, dot, ivf_cell, ivf_centroids, ivf_route, kmeans_train,
-    lsh_batch_topk, lsh_bucket_cols, norm, pq_codes, rounded_cos,
+    lsh_batch_topk, lsh_buckets, norm, pq_codes, rounded_cos,
 )
 
 
@@ -211,7 +212,7 @@ def batch_pq(spark: SparkSession, emb: DataFrame, probes: DataFrame,
                  .withColumn("_cell", _best_cell(cents)["c"].cast("int")))
         if residual:
             coded = (coded
-                     .withColumn("rv", F.expr(_residual_sql(cents)))
+                     .withColumn("rv", _residual(cents))
                      .withColumn("codes", pq_codes(books, vec="rv")))
             adc_sql = "element_at(cdots, _cell + 1) + " + _ADC_SQL
         else:
@@ -300,8 +301,7 @@ def _lsh_cand_frac(emb: DataFrame, probes: DataFrame, head: dict,
     corpus (the efficiency half of recall). Zero-norm vectors are
     excluded BEFORE the bucket explode, as the serving path does."""
     emb_b = (emb.filter(norm("embedding") > 0)
-             .withColumn("buckets", F.array(*lsh_bucket_cols(n_tables,
-                                                             planes))))
+             .withColumn("buckets", lsh_buckets(n_tables, planes)))
     probe_b = (emb_b.join(F.broadcast(probes),
                           emb_b.vec_id == probes.probe_id)
                .select("probe_id",

@@ -34,16 +34,37 @@ QUERY_VEC_ID = 0  # fixed probe vector for the deterministic top-k queries
 TOP_K = 10
 
 
+def _dot_sql(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b},"
+            f" (x, y) -> cast(x as double) * cast(y as double)),"
+            f" cast(0.0 as double), (acc, v) -> acc + v)")
+
+
 def dot(a: str, b: str) -> Column:
     """Sequential double-precision dot product of two float-array columns."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b},"
-        f" (x, y) -> cast(x as double) * cast(y as double)),"
-        f" cast(0.0 as double), (acc, v) -> acc + v)")
+    return F.expr(_dot_sql(a, b))
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
 
 
 def norm(a: str) -> Column:
-    return F.sqrt(dot(a, a))
+    return F.expr(_norm_sql(a))
+
+
+def _folded(values: list) -> str:
+    """SQL for `values`, a nested list of floats, as from_json of one
+    constant string, which ConstantFolding turns into one array literal:
+    cheap to analyze at any size and not rebuilt per row or per lambda
+    element, as an array() of literals under a lambda would be. JSON's
+    NaN and ±Infinity read back as doubles (SQL parses repr(nan) as a
+    column name)."""
+    depth, v = 0, values
+    while isinstance(v, list):
+        depth, v = depth + 1, v[0] if v else None
+    typ = "array<" * depth + "double" + ">" * depth
+    return f"from_json('{json.dumps(values)}', '{typ}')"
 
 
 def finite_norm(a: str) -> Column:
@@ -87,6 +108,11 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
         [], "vec_id bigint, label int, cos_sim double")
 
 
+def _cos_sql(a: str, b: str) -> str:
+    return (f"({_dot_sql(a, b)} /"
+            f" nullif({_norm_sql(a)} * {_norm_sql(b)}, 0.0D))")
+
+
 def cosine(a: str, b: str) -> Column:
     """NULL (not an ANSI divide-by-zero error) when either operand has
     zero norm — a zero embedding has no direction, and real corpora
@@ -99,7 +125,16 @@ def cosine(a: str, b: str) -> Column:
     products per row, measured ~3x on the brute-force scan), while
     nullif keeps the original 3-dot cost and division by NULL is NULL
     under ANSI."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    return F.expr(_cos_sql(a, b))
+
+
+def _ranked(score, vec: str, cents: list[list[float]]) -> str:
+    """SQL for array<struct<s, c>>: s = score(vec, centroid) for each
+    of `cents` (one folded literal), c its position, sorted by (s, c)
+    descending, so element 1 is the argmax with ties to the higher
+    position. `score` is `_dot_sql` or `_cos_sql`: dot() or cosine()."""
+    return (f"sort_array(transform({_folded(cents)}, (w, c) -> "
+            f"struct({score(vec, 'w')} AS s, c AS c)), false)")
 
 
 def rounded_cos(score: Column) -> Column:
@@ -220,12 +255,13 @@ def _hyperplanes(n_tables: int = N_TABLES,
     return planes
 
 
-def lsh_bucket_cols(n_tables: int = N_TABLES,
-                    planes_per_table: int = PLANES_PER_TABLE
-                    ) -> list[Column]:
-    """One bucket id per hash table: the sign-bit signature of the
-    embedding against that table's PLANES_PER_TABLE fixed hyperplanes;
-    pure JVM expressions over the array column.
+def lsh_buckets(n_tables: int = N_TABLES,
+                planes_per_table: int = PLANES_PER_TABLE) -> Column:
+    """The `buckets` index column: per hash table, the sign bits of the
+    embedding's dots with that table's fixed hyperplanes (bit j: plane
+    j), one transform over one folded (table, plane, dim) literal. Its
+    metadata records (n_tables, planes_per_table), so a prebuilt index
+    states the parameters it was built with.
 
     Multi-table (L × p) design: for a neighbor at angular similarity s,
     single-table collision is s^p but union-over-L recall is
@@ -252,26 +288,14 @@ def lsh_bucket_cols(n_tables: int = N_TABLES,
     near-dup-rich sf1 tier: 0.998 recall at the same 63% touch, IVF
     0.962 at 25%)."""
     planes = _hyperplanes(n_tables, planes_per_table)
-    cols = []
-    for t in range(n_tables):
-        bucket = None
-        for j in range(planes_per_table):
-            d = dot("embedding", _arr_sql(planes[t * planes_per_table + j]))
-            bit = (F.when(d > 0, F.lit(1 << j).cast("long"))
-                   .otherwise(F.lit(0).cast("long")))
-            bucket = bit if bucket is None else bucket + bit
-        cols.append(bucket)
-    return cols
-
-
-def lsh_buckets(n_tables: int = N_TABLES,
-                planes_per_table: int = PLANES_PER_TABLE) -> Column:
-    """The `buckets` index column: `lsh_bucket_cols` as one array, its
-    (n_tables, planes_per_table) recorded in the column metadata so a
-    prebuilt index states the parameters it was built with."""
-    return F.array(*lsh_bucket_cols(n_tables, planes_per_table)).alias(
-        "buckets", metadata={"n_tables": n_tables,
-                             "planes_per_table": planes_per_table})
+    tables = [planes[t * planes_per_table:(t + 1) * planes_per_table]
+              for t in range(n_tables)]
+    return F.expr(
+        f"transform({_folded(tables)}, ps -> aggregate("
+        f"sequence(0, {planes_per_table - 1}), 0L, (b, j) -> b + if("
+        f"{_dot_sql('embedding', 'ps[j]')} > 0, shiftleft(1L, j), 0L)))"
+    ).alias("buckets", metadata={"n_tables": n_tables,
+                                 "planes_per_table": planes_per_table})
 
 
 def _lsh_params(emb_b: DataFrame) -> tuple[int, int]:
@@ -302,10 +326,11 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     precomputed at write time; a probe turns into N_TABLES bucket
     lookups instead of a corpus scan.
 
-    The bucket table is `_bucket_index`: widened (the 64 hyperplane HOF
-    dots per row otherwise run serially in the one-row-group scan task)
-    and staged, the write-time bucket column this docstring promises,
-    built once per session and shared with ann_batch_topk.
+    The bucket table is `_bucket_index`: widened (the N_TABLES ×
+    PLANES_PER_TABLE hyperplane dots per row otherwise run serially in
+    the one-row-group scan task) and staged, the write-time bucket
+    column this docstring promises, built once per session and shared
+    with ann_batch_topk.
     `SPARK_GRAFT_STAGING=none` re-derives it from raw lineage."""
     emb = _bucket_index(spark, sf_dir)
     probe = _probe_row(emb)
@@ -317,7 +342,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         collide = c if collide is None else (collide | c)
     return _topk(emb.filter(collide & (F.col("vec_id") != QUERY_VEC_ID)
                             & (norm("embedding") > 0)),  # no direction
-                 cosine("embedding", _arr_sql(probe["embedding"])))
+                 cosine("embedding", _folded(probe["embedding"])))
 
 
 # --------------------------------------------------------------------------
@@ -368,7 +393,7 @@ def lsh_batch_topk(emb: DataFrame, probes: DataFrame,
                    planes_per_table: int | None = None,
                    emb_b: DataFrame | None = None) -> DataFrame:
     """`ann_lsh_topk` semantics over a probe panel: bucket both sides
-    with identical `lsh_bucket_cols()` signatures, equi-join on
+    with the same `lsh_buckets()` column, equi-join on
     (table, bucket), dedup candidates, exact-cosine re-rank per probe.
     Either LSH parameter may be overridden alone — the other defaults
     to the registered value. ``emb_b`` lets the caller supply a
@@ -525,24 +550,6 @@ IVF_K = 16       # coarse-quantizer cells
 IVF_NPROBE = 4   # cells searched per probe
 
 
-def _dlit(v: float) -> str:
-    """A double literal that parses for EVERY double: repr(nan)/repr(inf)
-    are bare words ('nan') that Spark's SQL parser resolves as column
-    names — one NaN centroid component then kills the whole query with
-    UNRESOLVED_COLUMN."""
-    if v != v:
-        return "cast('NaN' as double)"
-    if v == float("inf"):
-        return "cast('Infinity' as double)"
-    if v == float("-inf"):
-        return "cast('-Infinity' as double)"
-    return f"cast({v!r} as double)"
-
-
-def _arr_sql(vs: list[float]) -> str:
-    return "array(" + ", ".join(_dlit(v) for v in vs) + ")"
-
-
 def _py_cos(a: list[float], b: list[float]) -> float:
     import math
 
@@ -582,11 +589,13 @@ def ivf_centroids(emb: DataFrame) -> dict[int, list[float]]:
 
 def ivf_cell(cents: dict[int, list[float]]) -> Column:
     """The cell of `embedding` under an untrained quantizer: argmax of
-    the cosine to each centroid literal, ties to the higher cell id."""
-    scores = F.array(*[
-        F.struct(cosine("embedding", _arr_sql(cents[c])).alias("s"),
-                 F.lit(c).alias("c")) for c in sorted(cents)])
-    return F.element_at(F.sort_array(scores, asc=False), 1)["c"]
+    the cosine to each centroid, ties to the higher cell id. The ids
+    need not be 0..K-1: the argmax runs over positions in sorted-id
+    order and the winner's position maps to its id."""
+    ids = sorted(cents)
+    best = _ranked(_cos_sql, "embedding", [cents[c] for c in ids])
+    return F.expr(f"element_at(array({', '.join(map(str, ids))}),"
+                  f" element_at({best}, 1).c + 1)")
 
 
 @query("ivf_topk")  # rows-only: argmax-over-centroids is not oracle SQL
@@ -597,18 +606,18 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The coarse quantizer is the first IVF_K corpus vectors (deterministic;
     a production build would k-means them — the plan shape is identical).
-    Centroids are driver-collected once (IVF_K·64 floats) and inlined as
-    literals, so cell assignment is a pure JVM projection over the scan —
-    no join, no shuffle. Recall@10 = 1.0 for the registered probe at
-    sf0.01 (tests/test_similarity.py) — but the 100-probe panel
-    (ann_recall_referee.py / ANN_RECALL_r08.json) shows that number is
-    probe-specific, not the router's: panel mean 0.488/0.482 at
-    sf0.01/sf0.1 (weak-similarity regime, true neighbors at cos≈0.3),
-    0.962 at the near-dup-rich sf1 tier. The nprobe sweep (same
-    artifact) maps the knob at sf0.1 — nprobe 2/4/8/16 → recall
+    Centroids are driver-collected once (IVF_K·64 floats) and enter the
+    plan as one folded array literal, so cell assignment is a pure JVM
+    projection over the scan — no join, no shuffle. Recall@10 = 1.0 for
+    the registered probe at sf0.01 (tests/test_similarity.py) — but the
+    100-probe panel (ann_recall_referee.py / ANN_RECALL_r08.json) shows
+    that number is probe-specific, not the router's: panel mean
+    0.488/0.482 at sf0.01/sf0.1 (weak-similarity regime, true neighbors
+    at cos≈0.3), 0.962 at the near-dup-rich sf1 tier. The nprobe sweep
+    (same artifact) maps the knob at sf0.1 — nprobe 2/4/8/16 → recall
     0.30/0.48/0.76/1.00, i.e. near-linear recall-vs-touch: routing
-    carries little signal at cos≈0.3 (a kmeans-trained router lifts
-    the panel to 0.558-0.592 at the same 25% touch, see
+    carries little signal at cos≈0.3 (a kmeans-trained router lifts the
+    panel to 0.558-0.592 at the same 25% touch, see
     ann_recall_referee.batch_ivf_kmeans). Regime rule: prefer LSH on
     weak-similarity corpora; IVF's 4×-fewer-touched-rows wins where
     similarity structure is real (sf1-like near-dup corpora).
@@ -631,7 +640,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(celled.filter(F.col("_cell").isin(ivf_route(qv, cents))
                                & (F.col("vec_id") != QUERY_VEC_ID)
                                & (norm("embedding") > 0)),  # no direction
-                 cosine("embedding", _arr_sql(qv)))
+                 cosine("embedding", _folded(qv)))
 
 
 # --------------------------------------------------------------------------
@@ -677,12 +686,10 @@ def _normalized(emb: DataFrame) -> DataFrame:
 
 
 def _best_cell(cents: list[list[float]]) -> Column:
-    """struct(s=cos to nearest centroid, c=its index) — argmax over the
-    broadcast centroid literals, ties to the higher index (deterministic)."""
-    scores = F.array(*[
-        F.struct(dot("nv", _arr_sql(c)).alias("s"), F.lit(i).alias("c"))
-        for i, c in enumerate(cents)])
-    return F.element_at(F.sort_array(scores, asc=False), 1)
+    """struct(s=cos to nearest centroid, c=its index) — the argmax of
+    dot(nv, ·) over the centroids, ties to the higher index
+    (deterministic)."""
+    return F.expr(f"element_at({_ranked(_dot_sql, 'nv', cents)}, 1)")
 
 
 def kmeans_train(
@@ -788,7 +795,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(_serving_index(spark, sf_dir, None, cents)
                  .filter(F.col("_cell").isin(cells)
                          & (F.col("vec_id") != QUERY_VEC_ID)),
-                 cosine("embedding", _arr_sql(qv)))
+                 cosine("embedding", _folded(qv)))
 
 
 @query("embedding_kmeans")  # rows-only: iterative training is not oracle SQL
@@ -808,8 +815,8 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same (nv, _cell) table ivf_kmeans_topk serves from, one build
     per session) instead of re-running the KMEANS_K-dot argmax per row
     per execution, and recomputes only the SELECTED cell's dot:
-    dot(nv, cents[_cell]) is the argmax's own score, same
-    zip_with/aggregate fold over the same literals, so the value is
+    dot(nv, cents[_cell]) is the argmax's own score, the same dot()
+    over the same folded centroid literal, so the value is
     bit-identical to _best_cell's "s". `SPARK_GRAFT_STAGING=none`
     re-derives lineage."""
     cents, _ = kmeans_train(spark, sf_dir)
@@ -817,8 +824,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "cell int, n_vecs bigint, avg_cos double, min_cos double")
     idx = _serving_index(spark, sf_dir, None, cents)
-    cent_arr = "array(" + ", ".join(_arr_sql(c) for c in cents) + ")"
-    sc = dot("nv", f"element_at({cent_arr}, _cell + 1)")
+    sc = dot("nv", f"element_at({_folded(cents)}, _cell + 1)")
     return (idx.select(F.col("_cell").alias("cell"), sc.alias("sc"))
             .groupBy("cell")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
@@ -837,6 +843,13 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_SOFT = 2       # each vector joins its top-N cells
 SEMDEDUP_CELL_CAP = 4096  # skew guard: cells above this are sub-split
+
+
+def _soft_cells(cents: list[list[float]]) -> Column:
+    """The SEMDEDUP_SOFT cells whose centroids have the highest dot with
+    `nv`, best first (the argmax's tie rule)."""
+    return F.expr(f"transform(slice({_ranked(_dot_sql, 'nv', cents)}, 1,"
+                  f" {SEMDEDUP_SOFT}), x -> x.c)")
 
 
 @query("semdedup_candidates")  # rows-only: k-means cells are not oracle SQL
@@ -871,13 +884,8 @@ def semdedup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage.
     emb = _normalized(widen_scan(load(spark, sf_dir, "embeddings"),
                                  "vec_id"))
-    scores = F.array(*[
-        F.struct(dot("nv", _arr_sql(c)).alias("s"), F.lit(i).alias("c"))
-        for i, c in enumerate(cents)])
-    cells = F.slice(F.sort_array(scores, asc=False), 1, SEMDEDUP_SOFT)
-    assigned = emb.select(
-        "vec_id", "nv",
-        F.explode(F.transform(cells, lambda x: x["c"])).alias("cell"))
+    assigned = emb.select("vec_id", "nv",
+                          F.explode(_soft_cells(cents)).alias("cell"))
     # Skew guard: sub-split any cell above the cap into ceil(n/cap)
     # hash sub-buckets (pairs straddling sub-buckets are sacrificed —
     # the documented cap tradeoff; inert on this corpus, every cell
@@ -1027,15 +1035,10 @@ def pq_codes(books: list[list[list[float]]], vec: str = "nv") -> Column:
     an argmin via array_sort over (distance, index) structs, so ties go
     to the lower index.
 
-    One small higher-order expression over the codebooks as ONE typed
-    literal: from_json of a constant string is constant-folded into a
-    single array literal, so analysis stays cheap and nothing is rebuilt
-    per row or per lambda element (a nested array() of per-component
-    literals would be: CreateArray under a lambda escapes constant
-    folding). JSON spells NaN and ±Infinity as bare words that from_json
-    reads back as doubles. Zero UDF, one scan-side projection."""
+    One small higher-order expression over the codebooks as ONE folded
+    literal (`_folded`). Zero UDF, one scan-side projection."""
     dsub = len(books[0][0])
-    lit = f"from_json('{json.dumps(books)}', 'array<array<array<double>>>')"
+    lit = _folded(books)
     return F.expr(
         f"transform(sequence(0, {len(books) - 1}), m -> element_at(array_sort("
         f"transform(element_at({lit}, m + 1), (c, j) -> struct(aggregate("
@@ -1044,18 +1047,13 @@ def pq_codes(books: list[list[list[float]]], vec: str = "nv") -> Column:
         f"j AS j))), 1).j)")
 
 
-def _residual_sql(cents: list[list[float]]) -> str:
+def _residual(cents: list[list[float]]) -> Column:
     """rv: the vector's residual from its assigned coarse centroid,
-    nv − cents[_cell] — the quantity IVFADC's codebooks encode. A CASE
-    over _cell (not element_at into a 2-D literal array): CASE
-    evaluates only the matched branch's 64-literal centroid per row,
-    where a literal array-of-arrays built with array() would rebuild
-    all K·dim literals per row (pq_codes' from_json literal is the
-    folded alternative)."""
-    branches = " ".join(
-        f"WHEN {i} THEN zip_with(nv, {_arr_sql(c)}, (x, y) -> x - y)"
-        for i, c in enumerate(cents))
-    return f"CASE _cell {branches} END"
+    nv − cents[_cell] — the quantity IVFADC's codebooks encode. The
+    centroids are one folded literal, so element_at picks the row's
+    centroid without rebuilding the K·dim components per row."""
+    return F.expr(f"zip_with(nv, element_at({_folded(cents)}, _cell + 1),"
+                  f" (x, y) -> x - y)")
 
 
 # The serving index is staged and cached per session because, built
@@ -1118,13 +1116,13 @@ def _adc_topk(coded: DataFrame, qv: list[float],
     the top PQ_REFINE*TOP_K candidates by it are exact-cosine
     re-ranked on their unit vectors."""
     adc_sql = " + ".join(
-        f"element_at({_arr_sql(lut)}, element_at(codes, {m + 1}) + 1)"
+        f"element_at({_folded(lut)}, element_at(codes, {m + 1}) + 1)"
         for m, lut in enumerate(adc_luts(qv, books)))
     cands = (coded.select("vec_id", "label", "nv",
                           F.expr(adc_sql).alias("adc_score"))
              .orderBy(F.desc("adc_score"), "vec_id")
              .limit(PQ_REFINE * TOP_K))
-    return _topk(cands, dot("nv", _arr_sql(qv)))
+    return _topk(cands, dot("nv", _folded(qv)))
 
 
 @query("pq_topk")  # rows-only: trained codebooks are not oracle SQL
@@ -1196,7 +1194,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.960 at sf1, numpy sim over the exact pipeline). Residuals
     concentrate only when nlist is large; at nlist=16 the coarse
     quantizer explains too little variance. The machinery stays
-    (`_pq_residual_codebooks`, `_residual_sql`) and the referee
+    (`_pq_residual_codebooks`, `_residual`) and the referee
     publishes the residual panel as the measured negative
     (ANN_RECALL_r11 `ivf_pq_residual`). What DID close the gap, and is
     provably monotone-nondecreasing at every tier (a superset of ADC

@@ -78,6 +78,13 @@ def configure(spark: SparkSession) -> SparkSession:
 
     Called at the top of every public query entry point so the driver's own
     SparkSession behaves identically to one built by :func:`get_spark`.
+
+    Static confs are out of its reach. In particular it cannot turn off
+    PySpark's per-Column call-site capture
+    (`spark.python.sql.dataFrameDebugging.enabled`, which `get_spark`
+    sets at build time): `spark.conf.set` on it raises
+    CANNOT_MODIFY_STATIC_CONFIG, so a session built elsewhere keeps the
+    capture and its extra py4j calls per Column method.
     """
     for key, value in _runtime_conf().items():
         try:

@@ -20,11 +20,6 @@ registered entry itself (panel rule, probe-0 restriction, schema).
 from __future__ import annotations
 
 import pytest
-
-# Referee suite: long-tail tier (VERDICT r12 #2) — deselected from the
-# default fast tier; runs builder-side with -m "slow or not slow".
-pytestmark = pytest.mark.slow
-
 from pyspark.sql import functions as F
 
 from ann_recall_referee import (

@@ -9,7 +9,7 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-SLOW_TEST = "tests/test_ann_recall_referee.py::test_lsh_panel_recall_floor"
+SLOW_TEST = "tests/test_recall_referee.py::test_wilson_ci_known_values"
 
 
 def _collect(*args: str) -> subprocess.CompletedProcess:
@@ -35,5 +35,5 @@ def test_each_named_path_is_checked_on_its_own():
     out = _collect("tests/test_tablefn.py")
     assert out.returncode == 0, out.stdout + out.stderr
     # A fast file beside it does not excuse an all-slow file.
-    out = _collect("tests/test_ann_recall_referee.py", "tests/test_tablefn.py")
+    out = _collect("tests/test_recall_referee.py", "tests/test_tablefn.py")
     assert out.returncode == 4, out.stdout + out.stderr

@@ -119,10 +119,7 @@ def test_ivf_cells_as_partition_column_prune_probe_reads(spark, tmp_path):
                  .select("vec_id", "embedding").collect())
     cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
              for r in cent_rows}
-    scores = F.array(*[
-        F.struct(sim.cosine("embedding", sim._arr_sql(cents[c])).alias("s"),
-                 F.lit(c).alias("c")) for c in sorted(cents)])
-    best = F.element_at(F.sort_array(scores, asc=False), 1)["c"]
+    best = sim.ivf_cell(cents)
     path = str(tmp_path / "ivf_layout")
     (emb.withColumn("cell", best)
      .write.partitionBy("cell").parquet(path))
@@ -195,7 +192,7 @@ def test_pq_codes_match_numpy_reference(spark):
 
     rv = nv - np.array(cents)[[r["_cell"] for r in rows]]
     res = (sim._serving_index(spark, SF_DIR, None, cents)
-           .withColumn("rv", F.expr(sim._residual_sql(cents)))
+           .withColumn("rv", sim._residual(cents))
            .select("vec_id", sim.pq_codes(rbooks, vec="rv").alias("codes"))
            .orderBy("vec_id").collect())
     assert [r["vec_id"] for r in res] == [r["vec_id"] for r in rows]
@@ -206,7 +203,10 @@ def test_pq_codes_encode_non_finite_codebook_components(spark):
     """NaN and ±Infinity codebook components encode without a parse
     error. Such a codeword's distance is NaN or inf: inf never wins over
     a finite distance, NaN ranks after inf, and an all-NaN subspace
-    falls back to the lowest j."""
+    falls back to the lowest j. The same folded-literal builder carries
+    every probe, LUT and centroid literal, and reads them back exactly."""
+    from pyspark.sql import functions as F
+
     import data_pipelines_course_spark.operators.similarity as sim
 
     nan, inf = float("nan"), float("inf")
@@ -221,6 +221,104 @@ def test_pq_codes_encode_non_finite_codebook_components(spark):
     got = [tuple(r["codes"]) for r in df.select(
         "id", sim.pq_codes(books).alias("codes")).orderBy("id").collect()]
     assert got == _np_pq_codes(vecs, books) == [(1, 1, 1, 0), (1, 1, 1, 0)]
+    lit = [nan, inf, -inf, 0.1, -2.5e-300, 1 / 3]
+    back = spark.range(1).select(F.expr(sim._folded(lit))).head()[0]
+    assert [repr(v) for v in back] == [repr(v) for v in lit]
+
+
+def _seq_dot(a, b):
+    """Sum of a * b over the last axis, left to right in double, like
+    the engine's dot()."""
+    import numpy as np
+
+    a, b = np.broadcast_arrays(np.asarray(a, float), np.asarray(b, float))
+    acc = np.zeros(a.shape[:-1])
+    for k in range(a.shape[-1]):
+        acc = acc + a[..., k] * b[..., k]
+    return acc
+
+
+def _np_ranked(s):
+    """Cell positions per row by (score, position) descending: a NaN
+    score (NULL in the engine) ranks last, ties go to the higher
+    position."""
+    import numpy as np
+
+    s = np.where(np.isnan(s), -np.inf, s)
+    pos = np.broadcast_to(np.arange(s.shape[1]), s.shape)
+    return np.lexsort((-pos, -s), axis=1)
+
+
+def _embeddings(spark):
+    import numpy as np
+    from data_pipelines_course_spark import datasets
+
+    emb = datasets.load(spark, SF_DIR, "embeddings")
+    rows = emb.orderBy("vec_id").collect()
+    return emb, np.array([r["embedding"] for r in rows], dtype=float)
+
+
+def test_ivf_cell_matches_numpy_reference(spark):
+    """The untrained quantizer's cell is the cosine argmax over the
+    centroid dict's keys, which need not be contiguous, with ties going
+    to the higher id (a duplicated centroid ties exactly)."""
+    import numpy as np
+
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    emb, x = _embeddings(spark)
+    cents = {3 * c + 5: v for c, v in sim.ivf_centroids(emb).items()}
+    low = min(cents)
+    cents[max(cents) + 7] = cents[low]
+    keys = sorted(cents)
+    c = np.array([cents[k] for k in keys])
+    with np.errstate(invalid="ignore", divide="ignore"):
+        s = _seq_dot(x[:, None], c[None]) / (
+            np.sqrt(_seq_dot(x, x))[:, None] * np.sqrt(_seq_dot(c, c))[None])
+    want = [keys[j] for j in _np_ranked(s)[:, 0]]
+    got = emb.orderBy("vec_id").select(sim.ivf_cell(cents)).collect()
+    assert [r[0] for r in got] == want
+    assert max(cents) in want and low not in want
+
+
+def test_trained_argmax_matches_numpy_reference(spark):
+    """_best_cell's (c, s) and semdedup's top-SEMDEDUP_SOFT cells equal a
+    numpy ranking of dot(nv, centroid) over the trained centroids."""
+    import numpy as np
+
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    cents, _ = sim.kmeans_train(spark, SF_DIR)
+    emb, _ = _embeddings(spark)
+    rows = (sim._normalized(emb).orderBy("vec_id")
+            .select("nv", sim._best_cell(cents).alias("b"),
+                    sim._soft_cells(cents).alias("soft")).collect())
+    nv = np.array([r["nv"] for r in rows])
+    s = _seq_dot(nv[:, None], np.array(cents)[None])
+    order = _np_ranked(s)
+    assert [r["b"]["c"] for r in rows] == order[:, 0].tolist()
+    assert [r["b"]["s"] for r in rows] == s[np.arange(len(s)),
+                                            order[:, 0]].tolist()
+    assert [r["soft"] for r in rows] == \
+        order[:, :sim.SEMDEDUP_SOFT].tolist()
+
+
+@pytest.mark.parametrize("n_tables, planes", [(16, 4), (8, 6)])
+def test_lsh_buckets_match_numpy_sign_bits(spark, n_tables, planes):
+    """Each table's bucket sets bit j when the embedding's dot with that
+    table's j-th `_hyperplanes` row is positive."""
+    import numpy as np
+
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    emb, x = _embeddings(spark)
+    p = np.array(sim._hyperplanes(n_tables, planes))
+    bits = (_seq_dot(x[:, None], p[None]) > 0).astype(np.int64)
+    want = (bits.reshape(len(x), n_tables, planes)
+            << np.arange(planes)).sum(axis=2)
+    got = (emb.orderBy("vec_id")
+           .select(sim.lsh_buckets(n_tables, planes)).collect())
+    assert [r[0] for r in got] == want.tolist()
 
 
 def test_py_cos_zero_norm_sorts_below_every_real_centroid():
@@ -379,6 +477,10 @@ def test_lsh_batch_topk_rejects_overrides_differing_from_prebuilt_index(spark):
     ("def _ivf_best_cell", 0),                     # engine ivf_cell
     ("def _pq_encode_sql", 0),                     # engine pq_codes
     ("(x - y) * (x - y)", 1),                      # PQ squared-L2
+    ("def _dlit", 0),                              # per-double SQL text
+    ("_arr_sql(", 0),                              # per-component arrays
+    ("from_json('", 1),                            # the folded literal
+    ("sort_array(transform(", 1),                  # nearest-centroid argmax
 ])
 def test_each_vector_search_step_is_defined_once(literal, copies):
     """The registered vector queries and ann_recall_referee.py share one
