@@ -1,4 +1,4 @@
-"""Physical table layout — bucketing and partitioned-parquet helpers.
+"""Physical table layout — bucketing and z-order helpers.
 
 Beyond-reference engine surface (SURVEY §4.2 / W2, BASELINE.json north
 star). The reference's only layout decision is Dask's sorted-index
@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["write_bucketed", "write_partitioned", "zorder_layout"]
+__all__ = ["write_bucketed", "zorder_layout"]
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
@@ -52,18 +52,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
-    """Hive-style partitioned parquet (the W2 'known divisions' analog).
-
-    Readers filtering on `partition_cols` get static partition pruning;
-    joins against a dim filtered at runtime get dynamic partition
-    pruning. Choose low-cardinality, filter-frequent columns (date,
-    region) — never a high-cardinality key (file-per-value explosion).
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def co_located_join(spark: SparkSession, left_table: str, right_table: str,

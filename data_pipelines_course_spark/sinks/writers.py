@@ -19,9 +19,12 @@ Scale design:
 - `write_partitioned_parquet` is W2 (the dask `set_partition('DateTime',
   yearly divisions)` at "Chapter 4 - First Steps with Dask.ipynb" cells
   17-20): hive-partitioned layout so later reads prune partitions
-  statically and dynamically. `repartitionByRange` before the write keeps
-  one writer task per partition value instead of every task appending to
-  every directory (small-files explosion at 100 TB).
+  statically and dynamically. `place_partition_values` shuffles each
+  partition value onto exactly one writer task before the write, so each
+  value gets one file instead of one per upstream task (small-files
+  explosion at 100 TB). Like dask's explicit divisions, an integral or
+  date key is its own division (`pmod(v, n)`): the input is read once,
+  with no sampling job to choose bounds.
 - `coalesce(1)` appears ONLY in `write_report_csv` (a top-k report is
   tiny by construction); never on data-scale outputs.
 """
@@ -29,6 +32,9 @@ Scale design:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row, functions as F
+from pyspark.sql.types import DateType, IntegralType
+
+from ..datasets import shuffle_width
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
@@ -62,14 +68,48 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
 
 
+def place_partition_values(df: DataFrame,
+                           partition_cols: list[str]) -> DataFrame:
+    """Shuffle `df` so that every value of the partition key lands on
+    exactly one task; a `partitionBy` write of the result then writes one
+    file per value.
+
+    A single integral or `DateType` key is its own division, as dask's
+    explicit `divisions` are: value v goes to task `pmod(v, n)` with
+    `n = shuffle_width`, a date by its `unix_date`, NULL to task 0. No job
+    samples the input for bounds, so it is read once. Consecutive values
+    round-robin: 1995-2001 over 4 tasks puts 2, 2, 2 and 1 years on them.
+    Trade-off: placement ignores row counts and gaps, so one heavy value
+    is one heavy task, and a key whose stride shares a factor with n
+    (only even years with n = 4) uses fewer tasks. All n tasks run, so a
+    width far above the key's cardinality (Spark's default 200 in a
+    session not built by `session.get_spark`) pays for empty writers.
+
+    Any other key (a string, several columns) is range-partitioned, which
+    samples the input once to choose contiguous bounds."""
+    if len(partition_cols) == 1:
+        key = F.col(partition_cols[0])
+        dtype = df.schema[partition_cols[0]].dataType
+        value = (F.unix_date(key) if isinstance(dtype, DateType)
+                 else key if isinstance(dtype, IntegralType) else None)
+        if value is not None:
+            n = shuffle_width(df.sparkSession)
+            # pmod is below n, so the int cast (the direct-id shuffle
+            # rejects bigint) cannot overflow.
+            task = F.coalesce(F.pmod(value, F.lit(n)).cast("int"), F.lit(0))
+            return df.repartitionById(n, task)
+    return df.repartitionByRange(*partition_cols)
+
+
 def write_partitioned_parquet(df: DataFrame, path: str,
                               partition_cols: list[str],
                               mode: str = "overwrite") -> None:
-    """W2 — hive-partitioned parquet. Range-repartition on the partition
-    key first: each task then owns a contiguous slice of key values, so a
-    p-valued partition column yields ~p writer tasks × 1 file instead of
-    (tasks × p) small files."""
-    df.repartitionByRange(*partition_cols).write.mode(mode) \
+    """W2 — hive-partitioned parquet with one file per partition value:
+    `place_partition_values` puts each value on one writer task, so a
+    p-valued key writes p files instead of (tasks × p) small ones. An
+    integral or date key writes with no sampling job; see that helper for
+    the trade-off on gapped keys."""
+    place_partition_values(df, partition_cols).write.mode(mode) \
         .partitionBy(*partition_cols).parquet(path)
 
 
@@ -241,7 +281,7 @@ def incremental_daily_rollup(events: DataFrame, rollup_path: str,
     # the same session (see streaming.jobs.idempotent_batch_sink).
     daily = daily.persist()
     try:
-        (daily.repartitionByRange("event_date")
+        (place_partition_values(daily, ["event_date"])
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("event_date")

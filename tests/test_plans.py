@@ -10,6 +10,8 @@ graph, they fail CI when a code change silently de-optimizes a plan
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,6 +155,17 @@ def test_partition_pruning_fires(spark, partitioned_events):
     n_src = (load(spark, SF_DIR, "events")
              .filter(F.col("event_type") == "purchase").count())
     assert n_pruned == n_src
+
+
+def test_string_partition_key_writes_one_file_per_value(partitioned_events):
+    """A string key takes the range-partitioned path: still one file per
+    event_type value."""
+    tdirs = [d for d in Path(partitioned_events).iterdir()
+             if d.name.startswith("event_type=")]
+    assert len(tdirs) > 1
+    for tdir in tdirs:
+        parts = [p for p in tdir.iterdir() if p.suffix == ".parquet"]
+        assert len(parts) == 1, f"{tdir.name}: {len(parts)} files"
 
 
 def test_plan_report_shape(spark):

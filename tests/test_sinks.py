@@ -1,14 +1,21 @@
 """Sink-layer tests (SURVEY §2.2 K1-K11, W2): round-trips through every
-writer, the top-k report shape, and the partitioned-parquet layout with a
+writer, the top-k report shape, and the partitioned-parquet layout (one
+file per partition value, placed without a sampling job) with a
 plan-level assertion that partition pruning actually fires."""
 
 from __future__ import annotations
 
+import datetime
+from collections import Counter
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_course_spark.datasets import load
 from data_pipelines_course_spark.sinks.writers import (
     collect_rows,
+    place_partition_values,
     write_csv,
     write_jsonl,
     write_partitioned_parquet,
@@ -18,7 +25,7 @@ from data_pipelines_course_spark.sinks.writers import (
     year_partitioned_orders,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, count_jobs
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -80,16 +87,100 @@ def test_partitioned_parquet_prunes(spark, tmp_path):
 
 
 def test_partitioned_write_file_counts(spark, tmp_path):
-    """repartitionByRange keeps one writer slice per partition value —
-    each o_year dir must hold a small constant number of files, not one
-    per upstream task."""
+    """place_partition_values puts each partition value on one writer
+    task, so each o_year dir holds exactly one file, not one per
+    upstream task."""
     orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
     path = tmp_path / "orders_files"
     write_partitioned_parquet(orders, str(path), ["o_year"])
-    for ydir in path.iterdir():
-        if ydir.name.startswith("o_year="):
-            parts = [p for p in ydir.iterdir() if p.suffix == ".parquet"]
-            assert len(parts) <= 2, f"{ydir.name}: {len(parts)} files"
+    ydirs = [d for d in path.iterdir() if d.name.startswith("o_year=")]
+    assert len(ydirs) == 7  # 1995-2001
+    for ydir in ydirs:
+        parts = [p for p in ydir.iterdir() if p.suffix == ".parquet"]
+        assert len(parts) == 1, f"{ydir.name}: {len(parts)} files"
+
+
+def test_year_partitioned_write_starts_no_sampling_job(spark, tmp_path):
+    """An integral key is its own division: the write is the shuffle-map
+    job and the write job, with no range-sampling job before them."""
+    orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
+    _, jobs = count_jobs(spark, lambda: write_partitioned_parquet(
+        orders, str(tmp_path / "w2"), ["o_year"]))
+    assert jobs == 2
+
+
+def _partition_of(spark, df, key: str) -> dict:
+    """value -> the set of shuffle-width-4 tasks that hold its rows."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        rows = (place_partition_values(df, [key])
+                .select(key, F.spark_partition_id().alias("task"))
+                .distinct().collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    out: dict = {}
+    for value, task in rows:
+        out.setdefault(value, set()).add(task)
+    return out
+
+
+@pytest.mark.parametrize("cast", ["int", "bigint"])
+def test_partition_values_placed_by_pmod(spark, cast):
+    """1995-2001 over 4 tasks: each year on task pmod(year, 4), so every
+    year has one task and no task holds more than 2 years."""
+    orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
+    placed = _partition_of(
+        spark, orders.withColumn("o_year", F.col("o_year").cast(cast)),
+        "o_year")
+    assert sorted(placed) == list(range(1995, 2002))
+    assert all(tasks == {year % 4} for year, tasks in placed.items())
+    per_task = Counter(t for tasks in placed.values() for t in tasks)
+    assert max(per_task.values()) <= 2, per_task
+
+
+def test_date_partition_values_placed_by_unix_date(spark):
+    """A date goes to task pmod(unix_date, 4): consecutive days
+    round-robin across the tasks."""
+    orders = load(spark, SF_DIR, "orders")
+    orders = orders.withColumn("o_orderdate", F.to_date("o_orderdate"))
+    placed = _partition_of(spark, orders, "o_orderdate")
+    epoch = datetime.date(1970, 1, 1)
+    assert all(tasks == {(d - epoch).days % 4}
+               for d, tasks in placed.items())
+    assert len({t for tasks in placed.values() for t in tasks}) == 4
+
+
+def test_null_partition_value_writes_one_default_file(spark, tmp_path):
+    """NULL keys go to task 0 and land in one
+    `o_year=__HIVE_DEFAULT_PARTITION__` file with every row kept."""
+    orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
+    orders = orders.withColumn(
+        "o_year", F.when(F.col("o_orderkey") % 10 != 0, F.col("o_year")))
+    assert _partition_of(spark, orders, "o_year")[None] == {0}
+    path = tmp_path / "nulls"
+    write_partitioned_parquet(orders, str(path), ["o_year"])
+    ndir = path / "o_year=__HIVE_DEFAULT_PARTITION__"
+    assert len([p for p in ndir.iterdir() if p.suffix == ".parquet"]) == 1
+    back = spark.read.parquet(str(path))
+    assert back.count() == orders.count()
+    assert (back.filter(F.col("o_year").isNull()).count()
+            == orders.filter(F.col("o_year").isNull()).count() > 0)
+
+
+@pytest.mark.parametrize("literal, scope, copies", [
+    ("repartitionByRange(", "sinks/writers.py", 1),   # the fallback
+    ("repartitionById(", "**/*.py", 1),               # pmod placement
+])
+def test_partition_placement_is_defined_once(literal, scope, copies):
+    """Both partitioned sinks place partition values through
+    place_partition_values: its two shuffles occur once each."""
+    package = Path(__file__).resolve().parent.parent / \
+        "data_pipelines_course_spark"
+    found = {str(p.relative_to(package)): p.read_text().count(literal)
+             for p in package.glob(scope)}
+    assert sum(found.values()) == copies, {
+        k: n for k, n in found.items() if n}
 
 
 def test_collect_rows_mock_sink(spark):
