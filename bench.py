@@ -1,8 +1,11 @@
-"""Engine benchmark — one JSON line for the driver (BENCH_r{N}.json).
+"""Engine benchmark: one short headline JSON line on stdout.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Each query executes against the noop sink so we
-measure full distributed compute without driver-side result collection.
+local[$SPARK_GRAFT_CPUS], then the extras. Every query is timed by
+`time_query`, the one timing loop of the repo's harnesses
+(`bench_twins.py` and `scripts/sweep_registry.py` call it too).
+
+Usage: python bench.py [--quiet-gate=<load>]
 """
 
 from __future__ import annotations
@@ -16,8 +19,8 @@ import time
 from data_pipelines_course_spark.queries import SCALE_TWINS, all_queries
 from data_pipelines_course_spark.session import get_spark
 
-# Headline set: one per operator family, weighted toward the shapes that
-# dominate at 100 TB (scan+agg, big join, shuffle-heavy text ops, LSH).
+# Headline set: one per operator family (scan+agg, big join, shuffle-heavy
+# text ops, LSH, vector search). Frozen so headline totals stay comparable.
 HEADLINE = (
     "flagship_grouped_agg",
     "join_multiway_revenue",
@@ -40,89 +43,56 @@ HEADLINE = (
     "media_feature_extract",
 )
 
-# New-in-r2 operator families, benched OUTSIDE the headline metric so the
-# frozen 19-query headline stays round-over-round comparable; reported in
-# the JSON under "extra_queries".
+# Timed outside the headline total, reported on stderr. Left out on
+# purpose: queries that train eagerly at construction (embedding_kmeans,
+# semdedup_candidates, bpe_merge_table, bpe_token_stats), whose cold/warm
+# split would book training as a query, and the three *_stream_convergence
+# hooks, which drive a maintenance sink end to end (sink I/O, not a plan).
 EXTRA = (
-    "sessionize_events",
-    "decontaminate_exact",
-    "decontaminate_lsh",
-    "mixture_sample_events",
-    "corpus_curation",
-    "dedup_clusters",
-    "tpch_q3_unshipped_revenue",
-    "tpch_q6_forecast_revenue",
-    "price_quantiles",
-    # r3 additions
-    "price_quantiles_approx",
-    "tpch_q1_pricing_summary",
-    "tpch_q4_late_shipment_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q18_large_orders",
-    "repetition_ratio",
-    "type_token_ratio_by_source",
-    "contamination_report",
-    "stratified_sample_per_source",
-    "embedding_norm_stats",
-    "event_funnel",
-    "retention_cohorts",
-    "tpch_q13_order_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q9_product_profit",
-    "pii_redaction",
-    "boilerplate_ngrams",
-    # late-r3 additions. embedding_kmeans / semdedup_candidates are
-    # EXCLUDED on purpose: they train eagerly at query construction
-    # (driver-loop Lloyd iterations), so a cold/warm split here would
-    # mis-attribute the training cost — their wall-clock lives in
-    # NOTES_r03.md instead.
-    "decontaminate_ngram_hit",
-    "dedup_keep_best",
-    "corpus_curation_full",
-    "cogroup_conversion_lag",
-    "conversion_lag_native",  # JVM twin of the cogroup exemplar (same oracle)
-    # quality/audit family (late r3)
-    "gopher_quality_flags",
-    "unigram_logprob_score",
-    "quality_mixture_sample",
-    "ngram_novelty_report",
-    "scd2_user_state_intervals",
-    "snapshot_diff_orders",
-    "table_profile_orders",
-    "media_dedup_hash",
-    "pq_topk",
-    "ivf_pq_topk",
-    "media_feature_extract_arrow",  # mapInArrow twin of the pandas path
-    "weighted_sample_docs",
-    "encode_docs_to_ids",
-    "pack_sequences",
-    "vocab_typo_pairs",
-    "vocab_typo_pairs_symspell",
-    "value_outliers_by_type",
-    # r5: the two registered scale twins that were in neither list, so
-    # their numbers never appeared in a bench artifact (the prefix
-    # AllPairs twin is lazy; two-star is an eager driver loop like
-    # dedup_clusters, and extras deliberately re-time construction).
-    "ngram_jaccard_threshold_prefix",
-    "dedup_clusters_twostar",
-    # r4 additions
-    "dup_span_report",
-    "temperature_resample_docs",
-    "dedup_cluster_size_histogram",
-    "quantity_quantiles_by_flag_approx",
-    "context_windows_report",
-    "lang_confusion_report",
-    "dup_span_trim",
+    "sessionize_events", "decontaminate_exact", "decontaminate_lsh",
+    "mixture_sample_events", "corpus_curation", "dedup_clusters",
+    "tpch_q3_unshipped_revenue", "tpch_q6_forecast_revenue",
+    "price_quantiles", "price_quantiles_approx", "tpch_q1_pricing_summary",
+    "tpch_q4_late_shipment_priority", "tpch_q5_local_supplier_volume",
+    "tpch_q18_large_orders", "repetition_ratio",
+    "type_token_ratio_by_source", "contamination_report",
+    "stratified_sample_per_source", "embedding_norm_stats", "event_funnel",
+    "retention_cohorts", "tpch_q13_order_distribution",
+    "tpch_q17_small_quantity_revenue", "tpch_q21_waiting_suppliers",
+    "tpch_q9_product_profit", "pii_redaction", "boilerplate_ngrams",
+    "decontaminate_ngram_hit", "dedup_keep_best", "corpus_curation_full",
+    "cogroup_conversion_lag", "conversion_lag_native",
+    "gopher_quality_flags", "unigram_logprob_score",
+    "quality_mixture_sample", "ngram_novelty_report",
+    "scd2_user_state_intervals", "snapshot_diff_orders",
+    "table_profile_orders", "media_dedup_hash", "pq_topk", "ivf_pq_topk",
+    "media_feature_extract_arrow", "weighted_sample_docs",
+    "encode_docs_to_ids", "pack_sequences", "vocab_typo_pairs",
+    "vocab_typo_pairs_symspell", "value_outliers_by_type",
+    "ngram_jaccard_threshold_prefix", "dedup_clusters_twostar",
+    "dup_span_report", "temperature_resample_docs",
+    "dedup_cluster_size_histogram", "quantity_quantiles_by_flag_approx",
+    "context_windows_report", "lang_confusion_report", "dup_span_trim",
     "curation_attrition_report",
-    # bpe_merge_table / bpe_token_stats are EXCLUDED like embedding_kmeans:
-    # they train eagerly at construction (driver merge-loop), so a
-    # cold/warm split would mis-attribute the training cost. The three
-    # *_stream_convergence hooks are EXCLUDED too: each drives a
-    # maintenance sink end-to-end (multi-batch writes + a replay), so
-    # they measure sink I/O, not a query plan — their wall-clock lives
-    # in NOTES_r04.md.
 )
+
+# The queries whose cold pass pays each staged family's one-time build,
+# all of them in HEADLINE or EXTRA. A family's cold subtotal is an upper
+# bound on its build: it also holds its members' codegen and scan warm-up.
+STAGED_FAMILIES = {
+    "ann_serving_index": ("ann_lsh_topk", "ivf_topk", "pq_topk",
+                          "ivf_pq_topk"),
+    "lsh_digests": ("minhash_lsh_pairs", "simhash_pairs",
+                    "ngram_jaccard_threshold_prefix", "decontaminate_lsh",
+                    "decontaminate_exact", "decontaminate_ngram_hit"),
+    "curation_digests": ("corpus_curation", "corpus_curation_full",
+                         "contamination_report", "curation_attrition_report",
+                         "quality_mixture_sample"),
+    "vocab_digests": ("encode_docs_to_ids", "unigram_logprob_score"),
+    "span_words": ("dup_span_report", "dup_span_trim"),
+}
+
+PROTOCOL = "rebuild"
 
 
 def run_query(df) -> None:
@@ -131,101 +101,78 @@ def run_query(df) -> None:
 
 
 def loadavg() -> float:
-    """Host 1-minute load average — the bench-noise tell (VERDICT r6 #3).
-
-    This machine's ambient load cycles 0.2 -> 5+ with nothing of ours
-    running; r5/r6 adjudicated "regression or noise?" via NOTES prose
-    and judge reruns. Recording load per rep makes a noisy run
-    self-labeling: a warm number taken at load 5 explains itself.
-
-    One decimal, deliberately: the headline JSON line must stay well
-    under the driver's 2000-char tail-capture window (BENCH_r06.json
-    shows `tail` is the last 2000 chars; a line that doesn't fit whole
-    parses to null, the BENCH_r03 failure mode), and 95 trace values
-    at 2 decimals plus two-digit loads would crowd it."""
-    try:
-        with open("/proc/loadavg") as f:
-            return round(float(f.read().split()[0]), 1)
-    except OSError:
-        return round(os.getloadavg()[0], 1)
+    """Host 1-minute load average, one decimal: a rep timed at load 5
+    labels itself as noisy."""
+    return round(os.getloadavg()[0], 1)
 
 
-def page_cache_mb() -> int | None:
-    """Host page-cache size (Buffers+Cached, MB) — the sf1 cache-state
-    marker (VERDICT r8 #3): three same-HEAD sf1 runs spanned 47.5-54.9 s
-    purely from host I/O retention, so the wall total cannot detect a
-    real regression unless the artifact records what the cache held."""
-    try:
-        vals = {}
-        with open("/proc/meminfo") as f:
-            for line in f:
-                k = line.split(":")[0]
-                if k in ("Buffers", "Cached"):
-                    vals[k] = int(line.split()[1])
-        return (vals.get("Buffers", 0) + vals.get("Cached", 0)) // 1024
-    except OSError:
-        return None
-
-
-def reread_probe_mb_s(sf_dir: str) -> float | None:
-    """Re-read throughput of the tier's largest parquet file, plain file
-    I/O — the direct cache-state tell: multi-GB/s = the working set is
-    page-cache-resident; disk-speed = a cold cache. Recorded AFTER the
-    timed queries so it cannot perturb them."""
-    try:
-        files = [os.path.join(sf_dir, f) for f in os.listdir(sf_dir)
-                 if f.endswith(".parquet")]
-        if not files:
-            return None
-        path = max(files, key=os.path.getsize)
-        size = os.path.getsize(path)
+def time_query(spark, queries, name: str, sf_dir: str, reps: int) -> dict:
+    """Time `name` under the rebuild protocol: each of 1 + `reps` reps
+    constructs the frame and runs its noop write, as a serving request
+    does. `cold` is the first rep (codegen, Python-worker spawn, staging
+    builds, session-cache misses); `warm` is the minimum of the others,
+    so construction-time driver jobs (probe collects, centroid fetches)
+    count in both. `load` is the load average at each rep's start and at
+    the end."""
+    secs, load = [], []
+    for _ in range(1 + reps):
+        load.append(loadavg())
         t0 = time.perf_counter()
-        with open(path, "rb") as f:
-            while f.read(1 << 22):
-                pass
-        dt = time.perf_counter() - t0
-        return round(size / dt / (1 << 20), 1) if dt > 0 else None
-    except OSError:
+        run_query(queries[name](spark, sf_dir))
+        secs.append(time.perf_counter() - t0)
+    load.append(loadavg())
+    return {"cold": round(secs[0], 3), "warm": round(min(secs[1:]), 3),
+            "load": load}
+
+
+def page_cache_mb() -> int:
+    """Host page cache (Buffers + Cached, MB): the sf1 cache-state marker,
+    since the wall total of spill-bound queries follows what it holds."""
+    with open("/proc/meminfo") as f:
+        vals = {ln.split(":")[0]: int(ln.split()[1]) for ln in f}
+    return (vals.get("Buffers", 0) + vals.get("Cached", 0)) // 1024
+
+
+def reread_mb_s(sf_dir: str) -> float | None:
+    """Plain-I/O re-read throughput of the tier's largest parquet file:
+    multi-GB/s means a page-cache-resident working set, disk speed a cold
+    cache. Run after the timed queries so it cannot perturb them."""
+    files = [os.path.join(sf_dir, f) for f in os.listdir(sf_dir)
+             if f.endswith(".parquet")]
+    if not files:
         return None
-
-
-def wait_for_quiet(gate: float, max_wait_sec: float = 600.0,
-                   poll_sec: float = 10.0) -> dict:
-    """Block until 1-min load < gate, with bounded retries.
-
-    Returns metadata for the JSON: whether the gate was met, how long we
-    waited, and the load on exit. On timeout the bench RUNS ANYWAY
-    (a number labeled noisy beats no number) — `met: false` in the JSON
-    tells the reader to trust cold_total's inflation ratio instead."""
+    path = max(files, key=os.path.getsize)
     t0 = time.perf_counter()
-    load_entry = load = loadavg()
-    while load >= gate and (time.perf_counter() - t0) < max_wait_sec:
+    with open(path, "rb") as f:
+        while f.read(1 << 22):
+            pass
+    dt = time.perf_counter() - t0
+    return round(os.path.getsize(path) / dt / (1 << 20), 1) if dt else None
+
+
+def wait_for_quiet(gate: float, max_wait_sec: float = 600.0) -> dict:
+    """Wait up to 10 min for the 1-min load to fall below `gate`. On
+    timeout the bench runs anyway, with `met: false` in the JSON."""
+    t0 = time.perf_counter()
+    entry = load = loadavg()
+    while load >= gate and time.perf_counter() - t0 < max_wait_sec:
         print(f"  quiet-gate: load {load} >= {gate}, waiting...",
               file=sys.stderr, flush=True)
-        time.sleep(poll_sec)
+        time.sleep(10.0)
         load = loadavg()
-    # Both loads recorded (ADVICE r7): on a timed-out gate the exit load
-    # is NOT the load the gate saw at entry, and the persisted JSON is
-    # what readers adjudicate noise from.
     return {"gate": gate, "met": load < gate,
             "waited_sec": round(time.perf_counter() - t0, 1),
-            "load_at_entry": load_entry, "load_at_exit": load}
+            "load_at_entry": entry, "load_at_exit": load}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    # --quiet-gate=<load> (or SPARK_GRAFT_QUIET_GATE): wait for an
-    # ambient-load window before timing, bounded at 10 min. The driver
-    # invokes bench.py bare, so per-rep load fields below appear in the
-    # JSON regardless of whether the gate is used.
-    gate_env = os.environ.get("SPARK_GRAFT_QUIET_GATE")
-    gate: float | None = float(gate_env) if gate_env else None
+    gate = os.environ.get("SPARK_GRAFT_QUIET_GATE")
     for a in sys.argv[1:]:
         if a.startswith("--quiet-gate="):
-            gate = float(a.split("=", 1)[1])
-    quiet = wait_for_quiet(gate) if gate is not None else None
+            gate = a.split("=", 1)[1]
+    quiet = wait_for_quiet(float(gate)) if gate else None
     cache_start = page_cache_mb()
     spark = get_spark(app_name="engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -235,150 +182,59 @@ def main() -> None:
     from pyspark.sql import functions as F
     run_query(spark.range(1000).groupBy(F.col("id") % 10).count())
 
-    # Each query runs cold once (one-time engine costs: whole-stage
-    # codegen compilation, Python-worker pool spawn, parquet footer
-    # caching — amortized to zero on a long-lived 100 TB cluster), then
-    # WARM_REPS warm runs of the same plan with the MIN reported — the
-    # standard noise-floor protocol (VERDICT r4 #8: same-code warm runs
-    # banded 1.06–1.55 s on the shingle path across four runs, so a
-    # single warm sample chases machine-load ghosts in cross-round
-    # comparisons; the min is the reproducible number).
-    # Warm reps re-run the CONSTRUCTED frame (protocol unchanged since
-    # r2, so rounds stay comparable): one-time work at construction or
-    # first execution — probe-vector collects (knn/ann/ivf), quantizer
-    # training, and (new r5) the lazy digest checkpoints in the
-    # LSH/Jaccard family — is excluded from the steady-state number and
-    # carried by `cold`. A rebuilt-frame protocol was tried and
-    # rejected: it charges every probe query its construction-time
-    # driver jobs and breaks cross-round comparability (NOTES_r05).
     warm_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    # Per-query loadavg trace: [cold-start, each warm-rep start..., end].
-    # Self-labeling noise (VERDICT r6 #3): a rep that overlapped an
-    # ambient-load spike carries the spike in its own row.
-    loads: dict[str, list[float]] = {}
+    head = {}
     for name in HEADLINE:
-        trace = [loadavg()]
-        t0 = time.perf_counter()
-        df = queries[name](spark, sf_dir)  # plan construction + analysis
-        run_query(df)
-        cold[name] = round(time.perf_counter() - t0, 3)
-        best = float("inf")
-        for _ in range(warm_reps):
-            trace.append(loadavg())
-            t0 = time.perf_counter()
-            run_query(df)
-            best = min(best, time.perf_counter() - t0)
-        trace.append(loadavg())
-        loads[name] = trace
-        timings[name] = round(best, 3)
-        print(f"  {name}: {timings[name]:.3f}s (cold {cold[name]:.3f}s, "
-              f"min of {warm_reps}, load {trace[0]}->{trace[-1]})",
+        r = head[name] = time_query(spark, queries, name, sf_dir, warm_reps)
+        print(f"  {name}: {r['warm']:.3f}s (cold {r['cold']:.3f}s, min of "
+              f"{warm_reps}, load {r['load'][0]}->{r['load'][-1]})",
               file=sys.stderr)
+    timings = {n: r["warm"] for n, r in head.items()}
 
-    # The headline JSON is printed TWICE — immediately after the headline
-    # loop AND as the very last line — and kept short (extras go to a
-    # separate stderr line). BENCH_r03.json came back `parsed: null`
-    # because the driver's tail capture truncated one long final line
-    # mid-string; duplicating a short line makes the capture window
-    # irrelevant: any whole copy of it parses to the same dict.
-    # Subtotal split (VERDICT r8 #3): the registry-tagged quadratic GT
-    # twins (HEADLINE ∩ SCALE_TWINS keys: the two ngram_jaccard shapes)
-    # are shuffle-spill-I/O-bound at sf1 and inherit the host's
-    # page-cache state; the remaining 17 are CPU-bound and round-over-
-    # round comparable regardless of cache. Cross-round comparisons at
-    # sf1 use cpu_bound_subtotal, not value.
+    # The short headline dict goes to stdout twice, right here and as the
+    # very last line: a reader that captures only the tail of stdout
+    # still gets one whole copy. Cross-round comparisons at sf1 use
+    # cpu_bound_subtotal: the quadratic GT twins (HEADLINE ∩ SCALE_TWINS)
+    # are spill-I/O-bound there and follow the host's page cache.
     quad = {n for n in HEADLINE if n in SCALE_TWINS}
-    cpu_subtotal = round(sum(t for n, t in timings.items()
-                             if n not in quad), 3)
-    quad_subtotal = round(sum(t for n, t in timings.items()
-                              if n in quad), 3)
     headline_payload = json.dumps({
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "cold_total": round(sum(cold.values()), 3),
-        "cpu_bound_subtotal": cpu_subtotal,
-        "quadratic_subtotal": quad_subtotal,
-        # Cache-state markers: page cache at bench entry vs here, plus a
-        # plain-I/O re-read probe of the tier's largest parquet file
-        # (multi-GB/s = cache-resident working set; disk-speed = cold).
+        "cold_total": round(sum(r["cold"] for r in head.values()), 3),
+        "cpu_bound_subtotal": round(sum(
+            t for n, t in timings.items() if n not in quad), 3),
+        "quadratic_subtotal": round(sum(
+            t for n, t in timings.items() if n in quad), 3),
         "page_cache_mb": [cache_start, page_cache_mb()],
-        "reread_mb_s": reread_probe_mb_s(sf_dir),
-        "sf": sf,
-        # Protocol self-description (VERDICT r5 #7): warm number = min of
-        # `reps` re-runs of the constructed frame; one-time work carried
-        # by cold. `staging` is the digest-materialization mode in force
-        # (staging.py) so cross-round artifacts are comparable.
+        "reread_mb_s": reread_mb_s(sf_dir),
+        "sf": float(m.group(1)) if m else -1.0,
+        "protocol": PROTOCOL,
         "reps": warm_reps,
         "staging": os.environ.get("SPARK_GRAFT_STAGING", "checkpoint"),
-        # Noise self-labeling (VERDICT r6 #3): per-query 1-min loadavg
-        # trace [cold-start, warm-rep starts..., end] + the quiet-gate
-        # outcome (null when ungated). Reading: quiet floor lives at
-        # load <~1; traces >~3 explain an inflated warm/cold total.
-        "load": loads,
+        "load": {n: r["load"] for n, r in head.items()},
         "quiet_gate": quiet,
     })
     print(headline_payload, flush=True)
 
-    # Extras time CONSTRUCTION + execution, rebuilding the frame for the
-    # warm run: dedup_clusters' convergence loop runs eagerly (per-round
-    # localCheckpoint + count) at construction, so timing only a re-run
-    # of the returned frame would measure a scan of its checkpointed
-    # result, not the query (the r2 numbers did exactly that). For lazy
-    # queries construction is ~ms and the change is noise.
-    # NOTE (r5): queries with session-scoped training/build memos
-    # (dedup_clusters and its consumers, pq/ivf_pq, kmeans-backed ones)
-    # pay their build in the COLD run; the warm rebuild hits the memo —
-    # which is the product behavior, but means the warm number measures
-    # serving cost only. extra_cold keeps the build cost visible.
-    extra: dict[str, float] = {}
-    extra_cold: dict[str, float] = {}
+    # Extras: the same protocol with one warm rep. Session-cached builds
+    # (dedup_clusters, pq/ivf_pq codebooks, k-means routers) land in cold.
+    extra = {}
     for name in EXTRA:
-        t0 = time.perf_counter()
-        run_query(queries[name](spark, sf_dir))  # cold
-        extra_cold[name] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        run_query(queries[name](spark, sf_dir))
-        extra[name] = round(time.perf_counter() - t0, 3)
-        print(f"  (extra) {name}: {extra[name]:.3f}s "
-              f"(cold {extra_cold[name]:.3f}s)", file=sys.stderr)
-
-    # Cold breakdown per staged family (VERDICT r12 #3): the cold pass
-    # carries every one-time staging build (serving indexes, LSH/vocab
-    # digests), so the per-family subtotal prices the staging budget a
-    # reader would otherwise have to reconstruct from 80 cold numbers.
-    # Groupings are the queries whose cold pays each family's build;
-    # queries not listed are ordinary cold (codegen + scan warmup).
-    staged_families = {
-        "ann_serving_index": ("ann_lsh_topk", "ivf_topk", "pq_topk",
-                              "ivf_pq_topk"),
-        "lsh_digests": ("minhash_lsh_pairs", "simhash_pairs",
-                        "ngram_jaccard_threshold_prefix",
-                        "decontaminate_lsh", "decontaminate_exact",
-                        "decontaminate_ngram_hit"),
-        "curation_digests": ("corpus_curation", "corpus_curation_full",
-                             "contamination_report",
-                             "curation_attrition_report",
-                             "quality_mixture_sample"),
-        "vocab_digests": ("encode_docs_to_ids", "unigram_logprob_score"),
-        "span_words": ("dup_span_report", "dup_span_trim"),
-    }
-    both_cold = dict(cold)
-    both_cold.update(extra_cold)
-    staging_cold = {
-        fam: round(sum(both_cold.get(q, 0.0) for q in qs_), 3)
-        for fam, qs_ in staged_families.items()
-    }
-    # Full detail (cold per-query + extras) on stderr for NOTES/PLAN_AUDIT.
-    print(json.dumps({"cold_queries": cold, "extra_queries": extra,
-                      "extra_cold_queries": extra_cold,
-                      "staging_cold_families": staging_cold}),
-          file=sys.stderr, flush=True)
+        r = extra[name] = time_query(spark, queries, name, sf_dir, 1)
+        print(f"  (extra) {name}: {r['warm']:.3f}s "
+              f"(cold {r['cold']:.3f}s)", file=sys.stderr)
+    both = {**head, **extra}
+    print(json.dumps({
+        "cold_queries": {n: r["cold"] for n, r in head.items()},
+        "extra_queries": {n: r["warm"] for n, r in extra.items()},
+        "extra_cold_queries": {n: r["cold"] for n, r in extra.items()},
+        "staging_cold_families": {
+            fam: round(sum(both[q]["cold"] for q in members), 3)
+            for fam, members in STAGED_FAMILIES.items()},
+    }), file=sys.stderr, flush=True)
     spark.stop()
-    # LAST line on stdout: the same short headline dict.
     print(headline_payload, flush=True)
 
 

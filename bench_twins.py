@@ -1,21 +1,12 @@
-"""Scale-twin crossover bench (VERDICT r5 #6): ground truth vs twin,
-one decade past the driver's largest tier.
+"""Scale-twin crossover bench: each ground-truth query against its scale
+twin (`SCALE_TWINS` in queries.py) at the derived sf1 tier
+(scripts/make_sf1.py, ~6M lineitem rows). The quadratic ground truths'
+blow-up next to the twins' near-linear growth is the 100 TB argument.
 
-The registry tags 7 deliberate ground-truth queries with their 100 TB
-scale paths (`SCALE_TWINS` in queries.py). Their relative cost is
-measured at sf0.1 every round by bench.py; this harness times each
-GROUND-TRUTH/TWIN pair at the derived sf1 tier (scripts/make_sf1.py —
-~6M lineitem rows) to make the crossover curve quantitative: the
-quadratic sides' blow-up and the twins' near-linear growth ARE the
-100 TB argument.
-
-Each side runs under a wall-clock budget (env SPARK_GRAFT_TWIN_BUDGET,
-default 300 s) enforced by Spark job-group cancellation from a watchdog
-— a ground-truth side that exceeds it is recorded as `budget_exceeded`
-(expected for the corpus-quadratic sides at sf1; the twin's number
-stands alone there, per VERDICT r5 #6). Protocol matches bench.py's
-extras: construction + noop-sink execution, cold then a rebuilt warm
-run, warm reported (memo/staging reuse is product behavior).
+Each query is timed by `bench.time_query` (rebuild protocol, one warm
+rep) under a BUDGET_SEC wall-clock budget, enforced by cancelling its
+Spark job group from a watchdog. A side that exceeds it is recorded as
+`budget_exceeded`, as the corpus-quadratic sides are expected to at sf1.
 
 Usage:
     python scripts/make_sf1.py          # once, ~30 s
@@ -23,8 +14,8 @@ Usage:
     python bench_twins.py --sf-dir=/root/testdata/sf0.1   # sanity tier
     python bench_twins.py --sf-dir=/tmp/spark_graft_sf10_docs \
         --queries=ngram_jaccard_topk,ngram_jaccard_threshold,...
-                  # documents-only tier (VERDICT r6 #5): time exactly
-                  # these queries; JSON carries "queries" not "pairs"
+                  # documents-only tier: time exactly these queries;
+                  # the JSON carries "queries" instead of "pairs"
 """
 
 from __future__ import annotations
@@ -33,62 +24,39 @@ import json
 import os
 import sys
 import threading
-import time
 
+from bench import PROTOCOL, time_query
 from data_pipelines_course_spark.queries import SCALE_TWINS, all_queries
 from data_pipelines_course_spark.session import get_spark
 
-BUDGET = float(os.environ.get("SPARK_GRAFT_TWIN_BUDGET", "300"))
+BUDGET_SEC = 300.0
 
 
-def run_query(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def timed(spark, queries, name: str, sf_dir: str) -> dict:
-    """One budgeted measurement: construction + execution in a worker
-    thread under its own job group; the watchdog cancels the group at
-    the budget. PySpark's pinned-thread mode makes setJobGroup
-    thread-local, so cancellation hits exactly this query's jobs —
-    including eager construction-time driver loops."""
+def budgeted(spark, queries, name: str, sf_dir: str) -> dict:
+    """`time_query` in a worker thread under its own job group; the
+    watchdog cancels the group at the budget. PySpark's pinned-thread
+    mode makes setJobGroup thread-local, so cancellation hits exactly
+    this query's jobs, eager construction-time driver loops included."""
     out: dict = {}
 
     def work() -> None:
         spark.sparkContext.setJobGroup(f"twin:{name}", name,
                                        interruptOnCancel=True)
         try:
-            t0 = time.perf_counter()
-            run_query(queries[name](spark, sf_dir))
-            out["cold"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            run_query(queries[name](spark, sf_dir))
-            out["warm"] = round(time.perf_counter() - t0, 3)
+            out.update(time_query(spark, queries, name, sf_dir, 1))
         except Exception as exc:  # noqa: BLE001 — cancellation lands here
-            out.setdefault("err", f"{type(exc).__name__}")
+            out["error"] = type(exc).__name__
 
     t = threading.Thread(target=work, daemon=True)
-    start = time.perf_counter()
     t.start()
-    t.join(BUDGET)
-    if t.is_alive():
-        spark.sparkContext.cancelJobGroup(f"twin:{name}")
-        t.join(30)
-        res = {"budget_exceeded": True, "budget_sec": BUDGET,
-               "ran_sec": round(time.perf_counter() - start, 1)}
-        if "cold" in out:
-            # The cold rep completed before the budget tripped during
-            # the warm rep — a real measurement, keep it (ADVICE r6).
-            res["cold"] = out["cold"]
-        if t.is_alive():
-            # Cancellation failed to stop the worker within the grace
-            # join: the daemon thread keeps running jobs on this
-            # SparkSession, contaminating every later timing (ADVICE
-            # r6). Flag it so main() taints subsequent results.
-            res["runaway"] = True
-        return res
-    if "err" in out and "cold" not in out:
-        return {"error": out["err"]}
-    return out
+    t.join(BUDGET_SEC)
+    if not t.is_alive():
+        return out
+    spark.sparkContext.cancelJobGroup(f"twin:{name}")
+    t.join(30)
+    # A worker that outlives the grace join keeps running jobs on this
+    # session and contaminates every later timing: flag it as runaway.
+    return {"budget_exceeded": True, "runaway": t.is_alive()}
 
 
 def main() -> None:
@@ -98,10 +66,8 @@ def main() -> None:
         if a.startswith("--sf-dir="):
             sf_dir = a.split("=", 1)[1]
         if a.startswith("--queries="):
-            # Explicit query list for partial tiers (the sf10 docs-only
-            # tier carries documents.parquet alone — only the corpus
-            # family can run there). Twins still run before ground
-            # truths if the caller lists them first.
+            # Partial tiers (the sf10 docs-only tier has documents.parquet
+            # alone) run exactly the listed queries, in the listed order.
             only = [n for n in a.split("=", 1)[1].split(",") if n]
     probe = "documents" if only else "lineitem"
     if not os.path.exists(f"{sf_dir}/{probe}.parquet"):
@@ -115,36 +81,27 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
+    # Twins first, so their numbers exist even when a ground truth blows
+    # the budget; the dict de-dups the shared jaccard twin.
+    names = only or list(dict.fromkeys([*SCALE_TWINS.values(), *SCALE_TWINS]))
     results: dict[str, dict] = {}
-    # Twins first: their numbers must exist even when the ground truth
-    # blows the budget; dict de-dups the shared jaccard twin.
-    names = only or list(dict.fromkeys(
-        [t for t in SCALE_TWINS.values()] + list(SCALE_TWINS)))
     tainted = False
     for name in names:
-        r = timed(spark, queries, name, sf_dir)
+        r = results[name] = budgeted(spark, queries, name, sf_dir)
         if tainted:
-            # A prior runaway worker is still executing on this
-            # SparkSession: this timing shares its executors.
             r["tainted_by_runaway"] = True
-        results[name] = r
-        if r.get("runaway"):
-            tainted = True
+        tainted = tainted or r.get("runaway", False)
         print(f"  {name}: {r}", file=sys.stderr, flush=True)
 
-    body: dict = {
-        "metric": "twin_crossover",
-        "sf_dir": sf_dir,
-        "budget_sec": BUDGET,
-    }
+    body: dict = {"metric": "twin_crossover", "sf_dir": sf_dir,
+                  "protocol": PROTOCOL, "budget_sec": BUDGET_SEC}
     if only:
         body["queries"] = results
     else:
         body["pairs"] = {g: {"ground_truth": results[g],
                              "twin": results[t], "twin_name": t}
                          for g, t in SCALE_TWINS.items()}
-    payload = json.dumps(body)
-    print(payload, flush=True)
+    print(json.dumps(body), flush=True)
     spark.stop()
 
 

@@ -108,9 +108,19 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
         [], "vec_id bigint, label int, cos_sim double")
 
 
-def _cos_sql(a: str, b: str) -> str:
+def _let(value: str, name: str, body: str) -> str:
+    """SQL for `body` with `value` evaluated once per row and bound to
+    the lambda variable `name`. A projected column would not do:
+    CollapseProject inlines it into every lambda that reads it, so a
+    per-row norm would be recomputed per element or per centroid."""
+    return f"element_at(transform(array({value}), {name} -> {body}), 1)"
+
+
+def _cos_sql(a: str, b: str, norm_a: str | None = None) -> str:
+    """cosine() as SQL; `norm_a` is SQL for `a`'s norm when it is
+    already bound (`_let`), else the norm is computed here."""
     return (f"({_dot_sql(a, b)} /"
-            f" nullif({_norm_sql(a)} * {_norm_sql(b)}, 0.0D))")
+            f" nullif({norm_a or _norm_sql(a)} * {_norm_sql(b)}, 0.0D))")
 
 
 def cosine(a: str, b: str) -> Column:
@@ -593,7 +603,10 @@ def ivf_cell(cents: dict[int, list[float]]) -> Column:
     need not be 0..K-1: the argmax runs over positions in sorted-id
     order and the winner's position maps to its id."""
     ids = sorted(cents)
-    best = _ranked(_cos_sql, "embedding", [cents[c] for c in ids])
+    # The row's norm is bound once, not recomputed for every centroid.
+    best = _let(_norm_sql("embedding"), "ne", _ranked(
+        lambda a, b: _cos_sql(a, b, "ne"), "embedding",
+        [cents[c] for c in ids]))
     return F.expr(f"element_at(array({', '.join(map(str, ids))}),"
                   f" element_at({best}, 1).c + 1)")
 
@@ -670,7 +683,8 @@ def _unit(v: list[float]) -> list[float]:
 
 def _normalized(emb: DataFrame) -> DataFrame:
     """Stage unit-norm double vectors as a real column (computed once per
-    row, reused by every centroid dot product in the same projection)."""
+    row, reused by every centroid dot product in the same projection);
+    each row's norm is bound once (`_let`), not recomputed per element."""
     # Zero-norm vectors are dropped: they cannot be unit-normalized and
     # carry no direction for any cosine-based assignment.
     return (emb.withColumn("_nrm", norm("embedding"))
@@ -680,8 +694,9 @@ def _normalized(emb: DataFrame) -> DataFrame:
             # trained from this frame.
             .filter((F.col("_nrm") > 0) & ~F.isnan("_nrm")
                     & (F.col("_nrm") < F.lit(float("inf"))))
-            .withColumn("nv", F.transform(
-                "embedding", lambda x: x.cast("double") / F.col("_nrm")))
+            .withColumn("nv", F.expr(_let(
+                "_nrm", "n",
+                "transform(embedding, x -> cast(x as double) / n)")))
             .drop("_nrm"))
 
 

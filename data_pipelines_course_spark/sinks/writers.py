@@ -75,15 +75,18 @@ def place_partition_values(df: DataFrame,
     file per value.
 
     A single integral or `DateType` key is its own division, as dask's
-    explicit `divisions` are: value v goes to task `pmod(v, n)` with
-    `n = shuffle_width`, a date by its `unix_date`, NULL to task 0. No job
-    samples the input for bounds, so it is read once. Consecutive values
-    round-robin: 1995-2001 over 4 tasks puts 2, 2, 2 and 1 years on them.
+    explicit `divisions` are: value v goes to task `pmod(v, n)`, a date
+    by its `unix_date`, NULL to task 0. No job samples the input for
+    bounds, so it is read once. Consecutive values round-robin: 1995-2001
+    over 4 tasks puts 2, 2, 2 and 1 years on them. `n` is the shuffle
+    width capped at the default parallelism (both are the core count in
+    a `session.get_spark` session): all n tasks run, and AQE does not
+    coalesce an explicit-count shuffle, so Spark's default width of 200
+    would run 200 writers, mostly empty, for 7 years.
     Trade-off: placement ignores row counts and gaps, so one heavy value
     is one heavy task, and a key whose stride shares a factor with n
-    (only even years with n = 4) uses fewer tasks. All n tasks run, so a
-    width far above the key's cardinality (Spark's default 200 in a
-    session not built by `session.get_spark`) pays for empty writers.
+    (only even years with n = 4) uses fewer tasks; a key with many more
+    values than cores writes several values per task.
 
     Any other key (a string, several columns) is range-partitioned, which
     samples the input once to choose contiguous bounds."""
@@ -93,7 +96,9 @@ def place_partition_values(df: DataFrame,
         value = (F.unix_date(key) if isinstance(dtype, DateType)
                  else key if isinstance(dtype, IntegralType) else None)
         if value is not None:
-            n = shuffle_width(df.sparkSession)
+            spark = df.sparkSession
+            n = min(shuffle_width(spark),
+                    spark.sparkContext.defaultParallelism)
             # pmod is below n, so the int cast (the direct-id shuffle
             # rejects bigint) cannot overflow.
             task = F.coalesce(F.pmod(value, F.lit(n)).cast("int"), F.lit(0))

@@ -1,9 +1,6 @@
-"""Full-registry timing sweep (optimization-round triage, guide §1).
-
-For every registered query: construct + cold noop run, then min-of-N
-warm re-runs of the constructed frame. One JSON line per query on
-stdout (append-friendly for /tmp logs), sorted summary at the end on
-stderr. Protocol matches the r12 sweep so rounds are comparable.
+"""Full-registry timing sweep (optimization triage): every registered
+query, or the named ones, timed by `bench.time_query`. One JSON line per
+query on stdout, the slowest warm times and any failures on stderr.
 
 Usage: python scripts/sweep_registry.py [--reps=3] [name ...]
 """
@@ -13,34 +10,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query
 from data_pipelines_course_spark.queries import all_queries
 from data_pipelines_course_spark.session import get_spark
-
-
-def loadavg() -> float:
-    with open("/proc/loadavg") as f:
-        return round(float(f.read().split()[0]), 1)
 
 
 def sweep_one(spark, queries, name: str, sf_dir: str, reps: int) -> dict:
     """Time one query; a query that fails to construct or run is recorded
     as {"q", "error"} and the sweep goes on."""
-    ld = loadavg()
     try:
-        t0 = time.perf_counter()
-        df = queries[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        cold = round(time.perf_counter() - t0, 3)
-        warm = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            warm = min(warm, time.perf_counter() - t0)
-        rec = {"q": name, "cold": cold, "warm": round(warm, 3), "load": ld}
+        rec = {"q": name, **time_query(spark, queries, name, sf_dir, reps)}
     except Exception as e:
         rec = {"q": name, "error": f"{type(e).__name__}: {e}"[:500]}
     print(json.dumps(rec), flush=True)
@@ -64,17 +46,13 @@ def main() -> None:
                 for name in names or list(queries)]
     finally:
         spark.stop()
-    timed = sorted((r for r in rows if "error" not in r),
-                   key=lambda r: -r["warm"])
     print("== slowest warm ==", file=sys.stderr)
-    for r in timed[:30]:
+    for r in sorted((r for r in rows if "error" not in r),
+                    key=lambda r: -r["warm"])[:30]:
         print(f"  {r['q']}: warm {r['warm']} cold {r['cold']} "
-              f"(load {r['load']})", file=sys.stderr)
-    failed = [r for r in rows if "error" in r]
-    if failed:
-        print(f"== {len(failed)} failed ==", file=sys.stderr)
-        for r in failed:
-            print(f"  {r['q']}: {r['error']}", file=sys.stderr)
+              f"(load {r['load'][0]})", file=sys.stderr)
+    for r in (r for r in rows if "error" in r):
+        print(f"  FAILED {r['q']}: {r['error']}", file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -303,6 +303,45 @@ def test_trained_argmax_matches_numpy_reference(spark):
         order[:, :sim.SEMDEDUP_SOFT].tolist()
 
 
+def _nodes(expr):
+    """`expr` and every expression below it, in the JVM tree."""
+    yield expr
+    kids = expr.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _norms_in_lambdas(df):
+    """The SQRT nodes over `embedding` that sit inside a lambda body of
+    `df`'s one optimized output column: norms recomputed per element or
+    per centroid instead of once per row."""
+    expr = df._jdf.queryExecution().optimizedPlan().expressions().apply(0)
+    return [s.toString() for lam in _nodes(expr)
+            if lam.getClass().getSimpleName() == "LambdaFunction"
+            for s in _nodes(lam.function())
+            if s.getClass().getSimpleName() == "Sqrt"
+            and "embedding" in s.toString()]
+
+
+def test_normalized_binds_each_row_norm_once(spark):
+    """After CollapseProject, `nv`'s lambda bodies hold no norm of
+    `embedding`: the norm is evaluated once per row, not per element."""
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    emb, _ = _embeddings(spark)
+    assert _norms_in_lambdas(sim._normalized(emb).select("nv")) == []
+
+
+def test_ivf_cell_binds_each_row_norm_once(spark):
+    """The per-centroid cosine reads the row's norm from one binding
+    instead of recomputing norm(embedding) for every centroid."""
+    import data_pipelines_course_spark.operators.similarity as sim
+
+    emb, _ = _embeddings(spark)
+    cell = sim.ivf_cell(sim.ivf_centroids(emb))
+    assert _norms_in_lambdas(emb.select(cell)) == []
+
+
 @pytest.mark.parametrize("n_tables, planes", [(16, 4), (8, 6)])
 def test_lsh_buckets_match_numpy_sign_bits(spark, n_tables, planes):
     """Each table's bucket sets bit j when the embedding's dot with that
@@ -481,6 +520,7 @@ def test_lsh_batch_topk_rejects_overrides_differing_from_prebuilt_index(spark):
     ("_arr_sql(", 0),                              # per-component arrays
     ("from_json('", 1),                            # the folded literal
     ("sort_array(transform(", 1),                  # nearest-centroid argmax
+    ("transform(array(", 1),                       # per-row binding
 ])
 def test_each_vector_search_step_is_defined_once(literal, copies):
     """The registered vector queries and ann_recall_referee.py share one

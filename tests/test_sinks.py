@@ -86,6 +86,14 @@ def test_partitioned_parquet_prunes(spark, tmp_path):
     assert back.count() == expected
 
 
+def _assert_one_file_per_year(path):
+    ydirs = [d for d in path.iterdir() if d.name.startswith("o_year=")]
+    assert len(ydirs) == 7  # 1995-2001
+    for ydir in ydirs:
+        parts = [p for p in ydir.iterdir() if p.suffix == ".parquet"]
+        assert len(parts) == 1, f"{ydir.name}: {len(parts)} files"
+
+
 def test_partitioned_write_file_counts(spark, tmp_path):
     """place_partition_values puts each partition value on one writer
     task, so each o_year dir holds exactly one file, not one per
@@ -93,11 +101,35 @@ def test_partitioned_write_file_counts(spark, tmp_path):
     orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
     path = tmp_path / "orders_files"
     write_partitioned_parquet(orders, str(path), ["o_year"])
-    ydirs = [d for d in path.iterdir() if d.name.startswith("o_year=")]
-    assert len(ydirs) == 7  # 1995-2001
-    for ydir in ydirs:
-        parts = [p for p in ydir.iterdir() if p.suffix == ".parquet"]
-        assert len(parts) == 1, f"{ydir.name}: {len(parts)} files"
+    _assert_one_file_per_year(path)
+
+
+def test_year_write_caps_writers_at_default_parallelism(spark, tmp_path):
+    """At Spark's default shuffle width of 200 (a session not built by
+    get_spark) the year write still runs at most defaultParallelism
+    tasks per stage, and still writes one file per o_year."""
+    import uuid
+
+    sc = spark.sparkContext
+    orders = year_partitioned_orders(load(spark, SF_DIR, "orders"))
+    path = tmp_path / "w200"
+    group = f"cap-writers-{uuid.uuid4().hex}"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.setJobGroup(group, group)
+    try:
+        write_partitioned_parquet(orders, str(path), ["o_year"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s)
+              for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks
+    _assert_one_file_per_year(path)
 
 
 def test_year_partitioned_write_starts_no_sampling_job(spark, tmp_path):
